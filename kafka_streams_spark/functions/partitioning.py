@@ -431,10 +431,14 @@ def grouped_exact_percentiles(
     if not stats:
         return _null_rows()
 
+    def _is(g):
+        # NULL-safe: a NULL key is a group, as in the holistic aggregate
+        return F.col(group_col).eqNullSafe(F.lit(g))
+
     def _when_chain(mapping, otherwise):
         e = None
         for g, v in mapping.items():
-            c = F.col(group_col) == F.lit(g)
+            c = _is(g)
             e = F.when(c, v) if e is None else e.when(c, v)
         return e.otherwise(otherwise)
 
@@ -481,7 +485,7 @@ def grouped_exact_percentiles(
     for g, bks in need_buckets.items():
         ge = None
         for bk, off in bks.items():
-            c = (F.col(group_col) == F.lit(g)) & (F.col("_bkt") == bk)
+            c = _is(g) & (F.col("_bkt") == bk)
             filt = c if filt is None else (filt | c)
             ge = (
                 F.when(F.col("_bkt") == bk, F.lit(off))
@@ -495,7 +499,7 @@ def grouped_exact_percentiles(
     )
     want = None
     for g, rks in need.items():
-        c = (F.col(group_col) == F.lit(g)) & F.col("_rk").isin(*sorted(rks))
+        c = _is(g) & F.col("_rk").isin(*sorted(rks))
         want = c if want is None else (want | c)
     ostats = ranked.filter(want)
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kafka_streams_spark.functions.numeric import java_round
 from kafka_streams_spark.schema import (
@@ -139,9 +140,8 @@ def process_payments(payments: DataFrame) -> dict[str, DataFrame]:
 
 
 # Account-hash buckets for pruned point lookups — ONE definition shared
-# by the batch BalanceStore below and the streaming changelog/BalanceView
-# (kafka_streams_spark.streaming.router re-exports it): a layout written
-# by either side prunes identically for both readers.
+# by the batch BalanceStore below and the streaming base snapshot
+# (kafka_streams_spark.streaming.router re-exports it).
 N_BALANCE_BUCKETS = 64
 
 
@@ -150,6 +150,28 @@ def balance_bucket(account_col):
     and every lookup must derive the bucket identically or point reads
     scan the wrong (or every) partition."""
     return F.crc32(account_col) % N_BALANCE_BUCKETS
+
+
+# Declared read schemas of the streaming balance store (the changelog
+# and its base snapshot — streaming.router). Declaring them spares every
+# read parquet's footer-inference job. ``ingest_batch`` is the
+# changelog's partition column; changelog files written while ``bucket``
+# was a data column still read through this schema (the column is
+# ignored). The base keeps ``bucket`` derived by :func:`balance_bucket`.
+BALANCE_DELTA_SCHEMA = StructType(
+    [
+        StructField("fromAccount", StringType()),
+        StructField("delta", LongType()),
+        StructField("ingest_batch", LongType()),
+    ]
+)
+BALANCE_BASE_SCHEMA = StructType(
+    [
+        StructField("fromAccount", StringType()),
+        StructField("balance", LongType()),
+        StructField("bucket", LongType()),
+    ]
+)
 
 
 class BalanceStore:
@@ -164,9 +186,8 @@ class BalanceStore:
     bucket directory — O(one bucket), not O(state) and not one full
     aggregation re-run per lookup (the pre-r13 batch shape). The
     streaming twin is ``streaming.router.BalanceView``, which serves the
-    same lookup over the base+changelog composition; both derive the
-    bucket via :func:`balance_bucket`, so their layouts are
-    interchangeable."""
+    same lookup over the base+changelog composition; its base snapshot
+    derives the bucket via the same :func:`balance_bucket`."""
 
     def __init__(self, spark, path: str):
         self._spark = spark

@@ -12,15 +12,19 @@ State design — the balance store as a changelog:
 Kafka Streams materializes the running sum in a local RocksDB store backed
 by a changelog topic (PaymentTopology.java:88). The Spark-native analog
 here is log-structured: each micro-batch writes its per-account *deltas*
-to ``balance_delta/ingest_batch=<id>/`` with dynamic partition overwrite.
-Replayed batches (restart from checkpoint) overwrite their own partition —
-idempotent, so balances are exactly-once even though the stream itself is
-at-least-once (matching the reference, which also runs without EOS —
+to ONE directory, ``balance_delta/ingest_batch=<id>/``, with dynamic
+partition overwrite — one file per shuffle partition of the delta
+aggregate, rows sorted on ``fromAccount``. Replayed batches (restart from
+checkpoint) overwrite their own partition — idempotent, so balances are
+exactly-once even though the stream itself is at-least-once (matching the
+reference, which also runs without EOS —
 KafkaStreamsDemoConfiguration.java:39-47 sets no processing.guarantee).
 A balance lookup is ``SUM(delta) WHERE fromAccount = x`` over the delta
-log; at 100 TB the log is partitioned by account hash-bucket so the scan
-prunes to one bucket, and a periodic compaction folds old batches into a
-base snapshot (same role as RocksDB compaction over the changelog).
+log: the equality pushes into the parquet reader, whose row-group
+statistics skip everything outside the key's range in the sorted files,
+and a periodic compaction folds old batches into a base snapshot (same
+role as RocksDB compaction over the changelog) so the number of files a
+lookup opens stays bounded.
 """
 
 from __future__ import annotations
@@ -32,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_streams_spark.operators.payments import (
+    BALANCE_BASE_SCHEMA,
+    BALANCE_DELTA_SCHEMA,
     N_BALANCE_BUCKETS,  # re-export: one bucket-layout definition (r13)
     account_balances,
     balance_bucket,
@@ -44,32 +50,39 @@ from kafka_streams_spark.schema import PAYMENT_SCHEMA
 _transform = route_and_convert
 
 
-def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
-    """One-time upgrade of pre-bucket delta stores (r8 advice fix).
+# Suffixes a partition is parked under while the migration swaps it.
+# ``.pre_bucket`` is what the upgrade INTO the bucket-nested layout
+# parked; its recovery is the same, and the flattening pass then
+# finishes whatever layout the recovery left.
+_PARK_SUFFIXES = (".pre_flat", ".pre_bucket")
 
-    Before round 7 the changelog wrote ``balance_delta/ingest_batch=N/``
-    with ``bucket`` as a plain DATA column; the bucketed layout nests
-    ``bucket=M/`` under each batch. Spark partition discovery rejects
-    mixed directory depths ("conflicting directory structures"), so the
-    first read after upgrading would fail for any deployment carrying
-    old partitions. This detects old-layout partitions (parquet files
-    directly under ``ingest_batch=N/``) and rewrites each into the
-    bucketed layout, deriving ``bucket`` when the files predate the
-    column entirely. Idempotent and crash-safe: the rewrite lands in a
-    ``._migrating`` temp dir, the old partition is parked at
-    ``.pre_bucket`` before the swap, and a recovery preamble finishes
-    or unwinds any interrupted swap on the next call. Returns the
-    number of partitions migrated. No-op (one directory listing) on
-    already-bucketed stores.
+
+def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
+    """One-time flattening of bucket-nested delta stores.
+
+    The changelog writes one flat directory per micro-batch,
+    ``balance_delta/ingest_batch=N/``. Stores written by the earlier
+    bucketed layout nest ``bucket=M/`` under each batch, and Spark
+    partition discovery rejects mixed directory depths ("conflicting
+    directory structures"), so the first read after upgrading would
+    fail. This rewrites every nested partition into the flat layout
+    (rows sorted on ``fromAccount``, like the writer). Flat partitions
+    from before the bucketed layout — with or without a ``bucket``
+    data column — are already native and are left alone.
+
+    Idempotent and crash-safe: the rewrite lands in a ``._migrating``
+    temp dir, the nested partition is parked at ``.pre_flat`` before
+    the swap, and a recovery preamble finishes or unwinds any
+    interrupted swap on the next call. Returns the number of
+    partitions migrated. No-op (one listing per partition) on flat
+    stores.
 
     All listing/rename/delete goes through the Hadoop FileSystem API
     (the ``_write_sketch_meta`` convention), not ``os``/``glob`` — so
     the migration works on whatever store the stream writes to
-    (HDFS/S3A/local). The r8 version used local-only primitives, which
-    silently no-op'd on a remote store and left the mixed-depth layout
-    in place (r9 advisor find). NOTE: object stores without atomic
-    directory rename (raw S3A) widen the park→swap crash window to a
-    copy; the recovery preamble still converges on re-run."""
+    (HDFS/S3A/local). NOTE: object stores without atomic directory
+    rename (raw S3A) widen the park→swap crash window to a copy; the
+    recovery preamble still converges on re-run."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
@@ -85,27 +98,27 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
 
     def _rename(src, dst) -> None:
         # Hadoop FileSystem.rename signals failure by returning false,
-        # not by raising (unlike os.rename). An unchecked false here is
-        # a silent crash-safety hole: the caller would proceed to delete
-        # the parked original even though the swap never happened (r10
-        # advice fix). Raise so the migration aborts with the parked
+        # not by raising: raise so the migration aborts with the parked
         # copy intact — the recovery preamble converges on the next run.
         if not fs.rename(src, dst):
             raise IOError(f"rename failed: {src} -> {dst}")
 
     # recovery preamble: finish or unwind an interrupted swap
-    for st in _glob(f"{delta_dir}/ingest_batch=*.pre_bucket"):
-        parked = st.getPath()
-        target_str = parked.toString()[: -len(".pre_bucket")]
-        target = HPath(target_str)
-        tmp = HPath(target_str + "._migrating")
-        if _is_dir(target):
-            fs.delete(parked, True)  # swap completed; drop the old copy
-        elif _is_dir(tmp) and fs.exists(HPath(f"{tmp.toString()}/_SUCCESS")):
-            _rename(tmp, target)  # crashed between park and swap
-            fs.delete(parked, True)
-        else:
-            _rename(parked, target)  # rewrite incomplete: restart it
+    for suffix in _PARK_SUFFIXES:
+        for st in _glob(f"{delta_dir}/ingest_batch=*{suffix}"):
+            parked = st.getPath()
+            target_str = parked.toString()[: -len(suffix)]
+            target = HPath(target_str)
+            tmp = HPath(target_str + "._migrating")
+            if _is_dir(target):
+                fs.delete(parked, True)  # swap completed; drop the old copy
+            elif _is_dir(tmp) and fs.exists(
+                HPath(f"{tmp.toString()}/_SUCCESS")
+            ):
+                _rename(tmp, target)  # crashed between park and swap
+                fs.delete(parked, True)
+            else:
+                _rename(parked, target)  # rewrite incomplete: restart it
 
     migrated = 0
     for st in sorted(
@@ -115,28 +128,23 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
         part_str = part.toString()
         if part_str.endswith("._migrating") or not st.isDirectory():
             continue
-        if _glob(f"{part_str}/bucket=*"):
-            continue  # already bucketed
-        if not _glob(f"{part_str}/*.parquet"):
-            continue  # empty partition: nothing to rewrite
-        df = spark.read.parquet(part_str)
-        if "bucket" not in df.columns:
-            df = df.withColumn(
-                "bucket", balance_bucket(F.col("fromAccount"))
-            )
+        if not _glob(f"{part_str}/bucket=*"):
+            continue  # already flat (or empty)
         tmp_str = part_str + "._migrating"
         (
-            df.repartition("bucket")
+            spark.read.schema(BALANCE_DELTA_SCHEMA)
+            .parquet(part_str)
+            .select("fromAccount", "delta")
+            .sortWithinPartitions("fromAccount")
             .write.mode("overwrite")
-            .partitionBy("bucket")
             .parquet(tmp_str)
         )
-        parked = HPath(part_str + ".pre_bucket")
+        parked = HPath(part_str + _PARK_SUFFIXES[0])
         _rename(part, parked)
         _rename(HPath(tmp_str), part)
         # only after the swap rename is CONFIRMED is the parked copy safe
-        # to drop — if _rename raised above, the park (and its .pre_bucket
-        # marker the recovery preamble keys on) survives.
+        # to drop — if _rename raised above, the park (and its suffix,
+        # which the recovery preamble keys on) survives.
         fs.delete(parked, True)
         migrated += 1
     return migrated
@@ -166,8 +174,8 @@ def run_payment_stream(
     foo_dir = os.path.join(out_dir, "rails_foo")
     bar_dir = os.path.join(out_dir, "rails_bar")
     delta_dir = os.path.join(out_dir, "balance_delta")
-    # upgrade any pre-bucket partitions BEFORE the first batch writes a
-    # nested one (mixed depths fail partition discovery — see
+    # flatten any bucket-nested partitions BEFORE the first batch writes
+    # a flat one (mixed depths fail partition discovery — see
     # _migrate_delta_layout)
     _migrate_delta_layout(spark, delta_dir)
 
@@ -206,23 +214,17 @@ def run_payment_stream(
             ).parquet(bar_dir)
             # Changelog: per-batch deltas, partition-overwrite => replaying
             # a batch after crash rewrites the same partition (idempotent).
-            deltas = account_balances(merged).withColumnRenamed(
-                "balance", "delta"
-            )
-            # bucket is a PARTITION column: without it in partitionBy,
-            # every point lookup scanned the whole delta log (the
-            # "1/64th pruning" the docstrings promise was a plain data
-            # column — r7 review wave 4). repartition on bucket keeps
-            # one file per (batch, bucket).
+            # The aggregate's own exchange is the only shuffle: one file
+            # per shuffle partition, sorted so the lookup's fromAccount
+            # equality prunes row groups by their statistics.
             (
-                deltas.withColumn(
-                    "bucket", balance_bucket(F.col("fromAccount"))
-                )
+                account_balances(merged)
+                .withColumnRenamed("balance", "delta")
+                .sortWithinPartitions("fromAccount")
                 .withColumn("ingest_batch", F.lit(batch_id))
-                .repartition("bucket")
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch", "bucket")
+                .partitionBy("ingest_batch")
                 .parquet(delta_dir)
             )
         finally:
@@ -286,24 +288,14 @@ def compact_balances(spark: SparkSession, out_dir: str) -> int | None:
     # Deltas already folded into the old base must NOT fold again: after
     # a crashed compaction (base written, deltas not yet deleted) the
     # <= hwm filter alone would union batches <= old_hwm with the base
-    # that already contains them — permanent double count (r7 review
-    # wave 4). This is the same `ingest_batch > old_hwm` predicate the
-    # readers apply.
-    closed = (
-        spark.read.parquet(delta_dir)
-        .filter(
-            (F.col("ingest_batch") <= hwm)
-            & (F.col("ingest_batch") > (old_hwm if old_hwm is not None else -1))
-        )
-        .select("fromAccount", "delta", "bucket")
-    )
-    if old_hwm is not None:
-        closed = closed.unionByName(
-            spark.read.parquet(os.path.join(base_dir, f"hwm={old_hwm}"))
-            .select("fromAccount", F.col("balance").alias("delta"), "bucket")
-        )
-    folded = closed.groupBy("fromAccount", "bucket").agg(
-        F.sum("delta").alias("balance")
+    # that already contains them — permanent double count. _balance_log
+    # applies the same `ingest_batch > old_hwm` predicate the readers do.
+    folded = (
+        _balance_log(spark, delta_dir, base_dir, old_hwm, upto=hwm)
+        .groupBy("fromAccount")
+        .agg(F.sum("delta").alias("balance"))
+        .withColumn("bucket", balance_bucket(F.col("fromAccount")))
+        .sortWithinPartitions("fromAccount")
     )
 
     new_base = os.path.join(base_dir, f"hwm={hwm}")
@@ -320,12 +312,47 @@ def compact_balances(spark: SparkSession, out_dir: str) -> int | None:
 def _latest_base_hwm(spark: SparkSession, base_dir: str) -> int | None:
     """Newest COMMITTED base snapshot — delegates to the shared
     ``_latest_hwm`` (one hwm-discovery implementation for the balances
-    and splits compactors, r10 review fix: the prior copy here also
-    skipped the ``_SUCCESS`` commit-marker check, so a reader could
-    trust a base a crashed compaction left half-written)."""
+    and splits compactors, which also checks the ``_SUCCESS`` commit
+    marker, so a reader never trusts a half-written base)."""
     from kafka_streams_spark.streaming.splits_stream import _latest_hwm
 
     return _latest_hwm(spark, base_dir)
+
+
+def _balance_log(
+    spark: SparkSession,
+    delta_dir: str,
+    base_dir: str,
+    hwm: int | None,
+    upto: int | None = None,
+) -> DataFrame:
+    """``(fromAccount, delta)`` rows whose per-account sum is the
+    balance: the committed base snapshot ``hwm=<hwm>`` (if any) plus the
+    delta partitions with ``ingest_batch > hwm`` (and ``<= upto`` when
+    given). The ``> hwm`` filter is the reader half of the compaction
+    contract (see ``compact_balances``): a compaction that crashed after
+    writing the base but before deleting the folded partitions — or a
+    reader racing a live compaction — would otherwise count those
+    amounts twice. It is on the partition column, so folded partitions
+    are pruned at planning time, never scanned. Both reads use declared
+    schemas: no footer-inference job."""
+    keep = F.col("ingest_batch") > (hwm if hwm is not None else -1)
+    if upto is not None:
+        keep = keep & (F.col("ingest_batch") <= upto)
+    log = (
+        spark.read.schema(BALANCE_DELTA_SCHEMA)
+        .parquet(delta_dir)
+        .filter(keep)
+        .select("fromAccount", "delta")
+    )
+    if hwm is None:
+        return log
+    base = spark.read.schema(BALANCE_BASE_SCHEMA).parquet(
+        os.path.join(base_dir, f"hwm={hwm}")
+    )
+    return log.unionByName(
+        base.select("fromAccount", F.col("balance").alias("delta"))
+    )
 
 
 class BalanceView:
@@ -333,9 +360,11 @@ class BalanceView:
     the reference's REST store lookup (BalanceController.java:22-35).
 
     ``get_balance`` returns None for accounts that never sent (the 404
-    case), never 0. The bucket predicate prunes the scan to 1/64th of the
-    log; partition pruning on parquet makes the lookup O(one bucket), not
-    O(state).
+    case), never 0. A lookup reads the base snapshot plus the open
+    batches' flat ``ingest_batch=N/`` directories; the ``fromAccount``
+    equality is pushed into the parquet reader, and because every file
+    is sorted on that key, row-group statistics skip the rest of each
+    file. Compaction keeps the number of open directories small.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str):
@@ -345,25 +374,9 @@ class BalanceView:
         _migrate_delta_layout(spark, self._delta_dir)
 
     def _log(self) -> DataFrame:
-        """Base snapshot (if compacted) + deltas with ``ingest_batch >
-        hwm``. The filter is the reader half of the compaction contract
-        (see ``compact_balances``): a compaction that crashed after
-        writing ``balance_base/hwm=N/`` but before deleting the folded
-        ``ingest_batch<=N`` partitions — or a reader racing a live
-        compaction — would otherwise count those amounts twice. The
-        predicate is on a partition column, so the already-folded
-        partitions are pruned at planning time, never scanned."""
-        deltas = self._spark.read.parquet(self._delta_dir)
+        """Base snapshot (if compacted) + deltas above its hwm."""
         hwm = _latest_base_hwm(self._spark, self._base_dir)
-        if hwm is None:
-            return deltas.select("fromAccount", "delta", "bucket")
-        open_deltas = deltas.filter(F.col("ingest_batch") > hwm).select(
-            "fromAccount", "delta", "bucket"
-        )
-        base = self._spark.read.parquet(
-            os.path.join(self._base_dir, f"hwm={hwm}")
-        ).select("fromAccount", F.col("balance").alias("delta"), "bucket")
-        return open_deltas.unionByName(base)
+        return _balance_log(self._spark, self._delta_dir, self._base_dir, hwm)
 
     def balances(self) -> DataFrame:
         """Full materialized view: SUM(delta) per account over base+log."""
@@ -371,18 +384,21 @@ class BalanceView:
             F.sum("delta").alias("balance")
         )
 
+    def lookup_plan(self, account: str) -> DataFrame:
+        """The point-lookup DataFrame: the account's rows of the base and
+        of every open batch (at most one each). Exposed so plan audits
+        can pin the ``fromAccount`` pushdown."""
+        return self._log().filter(F.col("fromAccount") == account)
+
     def get_balance(self, account: str):
-        rows = (
-            self._log()
-            .filter(
-                (F.col("bucket") == balance_bucket(F.lit(account)))
-                & (F.col("fromAccount") == account)
-            )
-            .groupBy("fromAccount")
-            .agg(F.sum("delta").alias("balance"))
-            .collect()
-        )
-        return rows[0]["balance"] if rows else None
+        # summed after collect() (NULLs skipped, like SUM): the rows are
+        # few, and it saves the aggregate's shuffle job
+        deltas = [
+            r["delta"]
+            for r in self.lookup_plan(account).collect()
+            if r["delta"] is not None
+        ]
+        return sum(deltas) if deltas else None
 
     def describe_topology(self) -> str:
         """Topology-endpoint parity (TopologyController.java:20-23): the

@@ -151,12 +151,11 @@ def test_recompaction_after_crash_does_not_double_count(spark, tmp_path):
 
 
 def test_pre_bucket_delta_layout_migrates_once(spark, tmp_path):
-    """r8 advice fix: a store whose delta partitions predate the nested
-    bucket layout (bucket was a plain data column under
-    ingest_batch=N/) must be upgraded in place — mixed directory depths
-    otherwise fail Spark partition discovery on the first post-upgrade
-    read — and balances must be byte-identical across the migration,
-    including for files so old they lack the bucket column entirely."""
+    """A store whose delta partitions predate the bucket-nested layout
+    (files directly under ingest_batch=N/, with ``bucket`` as a plain
+    data column or without it entirely) is already in the flat layout
+    the changelog writes: it must read back byte-identical with no
+    rewrite, stay flat as the stream appends on top, and compact."""
     from pyspark.sql import functions as F
 
     from kafka_streams_spark.streaming.router import (
@@ -181,11 +180,10 @@ def test_pre_bucket_delta_layout_migrates_once(spark, tmp_path):
         .write.parquet(os.path.join(delta, "ingest_batch=901"))
     )
 
-    # constructing the view migrates, and the stream keeps appending
-    # nested partitions on top
+    # constructing the view runs the migration, which has nothing to do;
+    # the stream keeps appending flat partitions on top
     view = BalanceView(spark, out)
-    for part in ("ingest_batch=900", "ingest_batch=901"):
-        assert glob.glob(os.path.join(delta, part, "bucket=*"))
+    _assert_flat(delta)
     assert view.get_balance("ABC") == 100
     assert view.get_balance("XYZ") == 800
 
@@ -195,57 +193,153 @@ def test_pre_bucket_delta_layout_migrates_once(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    _assert_flat(delta)
     assert view.get_balance("ABC") == 150
     assert view.get_balance("XYZ") == 800
 
     # idempotent: a second call touches nothing
     assert _migrate_delta_layout(spark, delta) == 0
 
-    # compaction works across the migrated store
+    # compaction works across the upgraded store
     hwm = compact_balances(spark, out)
     assert hwm is not None
     assert view.get_balance("ABC") == 150
     assert view.get_balance("XYZ") == 800
 
 
-def test_interrupted_migration_recovers(spark, tmp_path):
-    """The migration swap is crash-safe: a partition parked at
-    .pre_bucket with a complete ._migrating rewrite finishes the swap;
-    one with no usable rewrite unwinds and redoes it."""
-    import shutil
+def _assert_flat(delta_dir: str) -> None:
+    """Every ingest_batch=N partition holds parquet files directly and
+    has no subdirectory."""
+    parts = glob.glob(os.path.join(delta_dir, "ingest_batch=*"))
+    assert parts
+    for part in parts:
+        assert glob.glob(os.path.join(part, "*.parquet")), part
+        assert not [
+            e for e in os.listdir(part) if os.path.isdir(os.path.join(part, e))
+        ], part
 
+
+def _write_nested(df, part: str) -> None:
+    """The bucket-nested layout: ingest_batch=N/bucket=M/ files without
+    a bucket data column."""
     from pyspark.sql import functions as F
 
-    from kafka_streams_spark.streaming.router import (
-        N_BALANCE_BUCKETS,
-        _migrate_delta_layout,
+    from kafka_streams_spark.streaming.router import N_BALANCE_BUCKETS
+
+    (
+        df.withColumn(
+            "bucket", F.crc32(F.col("fromAccount")) % N_BALANCE_BUCKETS
+        )
+        .repartition("bucket")
+        .write.partitionBy("bucket")
+        .parquet(part)
     )
+
+
+def _delta_rows(spark, delta_dir: str) -> list[tuple]:
+    return sorted(
+        (r["ingest_batch"], r["fromAccount"], r["delta"])
+        for r in spark.read.parquet(delta_dir).collect()
+    )
+
+
+def test_bucket_nested_delta_layout_flattens_once(spark, tmp_path):
+    """A store written by the bucket-nested layout
+    (ingest_batch=N/bucket=M/) is flattened once: every partition ends
+    flat, its rows are byte-identical, balances and lookups are
+    unchanged, a second call migrates nothing, and the stream and
+    compaction keep working on top."""
+    from kafka_streams_spark.streaming.router import _migrate_delta_layout
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    delta = os.path.join(out, "balance_delta")
+    accounts = [f"ACC{i:03d}" for i in range(200)]
+    for b in (3, 4, 5):
+        _write_nested(
+            spark.createDataFrame(
+                [(a, b * 1000 + i) for i, a in enumerate(accounts) if i % b],
+                "fromAccount string, delta bigint",
+            ),
+            os.path.join(delta, f"ingest_batch={b}"),
+        )
+    expected = {}
+    for b in (3, 4, 5):
+        for i, a in enumerate(accounts):
+            if i % b:
+                expected[a] = expected.get(a, 0) + b * 1000 + i
+    assert len(glob.glob(os.path.join(delta, "ingest_batch=3", "bucket=*"))) > 1
+    before = _delta_rows(spark, delta)
+
+    assert _migrate_delta_layout(spark, delta) == 3
+    _assert_flat(delta)
+    assert _delta_rows(spark, delta) == before
+    assert _migrate_delta_layout(spark, delta) == 0  # idempotent
+    assert _delta_rows(spark, delta) == before
+
+    view = BalanceView(spark, out)
+    got = {r["fromAccount"]: r["balance"] for r in view.balances().collect()}
+    assert got == expected
+    assert view.get_balance("ACC001") == expected["ACC001"]
+    assert view.get_balance("ACC000") is None  # i % b == 0 for every b
+
+    write_events(src, "b1.json", [_payment("p1", 50, "ACC001")])
+    q = run_payment_stream(spark, src, out, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    _assert_flat(delta)
+    assert view.get_balance("ACC001") == expected["ACC001"] + 50
+    assert compact_balances(spark, out) is not None
+    expected["ACC001"] += 50
+    got = {r["fromAccount"]: r["balance"] for r in view.balances().collect()}
+    assert got == expected
+
+
+def test_interrupted_migration_recovers(spark, tmp_path):
+    """The flattening swap is crash-safe: a nested partition parked at
+    .pre_flat with a complete ._migrating rewrite finishes the swap; one
+    with no usable rewrite unwinds and redoes it. A .pre_bucket park
+    left by the earlier upgrade into the nested layout recovers too.
+    Every path ends flat with the same balance."""
+    import shutil
+
+    from kafka_streams_spark.streaming.router import _migrate_delta_layout
 
     out = str(tmp_path / "out")
     delta = os.path.join(out, "balance_delta")
     part = os.path.join(delta, "ingest_batch=0")
 
-    df = (
-        spark.createDataFrame([("ABC", 100)], "fromAccount string, delta bigint")
-        .withColumn("bucket", F.crc32(F.col("fromAccount")) % N_BALANCE_BUCKETS)
-    )
-    # crash state 1: parked old copy + complete rewrite, swap not done
-    df.repartition("bucket").write.partitionBy("bucket").parquet(
-        part + "._migrating"
-    )
-    df.drop("bucket").write.parquet(part + ".pre_bucket")
+    df = spark.createDataFrame([("ABC", 100)], "fromAccount string, delta bigint")
+    # crash state 1: parked nested copy + complete flat rewrite, swap
+    # not done
+    df.write.parquet(part + "._migrating")
+    _write_nested(df, part + ".pre_flat")
     assert _migrate_delta_layout(spark, delta) == 0  # recovery, no rewrite
-    assert glob.glob(os.path.join(part, "bucket=*"))
-    assert not os.path.exists(part + ".pre_bucket")
+    _assert_flat(delta)
+    assert not os.path.exists(part + ".pre_flat")
     assert not os.path.exists(part + "._migrating")
     view = BalanceView(spark, out)
     assert view.get_balance("ABC") == 100
 
-    # crash state 2: parked old copy, rewrite missing -> unwind + redo
+    # crash state 2: parked nested copy, rewrite missing -> unwind + redo
+    shutil.rmtree(part)
+    _write_nested(df, part + ".pre_flat")
+    assert _migrate_delta_layout(spark, delta) == 1
+    _assert_flat(delta)
+    assert not os.path.exists(part + ".pre_flat")
+    assert BalanceView(spark, out).get_balance("ABC") == 100
+
+    # crash state 3: the earlier upgrade parked a flat copy at
+    # .pre_bucket with a complete nested rewrite -> finish, then flatten
     shutil.rmtree(part)
     df.write.parquet(part + ".pre_bucket")
+    _write_nested(df, part + "._migrating")
     assert _migrate_delta_layout(spark, delta) == 1
-    assert glob.glob(os.path.join(part, "bucket=*"))
+    _assert_flat(delta)
+    assert not os.path.exists(part + ".pre_bucket")
+    assert not os.path.exists(part + "._migrating")
     assert BalanceView(spark, out).get_balance("ABC") == 100
 
 

@@ -3,6 +3,8 @@ result-identical to their direct forms, with the salted plan shapes."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from kafka_streams_spark.functions.partitioning import salted_aggregate, salted_join
@@ -215,6 +217,44 @@ def test_grouped_exact_percentiles_degenerate_groups(spark):
     assert old == new
 
 
+def test_grouped_exact_percentiles_null_group_key(spark):
+    """A NULL group key is a group of its own, as in the holistic
+    `percentile` aggregate — including a NULL-keyed group whose values
+    are all NULL."""
+    from kafka_streams_spark.functions.partitioning import (
+        grouped_exact_percentiles,
+    )
+
+    rows = (
+        [(None, float(v)) for v in [5, 1, 4, 2, 3, 9]]
+        + [("a", float(v)) for v in [10, 20, 30]]
+        + [("b", None), ("b", 7.0)]
+    )
+    df = spark.createDataFrame(rows, "g string, v double")
+    ps = [0.1, 0.5, 0.9]
+    holistic = {
+        r["g"]: [r["_q"][i] for i in range(3)]
+        for r in df.groupBy("g")
+        .agg(F.expr("percentile(v, array(0.1D, 0.5D, 0.9D))").alias("_q"))
+        .collect()
+    }
+    got = {
+        r["g"]: [r[f"q{i}"] for i in range(3)]
+        for r in grouped_exact_percentiles(df, "g", "v", ps).collect()
+    }
+    assert None in got
+    assert got == holistic
+
+    all_null = spark.createDataFrame(
+        [(None, None), (None, None), ("a", 1.0)], "g string, v double"
+    )
+    got = {
+        r["g"]: r["q0"]
+        for r in grouped_exact_percentiles(all_null, "g", "v", [0.5]).collect()
+    }
+    assert got == {None: None, "a": 1.0}
+
+
 def test_grouped_exact_percentiles_no_holistic_sort(spark, sf_dir):
     """The plan must contain no `percentile` aggregate (holistic buffer
     = the group's full multiset) and no unpartitioned sort; the only
@@ -229,9 +269,13 @@ def test_grouped_exact_percentiles_no_holistic_sort(spark, sf_dir):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "percentile(" not in plan, plan[:2000]
-    assert "windowspecdefinition(l_returnflag" in plan.replace(
-        "#", ""
-    ) or "partitionBy" not in plan  # window is partitioned, never global
+    # Window [exprs], [partitionSpec], [orderSpec]: every window is
+    # partitioned, and by the group column first — never global
+    specs = re.findall(
+        r"\bWindow \[.*\], \[([^\[\]]*)\], \[[^\[\]]*\]\s*$", plan, re.M
+    )
+    assert specs, plan[:2000]
+    assert all(re.match(r"l_returnflag#\d+, ", spec) for spec in specs), specs
 
 
 def test_price_quantiles_dispatch(spark, sf_dir, monkeypatch):

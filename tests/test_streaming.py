@@ -95,3 +95,44 @@ def test_streaming_restart_no_double_count(spark, tmp_path):
         assert "Exchange" in view.describe_topology()  # plan exposure works
     finally:
         q2.stop()
+
+
+def test_changelog_one_flat_dir_per_batch_and_pushed_lookup(spark, tmp_path):
+    """Each micro-batch writes exactly one balance_delta/ingest_batch=N/
+    directory holding parquet files and no subdirectory, and a point
+    lookup pushes its fromAccount equality into the parquet scan."""
+    import glob
+
+    from kafka_streams_spark.plans.audit import audit
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    write_events(src, "batch1.json", GOLDEN)
+
+    q = run_payment_stream(spark, src, out, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        write_events(src, "batch2.json", GOLDEN[:1])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    delta = os.path.join(out, "balance_delta")
+    parts = sorted(
+        p for p in glob.glob(os.path.join(delta, "*")) if os.path.isdir(p)
+    )
+    assert [os.path.basename(p) for p in parts] == [
+        "ingest_batch=0", "ingest_batch=1"
+    ]
+    for part in parts:
+        entries = os.listdir(part)
+        assert any(e.endswith(".parquet") for e in entries), entries
+        assert not [e for e in entries if os.path.isdir(os.path.join(part, e))]
+
+    view = BalanceView(spark, out)
+    assert view.get_balance("ABC") == 310
+    a = audit(view.lookup_plan("ABC"))
+    assert a.pushed_filters, a.plan
+    assert all("EqualTo(fromAccount,ABC)" in f for f in a.pushed_filters), (
+        a.pushed_filters
+    )
