@@ -15,7 +15,7 @@ Skew policy, in order of preference:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, WindowSpec
 from pyspark.sql import functions as F
 
 # Self-decomposable aggregates: stage-2 recombiner for each stage-1 agg.
@@ -213,100 +213,21 @@ def materialize_shared(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def exact_global_rank(
-    df: DataFrame,
-    value_col: str,
-    tiebreak_col: str,
-    rank_col: str = "rank",
-    buckets: int = 256,
-) -> DataFrame:
-    """EXACT 1-based global rank by ``(value_col, tiebreak_col)``
-    ascending — without the single-partition sort that
-    ``Window.orderBy(...)`` (no partition key) plans. That window moves
-    EVERY row to one task; at 10⁸–10⁹ rows it is the canonical
-    local-mode-hides-it scale-killer (round-4 verdict on `rfm_scores`).
-
-    Shape (the distributed sort-rank decomposition):
-    1. ``percentile_approx`` thresholds — a 1-row aggregate, broadcast.
-       Approximation placement only affects partition BALANCE, never the
-       rank: bucket assignment is monotone in ``value_col`` (count of
-       thresholds strictly below the value), so bucket b's rows all
-       precede bucket b+1's in the global order, whatever the
-       thresholds are.
-    2. Per-bucket row counts → cumulative offsets. The cumulative window
-       is over ≤ ``buckets`` rows — bounded, the engine's documented
-       exemption for unpartitioned windows.
-    3. rank = bucket offset + local ``row_number`` over a window
-       PARTITIONED by bucket — parallel across ``buckets`` tasks.
-
-    Degenerate case: a (near-)constant ``value_col`` collapses every row
-    into one bucket and the local window re-creates the single-partition
-    sort — rank needs a total order, so salting cannot apply. Real
-    ranking dimensions are non-constant; pick ``buckets`` ≳ cluster
-    cores so balance survives moderate repetition.
-
-    ``value_col`` must be non-null numeric; (value, tiebreak) pairs must
-    be distinct for the rank to be total (tiebreak is typically the
-    primary key). NaN is handled explicitly for float columns: Spark's
-    sort order places NaN GREATER than every number, but ``NaN > t`` is
-    false for every threshold — without the guard NaN rows landed in
-    bucket 0 and ranked among the SMALLEST values (r10 review fix); the
-    bucket expression treats NaN as the last bucket, matching the
-    per-bucket window's own NaN-last sort.
-    """
-    from pyspark.sql import Window
-
-    probs = [i / buckets for i in range(1, buckets)]
-    th = df.agg(
-        F.percentile_approx(value_col, probs, 10_000).alias("_th")
-    )
-    is_float = dict(df.dtypes).get(value_col) in ("float", "double")
-    nan_last = (
-        F.when(F.isnan(F.col(value_col)), F.lit(len(probs))).otherwise(F.lit(0))
-        if is_float
-        else F.lit(0)
-    )
-    b = (
-        df.crossJoin(F.broadcast(th))
-        .withColumn(
-            "_bkt",
-            F.greatest(
-                nan_last,
-                F.aggregate(
-                    "_th",
-                    F.lit(0),
-                    lambda acc, t: acc
-                    + F.when(F.col(value_col) > t, 1).otherwise(0),
-                ),
-            ),
-        )
-        .drop("_th")
-    )
-    counts = b.groupBy("_bkt").agg(F.count("*").alias("_cnt"))
-    # global-window-bounded(n_buckets): cumulative offsets over the
-    # per-bucket count table — one row per range bucket
-    cum = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "_bkt", F.coalesce(F.sum("_cnt").over(cum), F.lit(0)).alias("_off")
-    )
-    local = Window.partitionBy("_bkt").orderBy(value_col, tiebreak_col)
-    return (
-        b.join(F.broadcast(offs), "_bkt")
-        .withColumn(
-            rank_col,
-            (F.col("_off") + F.row_number().over(local)).cast("bigint"),
-        )
-        .drop("_bkt", "_off")
-    )
+def offset_row_number(offset: Column, window: WindowSpec) -> Column:
+    """Exact 1-based global rank from a bucket's row offset plus the local
+    ``row_number()`` over ``window`` (partitioned by bucket). The sum is
+    taken in bigint: ``row_number()`` is int, and an int offset plus it
+    overflows past 2^31 rows (ARITHMETIC_OVERFLOW under ANSI mode)."""
+    return offset.cast("bigint") + F.row_number().over(window)
 
 
 def ntile_from_rank(rank: Column, n: Column, tiles: int) -> Column:
     """SQL ``ntile(tiles)`` bucket from an exact 1-based rank and the
     total row count — bit-identical to the window function: the first
     ``n mod tiles`` buckets take ``n div tiles + 1`` rows, the rest
-    ``n div tiles``. Lets :func:`exact_global_rank` replace an
-    unpartitioned ``ntile`` window without changing a single output
-    value. Float division is exact here for any n < 2^53.
+    ``n div tiles``. Lets a bucketed rank (:func:`offset_row_number`)
+    replace an unpartitioned ``ntile`` window without changing a single
+    output value. Float division is exact here for any n < 2^53.
     """
     q = F.floor(n / tiles).cast("bigint")  # base bucket size
     m = (n % tiles).cast("bigint")  # buckets holding q+1 rows
@@ -495,7 +416,7 @@ def grouped_exact_percentiles(
         off_map[g] = ge.otherwise(F.lit(0))
     local = Window.partitionBy(group_col, "_bkt").orderBy(value_col)
     ranked = b.filter(filt).withColumn(
-        "_rk", _when_chain(off_map, F.lit(0)) + F.row_number().over(local)
+        "_rk", offset_row_number(_when_chain(off_map, F.lit(0)), local)
     )
     want = None
     for g, rks in need.items():

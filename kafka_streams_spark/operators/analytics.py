@@ -1313,7 +1313,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     is partitioned (by rank bucket).
 
     r15 (verdict item 9): the three rank ladders are FUSED — the r14
-    form ran one :func:`exact_global_rank` per dimension (3×
+    form ran one range-bucket rank ladder per dimension (3×
     percentile_approx jobs, 3× bucket-count jobs, 3 score joins; 26
     small stages whose driver job-gaps dominated the 2.5 s wall, stage
     walls summing 1.3 s). Now: ONE min/max stats job (equi-width
@@ -1335,6 +1335,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_streams_spark.functions.partitioning import (
         materialize_shared,
         ntile_from_rank,
+        offset_row_number,
     )
 
     e = load_table(spark, sf_dir, "events")
@@ -1354,7 +1355,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # a user whose EVERY event has NULL ts has no recency to rank —
-    # exact_global_rank's precondition is non-null values, and the NULL
+    # the bucketed rank needs non-null values, and the NULL
     # used to land in bucket 0 below every real value (r10 review fix)
     per_user = per_user.filter(F.col("recency_ns").isNotNull())
     per_user = materialize_shared(per_user)
@@ -1421,12 +1422,11 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in range(buckets):
             dense.append(off)
             off += per_dim.get(i, {}).get(k, 0)
-        off_arr = F.lit([int(x) for x in dense])
+        off_arr = F.lit(dense)
         w = Window.partitionBy(f"_bkt_{dim}").orderBy(dim, "user_id")
-        rank = (
-            F.element_at(off_arr, F.col(f"_bkt_{dim}") + 1)
-            + F.row_number().over(w)
-        ).cast("bigint")
+        rank = offset_row_number(
+            F.element_at(off_arr, F.col(f"_bkt_{dim}") + 1), w
+        )
         out = out.withColumn(
             score, ntile_from_rank(rank, F.lit(n_total).cast("bigint"), 5)
         )

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
+
 
 def get_spark(
     app_name: str = "kafka_streams_spark",
@@ -25,6 +27,9 @@ def get_spark(
     coalescing + skew-join splitting), UTC session timezone (required for
     DuckDB-oracle comparison — Spark timestamps are session-TZ, DuckDB's are
     UTC-naive), Arrow transfer for the few Pandas-UDF operators.
+    The parallel-listing threshold is the file streams' per-trigger cap,
+    so a file-source trigger stats its files on the driver (~40 ms)
+    instead of launching a one-task-per-file listing job.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -41,6 +46,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(MAX_FILES_PER_TRIGGER),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

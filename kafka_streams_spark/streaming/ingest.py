@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
+
 DOC_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -39,7 +41,7 @@ def run_corpus_ingest_stream(
     corpus_dir: str,
     checkpoint_dir: str,
     min_quality: float = 0.0,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
     remove_spans: int = 0,
 ):
     """Start the ingest loop: JSON docs stream in, the exact membership

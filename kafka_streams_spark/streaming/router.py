@@ -5,8 +5,8 @@ aggregation and the two outbound-topic sinks (PaymentTopology.java:75-97),
 reading the input once. Structured Streaming allows one sink per query, so
 a naive port runs three queries and reads the source thrice. This router
 keeps the reference's single-read property: ONE streaming query whose
-``foreachBatch`` persists the transformed micro-batch and performs all
-three writes (SURVEY.md §4.2).
+``foreachBatch`` persists the transformed micro-batch and runs all three
+writes as concurrent Spark jobs (SURVEY.md §4.2).
 
 State design — the balance store as a changelog:
 Kafka Streams materializes the running sum in a local RocksDB store backed
@@ -30,7 +30,9 @@ lookup opens stays bounded.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -45,6 +47,7 @@ from kafka_streams_spark.operators.payments import (
     route_and_convert,
 )
 from kafka_streams_spark.schema import PAYMENT_SCHEMA
+from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 
 # single-scan fused branch+fx+merge (see operators.payments)
 _transform = route_and_convert
@@ -150,12 +153,45 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
     return migrated
 
 
+# One long-lived pool for every router's fan-out: in pinned-thread mode
+# each new Python thread opens its own JVM thread and gateway
+# connection, so threads are reused across batches, never started per
+# batch.
+_FANOUT = ThreadPoolExecutor(max_workers=3, thread_name_prefix="route-batch")
+
+
+def _append_outbound(df: DataFrame, batch_id: int, path: str) -> None:
+    """Outbound "topic": append; the batch id column makes replays
+    diagnosable (at-least-once, same as the reference)."""
+    df.withColumn("ingest_batch", F.lit(batch_id)).write.mode("append").parquet(
+        path
+    )
+
+
+def _write_changelog(merged: DataFrame, batch_id: int, delta_dir: str) -> None:
+    """Changelog: per-batch deltas, partition-overwrite => replaying a
+    batch after a crash rewrites the same partition (idempotent). The
+    aggregate's own exchange is the only shuffle: one file per shuffle
+    partition, sorted so the lookup's fromAccount equality prunes row
+    groups by their statistics."""
+    (
+        account_balances(merged)
+        .withColumnRenamed("balance", "delta")
+        .sortWithinPartitions("fromAccount")
+        .withColumn("ingest_batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch")
+        .parquet(delta_dir)
+    )
+
+
 def run_payment_stream(
     spark: SparkSession,
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ) -> StreamingQuery:
     """Start the full topology as one streaming query over a JSON file
     source (the offline stand-in for the Kafka source — swap
@@ -164,6 +200,16 @@ def run_payment_stream(
 
     Sinks under ``out_dir``: ``rails_foo/`` and ``rails_bar/`` (append
     parquet — the outbound topics) and ``balance_delta/`` (the changelog).
+
+    Each micro-batch is persisted once and its three writes run as
+    concurrent jobs on a shared three-thread pool, each inheriting the
+    batch's local properties (batch id, query id, job group). The batch
+    fails only after all three writes return, with the first write's
+    error; the replay rewrites the changelog partition (exactly-once
+    balances) and re-appends the outbound legs (at-least-once). With
+    ``get_spark``'s listing threshold, a trigger of up to
+    ``MAX_FILES_PER_TRIGGER`` files is stat'ed on the driver, not by a
+    listing job.
     """
     raw = (
         spark.readStream.schema(PAYMENT_SCHEMA)
@@ -204,31 +250,28 @@ def run_payment_stream(
         merged.persist()  # read-once fan-out: 3 writes, 1 computation
         try:
             foo, bar = branch_by_rails(merged)
-            # Outbound "topics": append, batchId column makes replays
-            # diagnosable (at-least-once, same as the reference).
-            foo.withColumn("ingest_batch", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(foo_dir)
-            bar.withColumn("ingest_batch", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(bar_dir)
-            # Changelog: per-batch deltas, partition-overwrite => replaying
-            # a batch after crash rewrites the same partition (idempotent).
-            # The aggregate's own exchange is the only shuffle: one file
-            # per shuffle partition, sorted so the lookup's fromAccount
-            # equality prunes row groups by their statistics.
-            (
-                account_balances(merged)
-                .withColumnRenamed("balance", "delta")
-                .sortWithinPartitions("fromAccount")
-                .withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(delta_dir)
-            )
+            # The three writes run as concurrent Spark jobs, so no core
+            # idles through the changelog aggregate's reduce; the
+            # changelog, the longest of the three, is submitted first.
+            # Each write is wrapped on its own: it gets a private copy
+            # of this batch's local properties (batch and query ids, job
+            # group, SQL execution id), which its thread then mutates.
+            futures = [
+                _FANOUT.submit(
+                    inheritable_thread_target(batch_df.sparkSession)(write)
+                )
+                for write in (
+                    lambda: _write_changelog(merged, batch_id, delta_dir),
+                    lambda: _append_outbound(foo, batch_id, foo_dir),
+                    lambda: _append_outbound(bar, batch_id, bar_dir),
+                )
+            ]
+            wait(futures)
         finally:
             merged.unpersist()
+        errors = [e for e in (f.exception() for f in futures) if e is not None]
+        if errors:
+            raise errors[0]
 
     return (
         raw.writeStream.foreachBatch(route_batch)

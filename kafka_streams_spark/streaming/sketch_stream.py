@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
 
 # reserved ingest_batch partition ids: -1 holds the compacted fold, -2 is
@@ -113,7 +114,7 @@ def run_cms_stream(
     checkpoint_dir: str,
     d: int = 4,
     w: int = 1024,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Start the sketch-maintenance loop over a JSON document stream;
     returns the StreamingQuery. Read the live sketch with
@@ -225,7 +226,7 @@ def run_gram_stream(
     gram_dir: str,
     checkpoint_dir: str,
     scale: int = 10**3,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
     dim: int | None = None,
 ):
     """Maintain the exact second-moment (Gram) table of an embedding
@@ -676,7 +677,7 @@ def run_pq_encode_stream(
     codes_dir: str,
     checkpoint_dir: str,
     codebooks: list,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Streaming half of the recurring ANN deployment: new vectors
     arrive as a JSON stream and each micro-batch appends its PQ CODES
@@ -760,7 +761,7 @@ def run_histogram_stream(
     checkpoint_dir: str,
     bin_width_cents: int = 1600,
     scale: int = 100,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the doc-length distribution of a document stream as a
     mergeable :func:`~kafka_streams_spark.operators.profiling.value_histogram`
@@ -878,7 +879,7 @@ def run_binarize_stream(
     index_dir: str,
     checkpoint_dir: str,
     bits: int = 60,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Streaming half of the binary-quantization ANN deployment: new
     vectors arrive as a JSON stream and each micro-batch appends its
@@ -935,7 +936,7 @@ def run_scorecard_stream(
     source_dir: str,
     scorecard_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Live corpus-quality dashboard: each micro-batch writes ITS OWN
     one-row :func:`~kafka_streams_spark.operators.pipelines.corpus_scorecard`
@@ -986,7 +987,7 @@ def run_kmv_stream(
     sketch_dir: str,
     checkpoint_dir: str,
     k: int = 256,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain a per-source distinct-TOKEN KMV sketch of a document
     stream — "how many distinct words has each source contributed so
@@ -1075,7 +1076,7 @@ def run_key_profile_stream(
     profile_dir: str,
     checkpoint_dir: str,
     key_col: str = "source",
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the per-key COUNT profile of a document stream — the
     live state behind :func:`~kafka_streams_spark.operators.profiling.
@@ -1146,7 +1147,7 @@ def run_posting_profile_stream(
     checkpoint_dir: str,
     n: int = 3,
     block_col: str | None = "source",
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the per-(shingle [, block]) COUNT profile of a document
     stream — the live state behind
@@ -1217,7 +1218,7 @@ def run_rank_sketch_stream(
     sketch_dir: str,
     checkpoint_dir: str,
     k: int = 1024,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the doc-length RANK SKETCH of a document stream — the
     CMS changelog pattern applied to

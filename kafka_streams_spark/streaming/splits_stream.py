@@ -81,6 +81,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
 from kafka_streams_spark.streaming.sketch_stream import (
     _check_sketch_meta,
@@ -566,7 +567,7 @@ def run_split_assignment_stream(
     hash_fn: str = "md5_32",
     test_256: int = 13,
     val_256: int = 26,
-    max_files_per_trigger: int = 100,
+    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
     pair_budget: int | None = None,
 ) -> StreamingQuery:
     """Start the assignment loop over a JSON document stream. Returns

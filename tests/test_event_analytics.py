@@ -166,7 +166,7 @@ def test_rfm_scores_no_global_sort_window(spark, sf_dir):
 
 
 def test_rfm_scores_matches_exact_ntile_twin(spark, sf_dir):
-    """exact_global_rank + ntile_from_rank must be bit-identical to the
+    """The bucketed rank + ntile_from_rank must be bit-identical to the
     SQL ntile(5) OVER (ORDER BY dim, user_id) the oracle runs."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -197,31 +197,17 @@ def test_rfm_scores_matches_exact_ntile_twin(spark, sf_dir):
     assert got == want
 
 
-def test_exact_global_rank_model(spark):
-    """Rank over a crafted frame == sorted-order position, including
-    value ties broken by the tiebreak column and a constant column
-    (single-bucket degenerate case)."""
-    from pyspark.sql import functions as F
+def test_rfm_scores_rank_in_bigint(spark, sf_dir):
+    """Each dimension's rank adds its bucket offset to row_number() in
+    bigint (an int sum overflows past 2^31 users under ANSI mode): the
+    analyzed plan widens every row_number() operand of an add."""
+    import re
 
-    from kafka_streams_spark.functions.partitioning import exact_global_rank
+    from kafka_streams_spark.operators.analytics import rfm_scores
 
-    rows = [(i, v) for i, v in enumerate([5, 3, 3, 9, 1, 3, 5, 0])]
-    df = spark.createDataFrame(rows, "id bigint, v bigint")
-    got = {
-        r["id"]: r["rank"]
-        for r in exact_global_rank(df, "v", "id", "rank", buckets=4).collect()
-    }
-    want = {
-        i: pos + 1
-        for pos, (v, i) in enumerate(sorted((v, i) for i, v in rows))
-    }
-    assert got == want
-    const = spark.createDataFrame([(i, 7) for i in range(10)], "id bigint, v bigint")
-    got_c = {
-        r["id"]: r["rank"]
-        for r in exact_global_rank(const, "v", "id", "rank", buckets=4).collect()
-    }
-    assert got_c == {i: i + 1 for i in range(10)}
+    plan = rfm_scores(spark, sf_dir)._jdf.queryExecution().analyzed().toString()
+    assert not re.findall(r"\+ _we\d+#\d+\)", plan)
+    assert len(re.findall(r"\+ cast\(_we\d+#\d+ as bigint\)\)", plan)) >= 3
 
 
 def test_ntile_from_rank_matches_sql_ntile(spark):
@@ -430,23 +416,6 @@ def test_events_dead_hours_finds_gap(spark, tmp_path):
 
     got = [(r["event_type"], r["epoch_hour"]) for r in events_dead_hours(spark, str(tmp_path)).collect()]
     assert got == [("view", base_hour + 2)]
-
-
-def test_exact_global_rank_nan_ranks_last(spark):
-    """r10 review fix: NaN compares false against every threshold, so
-    NaN rows used to land in bucket 0 and rank among the SMALLEST
-    values — Spark's own sort order places NaN greater than every
-    number, so they must rank LAST."""
-    from kafka_streams_spark.functions.partitioning import exact_global_rank
-
-    rows = [(1, 5.0), (2, float("nan")), (3, 1.0), (4, 3.0), (5, float("nan"))]
-    df = spark.createDataFrame(rows, "id bigint, v double")
-    got = {
-        r["id"]: r["rank"]
-        for r in exact_global_rank(df, "v", "id", "rank", buckets=4).collect()
-    }
-    # global sort order: 1.0, 3.0, 5.0, NaN(id 2), NaN(id 5)
-    assert got == {3: 1, 4: 2, 1: 3, 2: 4, 5: 5}
 
 
 def test_time_bucket_null_and_negative_semantics(spark):

@@ -255,6 +255,51 @@ def test_grouped_exact_percentiles_null_group_key(spark):
     assert got == {None: None, "a": 1.0}
 
 
+def test_offset_row_number_is_bigint_past_2_31(spark):
+    """A bucket offset near 2^31 plus the local row_number() stays exact
+    under ANSI mode: the sum is bigint, so it cannot overflow int."""
+    from pyspark.sql import Window
+
+    from kafka_streams_spark.functions.partitioning import offset_row_number
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = spark.createDataFrame([("a", i) for i in range(3)], "b string, v int")
+        rk = offset_row_number(
+            F.lit(2**31 - 2), Window.partitionBy("b").orderBy("v")
+        )
+        out = df.select("v", rk.alias("rk"))
+        assert dict(out.dtypes)["rk"] == "bigint"
+        assert sorted((r["v"], r["rk"]) for r in out.collect()) == [
+            (0, 2**31 - 1),
+            (1, 2**31),
+            (2, 2**31 + 1),
+        ]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_grouped_exact_percentiles_rank_in_bigint(spark):
+    """The per-bucket rank adds its offset to row_number() in bigint:
+    the analyzed plan widens every row_number() operand of an add."""
+    from kafka_streams_spark.functions.partitioning import (
+        grouped_exact_percentiles,
+    )
+
+    df = spark.createDataFrame(
+        [(g, float(v)) for g in ("a", "b") for v in range(50)], "g string, v double"
+    )
+    plan = (
+        grouped_exact_percentiles(df, "g", "v", [0.5, 0.9])
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
+    )
+    assert not re.findall(r"\+ _we\d+#\d+\)", plan), plan
+    assert re.findall(r"\+ cast\(_we\d+#\d+ as bigint\)\)", plan), plan
+
+
 def test_grouped_exact_percentiles_no_holistic_sort(spark, sf_dir):
     """The plan must contain no `percentile` aggregate (holistic buffer
     = the group's full multiset) and no unpartitioned sort; the only

@@ -521,8 +521,6 @@ def test_no_unpartitioned_window_outside_whitelist(spark, sf_dir, monkeypatch):
       price_quantiles_hist   histogram bucket table (profiling.py)
       price_rank_quantiles   <=k-row bottom-k sample (profiling.py
                              rank_sketch_quantiles)
-      rfm_scores             3x <=256-row rank-offset tables
-                             (functions/partitioning.py exact_global_rank)
       zipf_fit               <=k Zipf head (text.py)
       max_df_for_budget      posting-length histogram — one row per
                              distinct df value (dedup.py, r9; the
@@ -549,7 +547,6 @@ def test_no_unpartitioned_window_outside_whitelist(spark, sf_dir, monkeypatch):
         "knn_recall_ivfpq_vec0": 1,
         "price_quantiles_hist": 1,
         "price_rank_quantiles": 1,
-        "rfm_scores": 3,
         "zipf_fit": 1,
         "max_df_for_budget": 1,
         "stop_band_cap": 1,

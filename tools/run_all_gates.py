@@ -1,7 +1,8 @@
 """Run every local gate in order and print one verdict line per gate:
 
     freshness lint -> fuzz-ring lint -> oracle sweep (sf0.01) ->
-    pytest -> bench (sf0.1) -> bench-diff vs the newest BENCH_r{N}
+    pytest -> perfbench's own tests -> bench (sf0.1) ->
+    bench-diff vs the newest BENCH_r{N}
 
 Usage: python tools/run_all_gates.py [--skip-bench] [--skip-tests]
 Exit code: 0 iff every gate that ran passed.
@@ -96,6 +97,10 @@ def main() -> int:
     ok &= run("oracle-sweep", [sys.executable, "tools/check_oracle.py"])
     if not args.skip_tests:
         ok &= run("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"])
+        ok &= run(
+            "perfbench-tests",
+            [sys.executable, "-m", "pytest", "perfbench/tests", "-q"],
+        )
     if not args.skip_bench:
         ok &= run("bench", [sys.executable, "bench.py"])
         # bench.py exits 0 regardless of speed; the REGRESSION gate is
