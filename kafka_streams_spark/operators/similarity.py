@@ -1142,9 +1142,7 @@ def write_lsh_index(
     protects stamped stores, loudly)."""
     indexed.write.mode("overwrite").partitionBy("bucket").parquet(path)
     if planes is not None:
-        from kafka_streams_spark.streaming.sketch_stream import (
-            _write_sketch_meta,
-        )
+        from kafka_streams_spark.streaming.store import _write_sketch_meta
 
         _write_sketch_meta(
             indexed.sparkSession,
@@ -1169,7 +1167,7 @@ def knn_from_index(
     planes fingerprint (written by :func:`write_lsh_index` with
     ``planes=``), a mismatched query raises instead of silently
     scanning the wrong buckets."""
-    from kafka_streams_spark.streaming.sketch_stream import _check_sketch_meta
+    from kafka_streams_spark.streaming.store import _check_sketch_meta
 
     _check_sketch_meta(
         spark, path, {"kind": "lsh", "planes_md5": _planes_md5(planes)}

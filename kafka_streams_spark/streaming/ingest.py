@@ -4,13 +4,11 @@ appended — the corpus itself is the streaming state (batch-partitioned
 parquet, not a state store), which is the only state shape that works
 when "state" is 100 TB of accepted documents.
 
-Exactly-once corpus content under at-least-once delivery: each batch
-writes ONLY its own ``ingest_batch`` partition with dynamic partition
-overwrite, and the membership gate reads the corpus EXCLUDING that
-partition — so a crash-replayed batch recomputes the same gate verdict
-against the same prior corpus and overwrites its own partition with the
-same rows (the changelog-overwrite idempotency pattern of
-``streaming/router.py``, applied to corpus building).
+The corpus is a changelog store (``streaming/store.py``): each batch
+writes only its own ``ingest_batch`` partition, and the membership gate
+reads the corpus EXCLUDING that partition — so a crash-replayed batch
+recomputes the same verdict against the same prior corpus and rewrites
+its own partition with the same rows.
 """
 
 from __future__ import annotations
@@ -25,6 +23,11 @@ from pyspark.sql.types import (
 )
 
 from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
+from kafka_streams_spark.streaming.store import (
+    _try_read_parquet,
+    epoch_mapper,
+    write_batch,
+)
 
 DOC_SCHEMA = StructType(
     [
@@ -81,43 +84,19 @@ def run_corpus_ingest_stream(
         .json(source_dir)
     )
 
-    # per-checkpoint-generation offset for ingest_batch (the
-    # splits-store epoch contract): a FRESH checkpoint restarts batch
-    # ids at 0, and without the offset its batch 0 would (a) exclude
-    # the prior generation's partition 0 from the membership gate —
-    # re-admitting its documents — and (b) dynamically OVERWRITE that
-    # partition, losing every accepted doc in it that did not re-arrive.
-    _epoch_cache: dict[str, int] = {}
+    effective_batch = epoch_mapper(
+        spark, corpus_dir, checkpoint_dir, [corpus_dir], []
+    )
 
     def ingest(batch_df: DataFrame, raw_batch_id: int) -> None:
         from kafka_streams_spark.functions.partitioning import (
             materialize_shared,
         )
-        from kafka_streams_spark.streaming.splits_stream import (
-            _epoch_offset,
-            _try_read_parquet,
-        )
 
-        if "offset" not in _epoch_cache:
-            _epoch_cache["offset"] = _epoch_offset(
-                spark,
-                corpus_dir,
-                checkpoint_dir,
-                raw_batch_id,
-                delta_dirs=[corpus_dir],
-                base_dirs=[],
-            ) - raw_batch_id
-        batch_id = _epoch_cache["offset"] + raw_batch_id
-
-        # FS-agnostic existence probe (corpus_dir may be HDFS/S3, where
-        # os.listdir cannot look): an absent corpus raises
-        # AnalysisException on read. ONLY the missing-path condition
-        # means "no corpus yet" (_try_read_parquet narrows to
-        # PATH_NOT_FOUND) — a transient IO/auth failure or corrupt
-        # store metadata must fail the batch (retried by the stream),
-        # not silently skip the membership gate and re-admit the whole
-        # prior corpus (r7 review wave 5; scope narrowed in r10 to
-        # match the splits-stream advice fix).
+        batch_id = effective_batch(raw_batch_id)
+        # only a missing (or still empty) corpus means "no corpus yet":
+        # any other read failure fails the batch, which the stream
+        # retries, rather than skipping the membership gate
         prior = _try_read_parquet(spark, corpus_dir)
         if prior is not None:
             prior = prior.filter(
@@ -126,10 +105,10 @@ def run_corpus_ingest_stream(
             # gate on the hash of the text AS IT ARRIVED (src_md5,
             # persisted below): span surgery may rewrite the stored
             # body, and re-hashing it would let the same original
-            # document re-enter on re-arrival (r7 review wave 5)
+            # document re-enter on re-arrival
             hash_col = "src_md5" if "src_md5" in prior.columns else None
             if hash_col is not None:
-                # back-compat (r8 advice fix): partitions written before
+                # back-compat: partitions written before
                 # src_md5 existed read the column as NULL once a newer
                 # batch surfaces it in the merged schema — a NULL hash
                 # drops those documents from the seen-set entirely, and
@@ -150,8 +129,8 @@ def run_corpus_ingest_stream(
             )
         else:
             fresh = dedup_exact_rows(batch_df, ["text"], "doc_id")
-        # NULL text hashes as '' — the dedup_incremental convention
-        # (r10): a NULL src_md5 would fall out of every future seen-set
+        # NULL text hashes as '' (the dedup_incremental convention): a
+        # NULL src_md5 would fall out of every future seen-set
         accepted = fresh.withColumn(
             "src_md5", F.md5(F.coalesce(F.col("text"), F.lit("")))
         )
@@ -179,13 +158,7 @@ def run_corpus_ingest_stream(
                 )
                 .drop("text_clean", "n_tokens_removed")
             )
-        (
-            accepted.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(corpus_dir)
-        )
+        write_batch(accepted, corpus_dir, batch_id)
 
     return (
         raw.writeStream.foreachBatch(ingest)

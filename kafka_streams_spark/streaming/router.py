@@ -48,6 +48,14 @@ from kafka_streams_spark.operators.payments import (
 )
 from kafka_streams_spark.schema import PAYMENT_SCHEMA
 from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
+from kafka_streams_spark.streaming.store import (
+    _fs,
+    _latest_hwm,
+    _rename,
+    epoch_mapper,
+    fold_into_base,
+    write_batch,
+)
 
 # single-scan fused branch+fx+merge (see operators.payments)
 _transform = route_and_convert
@@ -78,19 +86,10 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
     the swap, and a recovery preamble finishes or unwinds any
     interrupted swap on the next call. Returns the number of
     partitions migrated. No-op (one listing per partition) on flat
-    stores.
-
-    All listing/rename/delete goes through the Hadoop FileSystem API
-    (the ``_write_sketch_meta`` convention), not ``os``/``glob`` — so
-    the migration works on whatever store the stream writes to
-    (HDFS/S3A/local). NOTE: object stores without atomic directory
-    rename (raw S3A) widen the park→swap crash window to a copy; the
-    recovery preamble still converges on re-run."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(delta_dir)
-    fs = root.getFileSystem(hconf)
+    stores. Object stores without atomic directory rename (raw S3A)
+    widen the park→swap crash window to a copy; the recovery preamble
+    still converges on re-run."""
+    fs, HPath = _fs(spark, delta_dir)
 
     def _glob(pattern: str):
         statuses = fs.globStatus(HPath(pattern))
@@ -98,13 +97,6 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
 
     def _is_dir(p) -> bool:
         return fs.exists(p) and fs.getFileStatus(p).isDirectory()
-
-    def _rename(src, dst) -> None:
-        # Hadoop FileSystem.rename signals failure by returning false,
-        # not by raising: raise so the migration aborts with the parked
-        # copy intact — the recovery preamble converges on the next run.
-        if not fs.rename(src, dst):
-            raise IOError(f"rename failed: {src} -> {dst}")
 
     # recovery preamble: finish or unwind an interrupted swap
     for suffix in _PARK_SUFFIXES:
@@ -118,10 +110,10 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
             elif _is_dir(tmp) and fs.exists(
                 HPath(f"{tmp.toString()}/_SUCCESS")
             ):
-                _rename(tmp, target)  # crashed between park and swap
+                _rename(fs, tmp, target)  # crashed between park and swap
                 fs.delete(parked, True)
             else:
-                _rename(parked, target)  # rewrite incomplete: restart it
+                _rename(fs, parked, target)  # rewrite incomplete: restart it
 
     migrated = 0
     for st in sorted(
@@ -143,11 +135,10 @@ def _migrate_delta_layout(spark: SparkSession, delta_dir: str) -> int:
             .parquet(tmp_str)
         )
         parked = HPath(part_str + _PARK_SUFFIXES[0])
-        _rename(part, parked)
-        _rename(HPath(tmp_str), part)
-        # only after the swap rename is CONFIRMED is the parked copy safe
-        # to drop — if _rename raised above, the park (and its suffix,
-        # which the recovery preamble keys on) survives.
+        _rename(fs, part, parked)
+        _rename(fs, HPath(tmp_str), part)
+        # drop the parked copy only after the swap rename succeeded: the
+        # recovery preamble keys on its suffix
         fs.delete(parked, True)
         migrated += 1
     return migrated
@@ -174,15 +165,12 @@ def _write_changelog(merged: DataFrame, batch_id: int, delta_dir: str) -> None:
     aggregate's own exchange is the only shuffle: one file per shuffle
     partition, sorted so the lookup's fromAccount equality prunes row
     groups by their statistics."""
-    (
+    write_batch(
         account_balances(merged)
         .withColumnRenamed("balance", "delta")
-        .sortWithinPartitions("fromAccount")
-        .withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(delta_dir)
+        .sortWithinPartitions("fromAccount"),
+        delta_dir,
+        batch_id,
     )
 
 
@@ -225,27 +213,16 @@ def run_payment_stream(
     # _migrate_delta_layout)
     _migrate_delta_layout(spark, delta_dir)
 
-    # per-checkpoint-generation offset for ingest_batch (see
-    # splits_stream._epoch_offset): a fresh checkpoint restarts batch ids
-    # at 0, and without the offset a post-compaction fresh run's deltas
-    # would land below the base hwm — invisible to BalanceView, deleted
-    # by the next compact_balances, and eventually overwriting surviving
-    # pre-crash partitions via dynamic partition overwrite.
-    _epoch_cache: dict[str, int] = {}
+    effective_batch = epoch_mapper(
+        spark,
+        out_dir,
+        checkpoint_dir,
+        [delta_dir],
+        [os.path.join(out_dir, "balance_base")],
+    )
 
     def route_batch(batch_df: DataFrame, raw_batch_id: int) -> None:
-        from kafka_streams_spark.streaming.splits_stream import _epoch_offset
-
-        if "offset" not in _epoch_cache:
-            _epoch_cache["offset"] = _epoch_offset(
-                spark,
-                out_dir,
-                checkpoint_dir,
-                raw_batch_id,
-                delta_dirs=[delta_dir],
-                base_dirs=[os.path.join(out_dir, "balance_base")],
-            ) - raw_batch_id
-        batch_id = _epoch_cache["offset"] + raw_batch_id
+        batch_id = effective_batch(raw_batch_id)
         merged = _transform(batch_df)
         merged.persist()  # read-once fan-out: 3 writes, 1 computation
         try:
@@ -286,80 +263,25 @@ def compact_balances(spark: SparkSession, out_dir: str) -> int | None:
     RocksDB compaction over the changelog topic. Returns the new
     high-water batch id, or None if there was nothing to fold.
 
-    Only batches strictly below the newest delta partition are folded:
-    Structured Streaming may replay (and partition-overwrite) the latest
-    uncommitted batch after a crash, and folding it would double-count on
-    replay. The base lives at ``balance_base/hwm=<N>/``; readers take the
-    max-hwm base plus deltas with ``ingest_batch > N``, so a compaction
-    running concurrently with the stream never changes query results.
-
-    All listing/deletion goes through the Hadoop FileSystem API (r10 —
-    the ``_migrate_delta_layout`` convention), so compaction works on
-    whatever store the stream writes to (HDFS/S3A/local); the prior
-    glob/shutil version silently no-op'd on remote stores.
-    """
-    from kafka_streams_spark.streaming.splits_stream import (
-        _fs,
-        _list_partition_values,
-        _sweep_base_snapshots,
-    )
-
+    The base lives at ``balance_base/hwm=<N>/`` and holds one summed row
+    per account; readers take the max-hwm base plus deltas with
+    ``ingest_batch > N``, so a compaction running concurrently with the
+    stream never changes query results (:func:`store.fold_into_base`
+    has the protocol)."""
     delta_dir = os.path.join(out_dir, "balance_delta")
     base_dir = os.path.join(out_dir, "balance_base")
     _migrate_delta_layout(spark, delta_dir)
-    fs, HPath = _fs(spark, delta_dir)
-    batches = _list_partition_values(spark, delta_dir, "ingest_batch")
-    # sweep snapshot debris (uncommitted bases a crashed compaction left
-    # mid-write; superseded committed bases a crash left undeleted)
-    # BEFORE trusting any hwm — an uncommitted base is partial, and
-    # folding "up to" it would delete deltas it never contained
-    old_hwm = _sweep_base_snapshots(spark, base_dir)
-    if len(batches) < 2:
-        return old_hwm  # nothing safely foldable
-    hwm = batches[-2]
-    if old_hwm is not None and hwm <= old_hwm:
-        # Nothing newly closed — but a compaction that crashed between
-        # writing the base and deleting the folded deltas leaves
-        # ingest_batch <= old_hwm partitions behind; finish its cleanup
-        # (readers already exclude them via the > hwm filter).
-        for b in batches[:-1]:
-            if b <= old_hwm:
-                fs.delete(
-                    HPath(f"{delta_dir}/ingest_batch={b}"), True
-                )
-        return old_hwm
-    # Deltas already folded into the old base must NOT fold again: after
-    # a crashed compaction (base written, deltas not yet deleted) the
-    # <= hwm filter alone would union batches <= old_hwm with the base
-    # that already contains them — permanent double count. _balance_log
-    # applies the same `ingest_batch > old_hwm` predicate the readers do.
-    folded = (
-        _balance_log(spark, delta_dir, base_dir, old_hwm, upto=hwm)
-        .groupBy("fromAccount")
-        .agg(F.sum("delta").alias("balance"))
-        .withColumn("bucket", balance_bucket(F.col("fromAccount")))
-        .sortWithinPartitions("fromAccount")
-    )
 
-    new_base = os.path.join(base_dir, f"hwm={hwm}")
-    folded.write.mode("overwrite").parquet(new_base)
-    # drop folded inputs (old base + closed delta partitions) — only
-    # AFTER the new base is committed
-    if old_hwm is not None and old_hwm != hwm:
-        fs.delete(HPath(f"{base_dir}/hwm={old_hwm}"), True)
-    for b in batches[:-1]:
-        fs.delete(HPath(f"{delta_dir}/ingest_batch={b}"), True)
-    return hwm
+    def build(old_hwm: int | None, hwm: int) -> DataFrame:
+        return (
+            _balance_log(spark, delta_dir, base_dir, old_hwm, upto=hwm)
+            .groupBy("fromAccount")
+            .agg(F.sum("delta").alias("balance"))
+            .withColumn("bucket", balance_bucket(F.col("fromAccount")))
+            .sortWithinPartitions("fromAccount")
+        )
 
-
-def _latest_base_hwm(spark: SparkSession, base_dir: str) -> int | None:
-    """Newest COMMITTED base snapshot — delegates to the shared
-    ``_latest_hwm`` (one hwm-discovery implementation for the balances
-    and splits compactors, which also checks the ``_SUCCESS`` commit
-    marker, so a reader never trusts a half-written base)."""
-    from kafka_streams_spark.streaming.splits_stream import _latest_hwm
-
-    return _latest_hwm(spark, base_dir)
+    return fold_into_base(spark, delta_dir, base_dir, build)
 
 
 def _balance_log(
@@ -418,7 +340,7 @@ class BalanceView:
 
     def _log(self) -> DataFrame:
         """Base snapshot (if compacted) + deltas above its hwm."""
-        hwm = _latest_base_hwm(self._spark, self._base_dir)
+        hwm = _latest_hwm(self._spark, self._base_dir)
         return _balance_log(self._spark, self._delta_dir, self._base_dir, hwm)
 
     def balances(self) -> DataFrame:

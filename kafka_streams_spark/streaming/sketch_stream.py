@@ -1,22 +1,22 @@
 """Streaming corpus-frequency monitor: a count-min sketch maintained
-over a document stream as batch-partitioned DELTAS — the changelog
-pattern of ``streaming/router.py`` applied to a mergeable sketch.
+over a document stream as batch-partitioned DELTAS in a changelog store
+(``streaming/store.py``), and the same shape for the other mergeable
+sketches and indexes below.
 
 Each micro-batch writes only its own ``ingest_batch`` partition, holding
 the CMS counters of that batch's tokens (≤ d·w rows regardless of batch
 size); the live sketch is the per-(row_idx, bucket) SUM over all
 partitions, which is exactly CMS mergeability (pinned in
 tests/test_quality_sketch.py::test_cms_sketch_merges_by_addition).
-Exactly-once counters under at-least-once delivery for the same reason
-the router is idempotent: a replayed batch recomputes the same
-deterministic delta (md5-keyed hashes, no randomness) and overwrites
-its own partition with the same rows.
+Counters are exactly-once under at-least-once delivery: a replayed
+batch recomputes the same deterministic delta (md5-keyed hashes, no
+randomness) and overwrites its own partition with the same rows.
 
 This is the 100 TB shape for "what are the hot tokens in today's
 crawl": state is O(d·w·batches) tiny rows, the merge is one partial-
 aggregated shuffle of those rows, and no full-vocabulary aggregation
-ever runs. Compact by summing all partitions into one and re-writing —
-the delta/compaction economics are the router's.
+ever runs. Compaction folds closed partitions into the reserved
+``ingest_batch=-1`` partition (:func:`_compact_deltas`).
 """
 
 from __future__ import annotations
@@ -26,6 +26,18 @@ from pyspark.sql import functions as F
 
 from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
+from kafka_streams_spark.streaming.store import (
+    _check_sketch_meta,
+    _fs,
+    _read_json_file,
+    _registered_offset,
+    _rename,
+    _stamp_sketch_store,
+    _try_read_parquet,
+    _write_json_file,
+    epoch_mapper,
+    write_batch,
+)
 
 # reserved ingest_batch partition ids: -1 holds the compacted fold, -2 is
 # the fold's staging partition (invisible to every reader — see
@@ -44,65 +56,23 @@ def _read_delta_store(spark: SparkSession, store_dir: str) -> DataFrame:
     ``_sketch_meta.json`` / ``_epochs.json`` sidecars land before the
     first data write) raises a clear FileNotFoundError instead of
     Spark's UNABLE_TO_INFER_SCHEMA."""
-    from kafka_streams_spark.streaming.splits_stream import (
-        _try_read_parquet,
-    )
-
     df = _try_read_parquet(spark, store_dir)
     if df is None:
         raise FileNotFoundError(f"no deltas under {store_dir} yet")
     return df.filter(F.col("ingest_batch") != _FOLD_STAGE)
 
 
-def _epoch_mapper(spark: SparkSession, store_dir: str, checkpoint_dir: str):
-    """Per-stream remap of Structured Streaming's checkpoint-relative
-    batch id onto the store's own monotone ``ingest_batch`` axis —
-    the splits-store epoch contract (``splits_stream._epoch_offset``)
-    applied to every sketch/index delta store. Without it a FRESH
-    checkpoint (lost/corrupt checkpoint recovery) restarts batch ids at
-    0 and its dynamic partition overwrites silently REPLACE the prior
-    generation's deltas: summed stores (CMS/gram/histogram/…) lose the
-    replaced batches' counts, index stores lose their rows. With the
-    persisted offset each generation appends above everything on disk,
-    so a fresh checkpoint degrades to clean at-least-once re-counting
-    (re-delivered inputs add again — same trade as the payment
-    changelog) instead of corruption. Replay WITHIN a generation still
-    lands in its own partition (idempotent)."""
-    cache: dict[str, int] = {}
-
-    def eff(batch_id: int) -> int:
-        if "offset" not in cache:
-            from kafka_streams_spark.streaming.splits_stream import (
-                _epoch_offset,
-            )
-
-            cache["offset"] = _epoch_offset(
-                spark,
-                store_dir,
-                checkpoint_dir,
-                batch_id,
-                delta_dirs=[store_dir],
-                base_dirs=[],
-            ) - batch_id
-        return cache["offset"] + batch_id
-
-    return eff
-
-
 def _delta_writer(spark: SparkSession, store_dir: str, checkpoint_dir: str):
-    """The one write path every sketch/index stream shares: remap the
-    batch id onto the store's epoch axis, stamp it as ``ingest_batch``,
-    and dynamically overwrite ONLY that partition (replay-idempotent)."""
-    eff = _epoch_mapper(spark, store_dir, checkpoint_dir)
+    """The one write path every sketch/index stream shares: the batch id
+    remapped onto the store's epoch axis, then :func:`store.write_batch`.
+    The epoch remap turns a fresh checkpoint into clean at-least-once
+    re-counting instead of overwriting the prior generation's deltas."""
+    effective_batch = epoch_mapper(
+        spark, store_dir, checkpoint_dir, [store_dir], []
+    )
 
     def write(delta: DataFrame, batch_id: int) -> None:
-        (
-            delta.withColumn("ingest_batch", F.lit(eff(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store_dir)
-        )
+        write_batch(delta, store_dir, effective_batch(batch_id))
 
     return write
 
@@ -123,8 +93,7 @@ def run_cms_stream(
     from kafka_streams_spark.operators.text import cms_token_sketch
 
     # (d, w) is the frozen grid of the store — deltas on a different
-    # grid would sum into cells that mean different hash buckets (the
-    # r8 advice class, same gate as the kmv/rank/gram/histogram stores)
+    # grid would sum into cells that mean different hash buckets
     _stamp_sketch_store(
         spark, sketch_dir, {"kind": "cms", "d": int(d), "w": int(w)}
     )
@@ -179,11 +148,7 @@ def compact_cms(
 ) -> None:
     """Fold all batch-delta partitions into the reserved ``-1``
     partition — :func:`_compact_deltas` with the per-(row_idx, bucket)
-    counter sum. The module's namesake store previously had no public
-    compactor (r10 review fix): callers had to reach for the private
-    protocol directly, bypassing the stamp gate, or hand-roll a
-    full-table rewrite and re-create the concurrent-loss bug
-    :func:`_compact_deltas` exists to prevent. The grid parameters are
+    counter sum, behind the stamp gate. The grid parameters are
     not needed — counters sum grid-agnostically; only estimate
     read-offs are grid-sensitive (:func:`read_cms_sketch`)."""
     _check_sketch_meta(spark, sketch_dir, {"kind": "cms"})
@@ -252,8 +217,7 @@ def run_gram_stream(
 
     # Scale is a FROZEN unit of the store: a restart with a different
     # scale would append deltas whose sum_i/sum_prod are in a different
-    # unit and read_gram would sum them silently (round-8 advice fix —
-    # same gate as the kmv/rank stores).
+    # unit and read_gram would sum them silently.
     _stamp_sketch_store(spark, gram_dir, {"kind": "gram", "scale": int(scale)})
     log = logging.getLogger(__name__)
 
@@ -267,19 +231,18 @@ def run_gram_stream(
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         # embedding_gram quarantines NULL rows (and, with dim set,
-        # ragged rows) JVM-side — one bad JSON record no longer kills
-        # the long-running stream (round-7 advice fix). Without an
-        # explicit dim, a ragged row would still crash np.stack, so
-        # the batch's MODAL embedding length stands in (deterministic:
-        # mode over the row multiset, smallest on ties) — pass dim
-        # explicitly in production so a mostly-corrupt batch cannot
-        # vote its way into the gram table.
+        # ragged rows) JVM-side, so one bad JSON record cannot kill the
+        # long-running stream. Without an explicit dim, a ragged row
+        # would still crash np.stack, so the batch's MODAL embedding
+        # length stands in (deterministic: mode over the row multiset,
+        # smallest on ties) — pass dim explicitly in production so a
+        # mostly-corrupt batch cannot vote its way into the gram table.
         d = dim
         if d is None:
             # the modal-length vote is a SECOND action over the batch —
             # without caching, foreachBatch recomputes the source read
-            # for the gram pass too, doubling steady-state ingest I/O
-            # on every trigger (r10 review fix)
+            # for the gram pass too, doubling steady-state ingest I/O on
+            # every trigger
             batch_df.persist()
         try:
             if d is None:
@@ -293,12 +256,12 @@ def run_gram_stream(
                     return  # nothing but NULLs in this batch: no delta
                 top = min(by_len, key=lambda r: (-r["count"], r["_d"]))
                 d = top["_d"]
-                # Observability for the modal-dim fallback (round-8
-                # advice fix): a majority-corrupt batch can vote its
-                # corrupt length in as d and silently quarantine every
-                # GOOD row of the batch — surface how many rows the
-                # vote rejected so the operator sees the quarantine
-                # instead of a quietly thinner gram table.
+                # Observability for the modal-dim fallback: a
+                # majority-corrupt batch can vote its corrupt length in
+                # as d and silently quarantine every GOOD row of the
+                # batch — surface how many rows the vote rejected so the
+                # operator sees the quarantine instead of a quietly
+                # thinner gram table.
                 n_batch = sum(r["count"] for r in by_len)
                 n_rejected = n_batch - top["count"]
                 if n_rejected:
@@ -345,82 +308,12 @@ def read_gram(
     )
 
 
-def _write_sketch_meta(spark: SparkSession, store_dir: str, meta: dict) -> None:
-    """Stamp the store's frozen parameters (``_sketch_meta.json``,
-    underscore-prefixed so parquet listings ignore it) — the
-    codebook-fingerprint convention applied to parameterized sketch
-    stores: a reader or compactor invoked with a different k would
-    otherwise silently truncate (compact) or silently mis-read the
-    exact-branch cutoff. Idempotent overwrite."""
-    import json as _json
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{store_dir}/_sketch_meta.json")
-    fs = p.getFileSystem(hconf)
-    out = fs.create(p, True)
-    out.write(bytearray(_json.dumps(meta, sort_keys=True).encode()))
-    out.close()
-
-
-def _check_sketch_meta(spark: SparkSession, store_dir: str, expect: dict) -> None:
-    """Refuse to read/compact a sketch store with parameters that do
-    not match its stamp. A store without a stamp (pre-gate layout)
-    passes — the gate protects stamped stores, loudly."""
-    import json as _json
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{store_dir}/_sketch_meta.json")
-    fs = p.getFileSystem(hconf)
-    if not fs.exists(p):
-        return
-    stream = fs.open(p)
-    try:
-        raw = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        ).decode()
-    finally:
-        stream.close()
-    stamped = _json.loads(raw)
-    bad = {k: (stamped.get(k), v) for k, v in expect.items() if stamped.get(k) != v}
-    if bad:
-        raise ValueError(
-            f"sketch store {store_dir} was built with {stamped}; "
-            f"mismatched parameters {bad} would silently corrupt the "
-            f"sketch — pass the store's own parameters"
-        )
-
-
-def _stamp_sketch_store(spark: SparkSession, store_dir: str, meta: dict) -> None:
-    """Stamp a sketch store's frozen parameters SAFELY: check any
-    existing stamp first, write only when absent. Round-8 advice fix —
-    the ``run_*`` entry points used to overwrite the stamp
-    unconditionally, so restarting a stream with a different k (or
-    scale / bin grid) re-stamped the store and defeated the
-    ``_check_sketch_meta`` gate: old partials built under the old
-    parameter would merge under the new one and the read-offs would be
-    silently wrong — exactly the corruption the stamp exists to catch.
-    Now a mismatched restart raises before the stream starts."""
-    import json as _json
-
-    _check_sketch_meta(spark, store_dir, meta)  # raises on mismatch
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{store_dir}/_sketch_meta.json")
-    fs = p.getFileSystem(hconf)
-    if not fs.exists(p):
-        _write_sketch_meta(spark, store_dir, meta)
-
-
 def _committed_batch_ids(spark: SparkSession, checkpoint_dir: str) -> set:
     """Batch ids recorded in the stream's Structured Streaming commit
     log (``{checkpoint}/commits``). A batch present there is never
     re-delivered on restart — the set compaction may safely fold."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/commits")
-    fs = p.getFileSystem(hconf)
+    fs, HPath = _fs(spark, checkpoint_dir)
+    p = HPath(f"{checkpoint_dir}/commits")
     out: set = set()
     if not fs.exists(p):
         return out
@@ -446,27 +339,18 @@ def _recover_fold(spark: SparkSession, delta_dir: str) -> None:
       deleted nothing): the stage is debris, delete it.
 
     Idempotent; assumes a single compactor and atomic directory rename
-    (HDFS/local — on raw S3A the rename widens to a copy, the
-    ``_migrate_delta_layout`` caveat)."""
-    from kafka_streams_spark.streaming.splits_stream import (
-        _fs,
-        _read_json_file,
-    )
-
+    (HDFS/local — on raw S3A the rename widens to a copy)."""
     fs, HPath = _fs(spark, delta_dir)
     stage = HPath(f"{delta_dir}/ingest_batch={_FOLD_STAGE}")
     manifest_str = f"{delta_dir}/{_FOLD_MANIFEST}"
     m = _read_json_file(spark, manifest_str)
 
     def _drop_manifest() -> None:
-        # Delete the manifest AND its .tmp (r10 advice fix): when the
-        # manifest write crashed between completing the tmp and renaming
-        # it, _read_json_file's tmp-heal returns the pin list but the
-        # real file never existed — deleting only the real path left the
-        # stale tmp behind forever, and a LATER crashed compaction would
-        # be "recovered" against the OLD pin list (deleting a committed
-        # -1 / renaming a partial stage in: permanent row loss or double
-        # count).
+        # Delete the manifest AND its .tmp: after a crash between
+        # completing the tmp and renaming it, _read_json_file returns the
+        # tmp's pin list, and a stale tmp left behind would make a LATER
+        # crashed compaction "recover" against the OLD pin list (row loss
+        # or double count).
         for suffix in ("", ".tmp"):
             p = HPath(manifest_str + suffix)
             if fs.exists(p):
@@ -483,8 +367,7 @@ def _recover_fold(spark: SparkSession, delta_dir: str) -> None:
     if fs.exists(stage):
         if fs.exists(final):
             fs.delete(final, True)
-        if not fs.rename(stage, final):
-            raise IOError(f"rename failed: {stage} -> {final}")
+        _rename(fs, stage, final)
     for b in m["pinned"]:
         p = HPath(f"{delta_dir}/ingest_batch={b}")
         if fs.exists(p):
@@ -510,15 +393,13 @@ def _compact_deltas(
     grouped SUM over ``group_cols``/``sum_cols``. EVERY delta store's
     compaction routes through here — one protocol, one place to fix.
 
-    Concurrency contract (round-7 advice fix): the old full-table
-    STATIC overwrite deleted any delta a live micro-batch wrote between
-    the read and the overwrite commit — counts lost permanently (the
-    checkpoint prevents replay). Now the batch-id set is pinned FIRST,
-    the merge reads only those partitions (``isin`` filter), the merged
-    ``-1`` partition is written with DYNAMIC partition overwrite (only
-    ``ingest_batch=-1`` is replaced), and only the pinned batch
-    partitions are deleted afterwards — a delta landing mid-compaction
-    is in neither the merge nor the delete set and survives intact.
+    Concurrency contract: a full-table overwrite would delete any delta
+    a live micro-batch wrote between the read and the commit — counts
+    lost permanently (the checkpoint prevents replay). So the batch-id
+    set is pinned FIRST, the merge reads only those partitions (``isin``
+    filter), and only the pinned partitions are deleted afterwards — a
+    delta landing mid-compaction is in neither the merge nor the delete
+    set and survives intact.
 
     Replay contract: a batch whose foreachBatch write succeeded but
     whose checkpoint COMMIT did not will be re-delivered on restart —
@@ -530,22 +411,20 @@ def _compact_deltas(
     until its commit lands. Without ``checkpoint_dir``, the caller must
     only compact while the stream is stopped AND fully committed.
 
-    Crash safety (r10 review fix): the old protocol dynamically
-    overwrote ``-1`` with the fold and deleted the pinned partitions
-    afterwards — a crash between the two left the folded rows on disk
-    TWICE (in the new ``-1`` and in their partitions), and the next
-    compaction folded them again: permanent double count. Now the fold
-    is STAGED: written to the reader-invisible ``ingest_batch=-2``
-    partition, a pin manifest is persisted only after the stage
-    commits, and the swap (delete old ``-1`` → rename stage in → delete
-    pinned → drop manifest) is finished or unwound by
+    Crash safety: overwriting ``-1`` and then deleting the pinned
+    partitions would leave the folded rows on disk TWICE after a crash
+    between the two, and the next compaction would fold them again. So
+    the fold is STAGED: written to the reader-invisible
+    ``ingest_batch=-2`` partition, a pin manifest is persisted only
+    after the stage commits, and the swap (delete old ``-1`` → rename
+    stage in → delete pinned → drop manifest) is finished or unwound by
     :func:`_recover_fold` at the start of every compaction. No crash
     point re-folds or loses a row.
 
     Epoch translation: the stream's commit log records
     checkpoint-relative batch ids, but partitions live on the store's
-    epoch axis (``_epoch_mapper``); the pin maps committed ids through
-    the store's ``_epochs.json`` offset, and partitions BELOW the
+    epoch axis (``store.epoch_mapper``); the pin maps committed ids
+    through the store's registered epoch offset, and partitions BELOW the
     current generation's offset (abandoned earlier checkpoints —
     starting a new generation supersedes them) always fold.
 
@@ -557,13 +436,6 @@ def _compact_deltas(
     one rename wide. Run compaction from the maintenance path if
     readers need exact values at every instant — documented, not
     hidden."""
-    from kafka_streams_spark.streaming.splits_stream import (
-        _fs,
-        _query_id,
-        _read_json_file,
-        _write_json_file,
-    )
-
     if merge is None:
         gcols, scols = list(group_cols), list(sum_cols)
 
@@ -572,10 +444,6 @@ def _compact_deltas(
                 *[F.sum(c).alias(c) for c in scols]
             )
 
-    from kafka_streams_spark.streaming.splits_stream import (
-        _try_read_parquet,
-    )
-
     _recover_fold(spark, delta_dir)
     df = _try_read_parquet(spark, delta_dir)
     if df is None:
@@ -583,11 +451,7 @@ def _compact_deltas(
     batch_ids = [r[0] for r in df.select("ingest_batch").distinct().collect()]
     if checkpoint_dir is not None:
         committed = _committed_batch_ids(spark, checkpoint_dir)
-        epochs = _read_json_file(spark, f"{delta_dir}/_epochs.json") or {}
-        try:
-            off = int(epochs.get(_query_id(spark, checkpoint_dir), 0))
-        except FileNotFoundError:
-            off = 0  # stream never started from this checkpoint
+        off = _registered_offset(spark, delta_dir, checkpoint_dir)
         # Spark PURGES old commit-log entries (minBatchesToRetain,
         # default 100), so "not listed" does not mean "not committed":
         # the log is sequential, so every id below the oldest RETAINED
@@ -636,8 +500,7 @@ def _compact_deltas(
         fs.delete(final, True)  # superseded: its rows are in the stage
     if _crash_after == "unfold":
         raise RuntimeError("injected crash: after -1 delete")
-    if not fs.rename(HPath(stage_str), final):
-        raise IOError(f"rename failed: {stage_str} -> {final}")
+    _rename(fs, HPath(stage_str), final)
     if _crash_after == "rename":
         raise RuntimeError("injected crash: after rename")
     for i, b in enumerate(pinned):
@@ -784,7 +647,7 @@ def run_histogram_stream(
 
     # The bin grid is a FROZEN parameter of the store: deltas snapped
     # to a different (bin_width, scale) grid would merge into buckets
-    # that mean different value ranges (round-8 advice fix).
+    # that mean different value ranges.
     _stamp_sketch_store(
         spark,
         hist_dir,

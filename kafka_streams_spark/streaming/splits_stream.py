@@ -23,40 +23,24 @@ shape that works when state is 100 TB of corpus):
   candidate join never re-signatures the corpus (the persisted
   write_minhash_index idea, maintained incrementally).
 
-Compaction (r10, judge's top ask): without it every store is a pile of
-per-batch partitions whose count — and, for ``members``, the
-latest-wins window's INPUT — grows linearly with stream lifetime.
-:func:`compact_split_stores` folds closed batches of each store into a
-base snapshot at ``<name>_base/hwm=<N>/`` on the ``compact_balances``
-contract (`streaming/router.py`): only batches strictly below the
-store's newest delta partition fold (Structured Streaming may replay
-the newest after a crash), readers take the max-hwm base plus deltas
-with ``ingest_batch > hwm``, and the already-folded-rows-never-refold
-predicate (``> old_hwm``) makes a crashed compaction converge on
-re-run with no double rows. ``members`` folds with latest-wins
-resolution — the base holds ONE row per node, so the read window's
-input is O(corpus) + O(open deltas), flat in the number of ingested
-batches; the other three fold by plain rebagging (fewer, bigger
-files; ``bands`` repartitioned by ``band_hash``, the candidate join's
-key). The stream's own prior-state reads go through the same
-base-aware reader, so compacting between (or concurrent with)
-micro-batches never changes verdicts.
+Every store is a changelog store (``streaming/store.py``): every read
+excludes the current ``ingest_batch`` partition and every write
+dynamically overwrites ONLY that partition, so a crash-replayed batch
+recomputes the same verdicts against the same prior state and lands the
+same rows. :func:`compact_split_stores` folds each store's closed
+batches into a ``<name>_base/hwm=<N>/`` snapshot with the store's
+hwm-base fold. ``members`` folds with latest-wins resolution — the base
+holds ONE row per node, so the read window's input is O(corpus) +
+O(open deltas), flat in the number of ingested batches; the other
+stores fold by plain rebagging (fewer, bigger files; ``bands``
+repartitioned by ``band_hash``, the candidate join's key). The stream's
+own prior-state reads go through the same base-aware reader, so
+compacting between (or concurrent with) micro-batches never changes
+verdicts. (A fifth, optional store — ``caps/``, the per-batch
+pair-budget audit written when ``pair_budget`` is set — folds the same
+way, keeping each row's batch identity as a ``src_batch`` data column;
+read it back with :func:`read_cap_audit`.)
 
-(A fifth, optional store — ``caps/``, the per-batch pair-budget audit
-written when ``pair_budget`` is set — folds with the same machinery,
-keeping each row's batch identity as a ``src_batch`` data column; read
-it back with :func:`read_cap_audit`.)
-
-Exactly-once under at-least-once delivery: every read excludes the
-current ``ingest_batch`` partition and every write dynamically
-overwrites ONLY that partition, so a crash-replayed batch recomputes
-the same verdicts against the same prior state and lands the same rows.
-``ingest_batch`` is the checkpoint's batch id plus a persisted
-per-checkpoint-generation offset (``_epochs.json``): a FRESH checkpoint
-(lost/corrupt checkpoint recovery) restarts batch ids at 0, and without
-the offset its writes would land below the compaction high-water mark —
-invisible, then deleted, then overwriting surviving partitions (see
-:func:`_epoch_offset`).
 Docs whose ids already hold an assignment are dropped (cross-batch
 re-delivery), and within-batch id duplicates keep the min-text row
 (deterministic under re-partitioned replay).
@@ -83,239 +67,15 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
-from kafka_streams_spark.streaming.sketch_stream import (
-    _check_sketch_meta,
+from kafka_streams_spark.streaming.store import (
+    _latest_hwm,
+    _list_partition_values,
     _stamp_sketch_store,
+    _try_read_parquet,
+    epoch_mapper,
+    fold_into_base,
+    write_batch,
 )
-
-
-def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a store directory, or None when it does not exist yet — and
-    ONLY then (any other failure must fail the batch, not skip the
-    state)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis while the miss is still catchable
-        return df
-    except AnalysisException as e:
-        # ONLY a missing or empty store means "no prior state". Any
-        # OTHER analysis failure (schema/column resolution, corrupt
-        # store metadata) must propagate: swallowing it would silently
-        # discard the standing assignments and re-assign the batch as
-        # if the corpus were new — exactly the leakage/duplication this
-        # module forbids (r10 advice fix). UNABLE_TO_INFER_SCHEMA is
-        # the empty case: a store dir holding only underscore sidecars
-        # (_epochs.json / _sketch_meta.json are persisted BEFORE the
-        # first data write) has no parquet footer to read — that is a
-        # store with no rows yet, not corruption.
-        get_cls = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", None
-        )
-        cls = get_cls() if get_cls else None
-        ok = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-        if cls in ok or any(f"[{c}]" in str(e) for c in ok):
-            return None
-        raise
-
-
-def _fs(spark: SparkSession, path_str: str):
-    """Hadoop FileSystem + Path class for a path — all store listing /
-    deletion goes through this (never os/glob/shutil), so compaction
-    works on whatever filesystem the stream writes to (HDFS/S3A/local),
-    the `_migrate_delta_layout` convention."""
-    jvm = spark._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    return HPath(path_str).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    ), HPath
-
-
-def _list_partition_values(
-    spark: SparkSession, dir_str: str, key: str
-) -> list[int]:
-    """Sorted integer values of ``key=N`` child directories (empty list
-    when the directory does not exist)."""
-    import re
-
-    fs, HPath = _fs(spark, dir_str)
-    statuses = fs.globStatus(HPath(f"{dir_str}/{key}=*"))
-    out = []
-    for st in statuses or []:
-        m = re.search(rf"{key}=(\d+)$", st.getPath().toString())
-        if m and st.isDirectory():
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _committed_hwms(spark: SparkSession, base_dir: str) -> list[int]:
-    """``hwm=N`` snapshot dirs carrying Spark's ``_SUCCESS`` commit
-    marker, sorted. Only COMMITTED snapshots exist as far as the
-    engine is concerned: a compaction that crashed mid-write leaves an
-    uncommitted ``hwm=N`` directory holding partial (or no) rows —
-    trusting it would under-read the folded state AND let the next
-    compaction's cleanup delete delta partitions that were never
-    actually folded (permanent state loss, r10 review fix)."""
-    fs, HPath = _fs(spark, base_dir)
-    return [
-        h
-        for h in _list_partition_values(spark, base_dir, "hwm")
-        if fs.exists(HPath(f"{base_dir}/hwm={h}/_SUCCESS"))
-    ]
-
-
-def _latest_hwm(spark: SparkSession, base_dir: str) -> int | None:
-    hwms = _committed_hwms(spark, base_dir)
-    return max(hwms) if hwms else None
-
-
-def _sweep_base_snapshots(spark: SparkSession, base_dir: str) -> int | None:
-    """Compactor-side snapshot cleanup; returns the surviving hwm.
-
-    Deletes (a) uncommitted ``hwm=N`` dirs — debris from a compaction
-    that crashed mid-write (readers already ignore them via
-    :func:`_committed_hwms`) — and (b) committed snapshots older than
-    the newest — debris from a crash between committing the new base
-    and deleting the superseded one, which the old cleanup path never
-    reclaimed (an unbounded disk leak across crash cycles for
-    corpus-sized stores). Single-compactor assumption, same as the
-    rest of the contract: an uncommitted dir can only be a CRASHED
-    compaction's, never a live concurrent one's."""
-    fs, HPath = _fs(spark, base_dir)
-    committed = _committed_hwms(spark, base_dir)
-    latest = committed[-1] if committed else None
-    for h in _list_partition_values(spark, base_dir, "hwm"):
-        if h not in committed or (latest is not None and h < latest):
-            fs.delete(HPath(f"{base_dir}/hwm={h}"), True)
-    return latest
-
-
-def _read_json_file(spark: SparkSession, path_str: str) -> dict | None:
-    """Small JSON sidecar read via the Hadoop FileSystem API (None when
-    absent). STRICTLY READ-ONLY: when the target is missing but a
-    ``.tmp`` from a crashed :func:`_write_json_file` swap exists, the
-    tmp's content is returned WITHOUT renaming it into place — a
-    reader-side heal would race the writer's own pending rename (and
-    fail a live micro-batch with a spurious IOError); the next write
-    heals the file instead. A tmp that does not parse is a write that
-    crashed mid-create — since the swap's delete only runs after the
-    tmp is complete, the target never existed, so the state is
-    legitimately "absent" (None), not corrupt."""
-    fs, HPath = _fs(spark, path_str)
-    import json as _json
-
-    def _load(path) -> str:
-        stream = fs.open(path)
-        try:
-            return bytes(
-                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            ).decode()
-        finally:
-            stream.close()
-
-    p, tmp = HPath(path_str), HPath(path_str + ".tmp")
-    if fs.exists(p):
-        return _json.loads(_load(p))
-    if fs.exists(tmp):
-        try:
-            return _json.loads(_load(tmp))
-        except ValueError:
-            return None  # partial tmp from a crash mid-create
-    return None
-
-
-def _write_json_file(spark: SparkSession, path_str: str, obj: dict) -> None:
-    """Crash-safe small-JSON write: create ``.tmp``, delete the target,
-    rename — a crash between delete and rename is healed by the reader
-    (see :func:`_read_json_file`)."""
-    fs, HPath = _fs(spark, path_str)
-    import json as _json
-
-    p, tmp = HPath(path_str), HPath(path_str + ".tmp")
-    out = fs.create(tmp, True)
-    out.write(bytearray(_json.dumps(obj, sort_keys=True).encode()))
-    out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        raise IOError(f"rename failed: {tmp} -> {p}")
-
-
-def _query_id(spark: SparkSession, checkpoint_dir: str) -> str:
-    """The StreamingQuery's stable id from ``<checkpoint>/metadata`` —
-    written by Structured Streaming at query start, constant across
-    restarts of the SAME checkpoint, fresh UUID for a new (or wiped)
-    one. The foreachBatch loop runs strictly after query start, so the
-    file always exists by the time a batch reads it."""
-    meta = _read_json_file(spark, f"{checkpoint_dir}/metadata")
-    if meta is None or "id" not in meta:
-        raise FileNotFoundError(
-            f"no streaming-query metadata under {checkpoint_dir}"
-        )
-    return str(meta["id"])
-
-
-def _epoch_offset(
-    spark: SparkSession,
-    state_dir: str,
-    checkpoint_dir: str,
-    batch_id: int,
-    delta_dirs: list[str],
-    base_dirs: list[str],
-) -> int:
-    """Per-checkpoint-generation offset added to Structured Streaming's
-    batch id before it becomes an ``ingest_batch`` partition value.
-
-    Why it must exist (r10 review fix): batch ids restart at 0 on a
-    fresh checkpoint (the canonical lost/corrupt-checkpoint recovery),
-    but the stores outlive the checkpoint. Without an offset a
-    post-compaction fresh run writes partitions ``ingest_batch <= hwm``
-    that are (a) invisible to every reader (the ``> hwm`` predicate),
-    (b) deleted by the next compaction as already-folded debris —
-    permanent loss of genuinely new state — and (c), once the new run's
-    ids catch up, dynamic partition overwrite DESTROYS the surviving
-    pre-crash delta partitions. The offset keeps every checkpoint
-    generation's partition ids strictly above everything already on
-    disk, while replay WITHIN a generation still lands in its own
-    partition (idempotent overwrite), because the mapping is persisted
-    per query id in ``<state_dir>/_epochs.json`` before any state write.
-
-    Resolution order: a registered query id uses its offset forever; an
-    unregistered id over an empty store starts at 0; an unregistered id
-    with ``batch_id > 0`` is a pre-epochs checkpoint resuming (fresh
-    checkpoints always start at 0) and keeps raw ids; otherwise it is a
-    fresh checkpoint over existing state and gets max-on-disk + 1. The
-    one undecidable legacy corner — a PRE-epochs store holding only
-    batch-0 partitions and no base, seen by a brand-new checkpoint's
-    batch 0 — resolves to offset 0, preferring crash-replay healing of
-    a partially written first batch (every post-fix store registers its
-    first query id before writing, so the ambiguity cannot recur)."""
-    qid = _query_id(spark, checkpoint_dir)
-    epochs_path = f"{state_dir}/_epochs.json"
-    epochs = _read_json_file(spark, epochs_path) or {}
-    if qid in epochs:
-        return int(epochs[qid]) + batch_id
-    seen = [
-        b
-        for d in delta_dirs
-        for b in _list_partition_values(spark, d, "ingest_batch")
-    ] + [
-        h for d in base_dirs for h in _list_partition_values(spark, d, "hwm")
-    ]
-    if not seen:
-        offset = 0
-    elif batch_id > 0:
-        offset = 0  # pre-epochs checkpoint resuming mid-stream
-    elif not epochs and max(seen) == 0 and not any(
-        _list_partition_values(spark, d, "hwm") for d in base_dirs
-    ):
-        offset = 0  # legacy batch-0 crash-replay (see docstring)
-    else:
-        offset = max(seen) + 1  # fresh checkpoint over existing state
-    epochs[qid] = offset
-    _write_json_file(spark, epochs_path, epochs)
-    return offset + batch_id
 
 
 def _read_store(
@@ -331,6 +91,8 @@ def _read_store(
     a crashed compaction folded but did not yet delete are excluded by
     the partition-column predicate (pruned at planning time, never
     scanned), so readers racing a compaction see each row exactly once.
+    ``caps`` delta rows get their batch id as ``src_batch``, the column
+    its base keeps.
 
     ``exclude_batch`` additionally hides the replaying batch's own
     delta partition (at-least-once replay idempotence). It never
@@ -343,15 +105,37 @@ def _read_store(
     deltas = _try_read_parquet(spark, f"{store_dir}/{name}")
     hwm = _latest_hwm(spark, f"{store_dir}/{name}_base")
     if deltas is not None:
+        if name == "caps":
+            deltas = deltas.withColumn("src_batch", F.col("ingest_batch"))
         if hwm is not None:
             deltas = deltas.filter(F.col("ingest_batch") > hwm)
         if exclude_batch is not None:
             deltas = deltas.filter(F.col("ingest_batch") != exclude_batch)
     if hwm is None:
         return deltas
-    base = _try_read_parquet(spark, f"{store_dir}/{name}_base/hwm={hwm}")
+    base_path = f"{store_dir}/{name}_base/hwm={hwm}"
+    base = _try_read_parquet(spark, base_path)
+    if base is None:
+        # data files gone between the hwm listing and the read, or an
+        # empty-but-committed snapshot
+        raise FileNotFoundError(
+            f"base snapshot {base_path} is committed but unreadable"
+        )
     base = base.withColumn("ingest_batch", F.lit(hwm))
     return base if deltas is None else deltas.unionByName(base)
+
+
+def _latest_members(members: DataFrame) -> DataFrame:
+    """Resolve the members changelog: the latest batch's row wins per
+    node. Output: (node, cluster_id)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("node").orderBy(F.col("ingest_batch").desc())
+    return (
+        members.withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") == 1)
+        .select("node", "cluster_id")
+    )
 
 
 # per-store fold schema: the data columns a base snapshot keeps. The
@@ -387,106 +171,38 @@ def compact_split_stores(
     spark: SparkSession, store_dir: str
 ) -> dict[str, int | None]:
     """Fold each store's closed delta partitions into a base snapshot at
-    ``<name>_base/hwm=<N>/`` — the ``compact_balances`` pattern applied
-    to the split-assignment state (r10: the one unbounded-growth path
-    the r9 verdict left open). Returns the per-store high-water batch
-    id (None where nothing was foldable yet).
+    ``<name>_base/hwm=<N>/`` with :func:`store.fold_into_base`, the
+    protocol ``compact_balances`` uses. Returns the per-store high-water
+    batch id (None where nothing was foldable yet).
 
-    Safety properties, per store, all inherited from the balances
-    compactor and pinned in tests:
-
-    - only batches STRICTLY below the newest delta partition fold — the
-      newest may be replayed (and partition-overwritten) after a crash;
-    - rows already folded into an old base never refold (the
-      ``> old_hwm`` predicate), so a compaction that crashed after
-      writing the new base but before deleting folded inputs converges
-      on re-run with no duplicate rows;
-    - readers (:func:`_read_store`) take max-hwm base + deltas
-      ``> hwm``, so a compaction running concurrently with the stream
-      (or its own crash debris) never changes query results;
-    - ``members`` folds with latest-batch-wins resolution to ONE row
-      per node — the read window's input stops growing with stream
-      lifetime; the other stores fold by rebagging into fewer, bigger,
-      key-clustered files.
+    ``members`` folds with latest-batch-wins resolution to ONE row per
+    node, so the read window's input stops growing with stream
+    lifetime; the other stores fold by rebagging into fewer, bigger,
+    key-clustered files. Readers (:func:`_read_store`) take max-hwm base
+    + deltas ``> hwm``, so a compaction running concurrently with the
+    stream (or its own crash debris) never changes query results.
     """
-    from pyspark.sql import Window
-
     out: dict[str, int | None] = {}
     for name, cols in _STORE_COLS.items():
         delta_dir = f"{store_dir}/{name}"
-        base_dir = f"{store_dir}/{name}_base"
-        fs, HPath = _fs(spark, delta_dir)
-        batches = _list_partition_values(spark, delta_dir, "ingest_batch")
-        # sweep snapshot debris first: uncommitted (crashed-mid-write)
-        # hwm dirs and superseded committed bases a crash left behind;
-        # what survives is the authoritative old hwm
-        old_hwm = _sweep_base_snapshots(spark, base_dir)
-        if name == "caps" and not batches and old_hwm is None:
+
+        def build(old_hwm: int | None, hwm: int) -> DataFrame:
+            # after the fold's sweep the newest committed base IS old_hwm,
+            # so the base-aware read yields it plus deltas > old_hwm
+            rows = _read_store(spark, store_dir, name).filter(
+                F.col("ingest_batch") <= hwm
+            )
+            if name == "members":
+                rows = _latest_members(rows)
+            return rows.select(*cols).repartition(F.col(_STORE_KEY[name]))
+
+        hwm = fold_into_base(spark, delta_dir, f"{delta_dir}_base", build)
+        if name == "caps" and hwm is None and not _list_partition_values(
+            spark, delta_dir, "ingest_batch"
+        ):
             continue  # audit store only exists when pair_budget is set
-        if len(batches) < 2:
-            out[name] = old_hwm
-            continue
-        hwm = batches[-2]
-        if old_hwm is not None and hwm <= old_hwm:
-            # nothing newly closed; finish a crashed compaction's
-            # cleanup (readers already exclude these via > old_hwm)
-            for b in batches[:-1]:
-                if b <= old_hwm:
-                    fs.delete(
-                        HPath(f"{delta_dir}/ingest_batch={b}"), True
-                    )
-            out[name] = old_hwm
-            continue
-        deltas = spark.read.parquet(delta_dir).filter(
-            (F.col("ingest_batch") <= hwm)
-            & (
-                F.col("ingest_batch")
-                > (old_hwm if old_hwm is not None else -1)
-            )
-        )
-        if name == "caps":
-            # the audit row's identity is the batch that wrote it
-            deltas = deltas.withColumn("src_batch", F.col("ingest_batch"))
-        closed = deltas.select(*cols, "ingest_batch")
-        if old_hwm is not None:
-            closed = closed.unionByName(
-                spark.read.parquet(f"{base_dir}/hwm={old_hwm}")
-                .select(*cols)
-                .withColumn("ingest_batch", F.lit(old_hwm))
-            )
-        if name == "members":
-            w = Window.partitionBy("node").orderBy(
-                F.col("ingest_batch").desc()
-            )
-            folded = (
-                closed.withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") == 1)
-                .select(*cols)
-            )
-        else:
-            folded = closed.select(*cols)
-        (
-            folded.repartition(F.col(_STORE_KEY[name]))
-            .write.mode("overwrite")
-            .parquet(f"{base_dir}/hwm={hwm}")
-        )
-        # drop folded inputs only AFTER the new base is committed
-        if old_hwm is not None and old_hwm != hwm:
-            fs.delete(HPath(f"{base_dir}/hwm={old_hwm}"), True)
-        for b in batches[:-1]:
-            fs.delete(HPath(f"{delta_dir}/ingest_batch={b}"), True)
         out[name] = hwm
     return out
-
-
-def _write_partition(df: DataFrame, path: str, batch_id: int) -> None:
-    (
-        df.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(path)
-    )
 
 
 def read_split_assignments(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -506,53 +222,24 @@ def read_cluster_members(spark: SparkSession, store_dir: str) -> DataFrame:
     (node, cluster_id). Base-aware: after :func:`compact_split_stores`
     the window's input is the one-row-per-node base + open deltas —
     flat in stream lifetime, not the full relabel history."""
-    from pyspark.sql import Window
-
     m = _read_store(spark, store_dir, "members")
     if m is None:
         raise FileNotFoundError(f"no members store under {store_dir}")
-    w = Window.partitionBy("node").orderBy(F.col("ingest_batch").desc())
-    return (
-        m.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select("node", "cluster_id")
-    )
+    return _latest_members(m)
 
 
 def read_cap_audit(spark: SparkSession, store_dir: str) -> DataFrame:
     """The pair-budget audit trail: one row per priced batch —
     (batch_id, priced_pairs, stop_band_occupancy, admitted_pairs,
-    applied, n_stop_bands). Base-aware: folded rows carry their
-    identity in ``src_batch`` (stamped at fold time), open delta rows
-    in their ``ingest_batch`` partition value. Raises when the stream
-    never priced (no ``pair_budget``)."""
-    hwm = _latest_hwm(spark, f"{store_dir}/caps_base")
-    deltas = _try_read_parquet(spark, f"{store_dir}/caps")
-    if deltas is not None:
-        if hwm is not None:
-            deltas = deltas.filter(F.col("ingest_batch") > hwm)
-        deltas = deltas.select(
-            F.col("ingest_batch").alias("batch_id"),
-            *_STORE_COLS["caps"][1:],
-        )
-    if hwm is None:
-        if deltas is None:
-            raise FileNotFoundError(f"no caps store under {store_dir}")
-        return deltas
-    base_df = _try_read_parquet(spark, f"{store_dir}/caps_base/hwm={hwm}")
-    if base_df is None:
-        # committed hwm dir with no readable data files (deleted between
-        # _latest_hwm's listing and this read, or empty-but-_SUCCESS
-        # debris) — fail with the store path, not AttributeError on
-        # None (r10 advice fix)
-        raise FileNotFoundError(
-            f"caps base snapshot hwm={hwm} under {store_dir}/caps_base "
-            f"is committed but unreadable"
-        )
-    base = base_df.select(
+    applied, n_stop_bands). Base-aware: every row carries the batch
+    that priced it in ``src_batch`` (stamped at fold time for folded
+    rows). Raises when the stream never priced (no ``pair_budget``)."""
+    caps = _read_store(spark, store_dir, "caps")
+    if caps is None:
+        raise FileNotFoundError(f"no caps store under {store_dir}")
+    return caps.select(
         F.col("src_batch").alias("batch_id"), *_STORE_COLS["caps"][1:]
     )
-    return base if deltas is None else deltas.unionByName(base)
 
 
 def run_split_assignment_stream(
@@ -574,8 +261,8 @@ def run_split_assignment_stream(
     the StreamingQuery; state lands under ``store_dir`` (see module
     docstring for the four stores and the idempotence argument).
 
-    ``pair_budget`` (r10, the auto_join consumes-the-audit pattern
-    applied to the stream's dominant stage): when set, every batch
+    ``pair_budget`` (the auto_join consumes-the-audit pattern applied
+    to the stream's dominant stage): when set, every batch
     prices the new×existing banded candidate join BEFORE running it
     (:func:`~kafka_streams_spark.operators.dedup.band_pair_price` over
     the batch's band keys vs the standing index — one column-pruned
@@ -619,7 +306,6 @@ def run_split_assignment_stream(
         "val_256": val_256,
         "pair_budget": pair_budget,
     }
-    _check_sketch_meta(spark, store_dir, meta)
     _stamp_sketch_store(spark, store_dir, meta)
 
     a_dir = f"{store_dir}/assignments"
@@ -633,9 +319,13 @@ def run_split_assignment_stream(
         .json(source_dir)
     )
 
-    # per-query-run cache for the epoch offset: resolved once from
-    # _epochs.json on the first batch, constant for the process lifetime
-    _epoch_cache: dict[str, int] = {}
+    effective_batch = epoch_mapper(
+        spark,
+        store_dir,
+        checkpoint_dir,
+        [f"{store_dir}/{n}" for n in _STORE_COLS],
+        [f"{store_dir}/{n}_base" for n in _STORE_COLS],
+    )
 
     def assign(batch_df: DataFrame, raw_batch_id: int) -> None:
         from kafka_streams_spark.functions.partitioning import (
@@ -643,21 +333,8 @@ def run_split_assignment_stream(
         )
         from kafka_streams_spark.operators.dedup import dedup_exact_rows
 
-        # remap the checkpoint-relative batch id onto the store's own
-        # monotone ingest_batch axis (fresh-checkpoint safety — see
-        # _epoch_offset); all reads/writes below use the effective id
-        if "offset" not in _epoch_cache:
-            _epoch_cache["offset"] = _epoch_offset(
-                spark,
-                store_dir,
-                checkpoint_dir,
-                raw_batch_id,
-                delta_dirs=[
-                    f"{store_dir}/{n}" for n in _STORE_COLS
-                ],
-                base_dirs=[f"{store_dir}/{n}_base" for n in _STORE_COLS],
-            ) - raw_batch_id
-        batch_id = _epoch_cache["offset"] + raw_batch_id
+        # every read and write below uses the store's ingest_batch axis
+        batch_id = effective_batch(raw_batch_id)
 
         # deterministic within-batch id dedup (min (text, source) row
         # wins), then drop cross-batch re-deliveries: an id that already
@@ -733,7 +410,7 @@ def run_split_assignment_stream(
                 "priced_pairs bigint, stop_band_occupancy bigint, "
                 "admitted_pairs bigint, applied boolean, n_stop_bands bigint",
             )
-            _write_partition(cap_row, f"{store_dir}/caps", batch_id)
+            write_batch(cap_row, f"{store_dir}/caps", batch_id)
 
         # --- pair stage: new×new + verified new×existing ---
         nn = minhash_near_duplicates(
@@ -772,16 +449,7 @@ def run_split_assignment_stream(
         # subgraph, so merges relabel ALL their members, not just the
         # endpoints the new pairs happened to hit.
         if prior_m is not None and ne is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("node").orderBy(
-                F.col("ingest_batch").desc()
-            )
-            cur_m = materialize_shared(
-                prior_m.withColumn("_r", F.row_number().over(w))
-                .filter(F.col("_r") == 1)
-                .select("node", "cluster_id")
-            )
+            cur_m = materialize_shared(_latest_members(prior_m))
             touched = (
                 ne.select(F.col("id_b").alias("node"))
                 .distinct()
@@ -811,7 +479,7 @@ def run_split_assignment_stream(
         )
 
         # --- state writes, all into THIS batch's partitions ---
-        _write_partition(assigned, a_dir, batch_id)
+        write_batch(assigned, a_dir, batch_id)
         # members changelog: every labeled node (new docs + relabeled
         # old members) plus singleton self-rows for unpaired new docs
         singles = (
@@ -819,11 +487,11 @@ def run_split_assignment_stream(
             .join(labels.select("node"), "node", "left_anti")
             .select("node", F.col("node").alias("cluster_id"))
         )
-        _write_partition(labels.unionByName(singles), m_dir, batch_id)
-        _write_partition(
+        write_batch(labels.unionByName(singles), m_dir, batch_id)
+        write_batch(
             batch.select("doc_id", "source", "text"), d_dir, batch_id
         )
-        _write_partition(new_bands, b_dir, batch_id)
+        write_batch(new_bands, b_dir, batch_id)
 
     return (
         raw.writeStream.foreachBatch(assign)

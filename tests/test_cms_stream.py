@@ -1054,10 +1054,8 @@ def test_cms_empty_store_reads_and_compact_cms(spark, tmp_path):
     with the same stamp gate as its siblings."""
     import pytest as _pt
 
-    from kafka_streams_spark.streaming.sketch_stream import (
-        _stamp_sketch_store,
-        compact_cms,
-    )
+    from kafka_streams_spark.streaming.sketch_stream import compact_cms
+    from kafka_streams_spark.streaming.store import _stamp_sketch_store
 
     src = str(tmp_path / "src")
     sketch = str(tmp_path / "sketch")
