@@ -134,8 +134,8 @@ def spread(df: DataFrame, by: str | None = None) -> DataFrame:
 
     Small inputs (one parquet file → one partition) otherwise serialize
     the whole downstream pipeline onto a single task. The repartition is
-    applied only when the plan's current partitioning is below the
-    default parallelism, so at real scale — where scans already produce
+    applied only when the plan's current partitioning is below
+    :func:`floor_width`, so at real scale — where scans already produce
     thousands of splits — this is a no-op and costs no shuffle.
 
     The partition-count probe (`.rdd.getNumPartitions`) runs ONLY on

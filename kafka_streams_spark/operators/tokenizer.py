@@ -171,8 +171,11 @@ def bpe_apply(
     mapInPandas, merges shipped by value in the closure (bounded —
     n_merges entries), per-distinct-word encode cache (vocabularies
     repeat heavily, so each distinct word pays the merge walk once per
-    batch worker). Map-only: no shuffle, the 100 TB application cost
-    is exactly one pass.
+    batch worker). Map-only: the encode adds no shuffle, so the 100 TB
+    application cost is exactly one pass. An input with fewer
+    partitions than :func:`~kafka_streams_spark.functions.partitioning.floor_width`
+    gets ``spread()``'s one round-robin widening first — a no-op at
+    real scale, where scans already exceed the floor.
 
     Output: (id, n_words, n_pieces, pieces array<string>) — pieces in
     document order; n_pieces/n_words is the tokenizer's fertility.
@@ -250,9 +253,9 @@ def bpe_apply(
                 }
             )
 
-    # r14: parallelism floor on the Python-stage input — a single-file
-    # scan otherwise runs the whole encode pass on one worker (the
-    # minhash_signatures finding); no-op at real scale.
+    # parallelism floor on the Python-stage input: a single-file scan
+    # otherwise runs the whole encode pass on one worker; no-op at real
+    # scale, where the input already has floor_width partitions.
     from kafka_streams_spark.functions.partitioning import spread
 
     return spread(docs.select(id_col, text_col)).mapInPandas(

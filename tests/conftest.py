@@ -13,6 +13,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from kafka_streams_spark import get_spark
 
+    # shuffle_partitions=8 makes the session's floor_width max(cores, 8):
+    # a plan pin must not assume a local list input already meets it.
     spark = get_spark(app_name="kafka_streams_spark-tests", shuffle_partitions=8)
     yield spark
 

@@ -77,21 +77,29 @@ def test_spark_train_equals_reference_on_exact_counts(spark):
 
 def test_bpe_apply_matches_reference_encoder_and_is_map_only(spark):
     """The Arrow encode must equal encode_word_reference word by word,
-    and the plan must contain no exchange (map-only application)."""
+    and the encode must add no exchange of its own (map-only
+    application). An input already at floor_width gets a plan with no
+    exchange at all; an input below it gets exactly spread()'s one
+    round-robin widening to floor_width and no hash/range/single
+    shuffle. The session's floor is max(cores, 8), so a local list
+    input meets it only on hosts with 8 or more cores — both widths
+    are built explicitly to check the same thing on every host."""
+    from kafka_streams_spark.functions.partitioning import floor_width
     from kafka_streams_spark.operators.tokenizer import (
         bpe_apply,
         bpe_train,
         encode_word_reference,
     )
+    from kafka_streams_spark.plans.audit import audit
 
-    docs = spark.createDataFrame(
-        [(1, "low lower lowest"), (2, "new newest LOWER"), (3, "")],
-        "doc_id bigint, text string",
-    )
+    rows = [(1, "low lower lowest"), (2, "new newest LOWER"), (3, "")]
+    schema = "doc_id bigint, text string"
+    width = floor_width(spark)
+    docs = spark.createDataFrame(spark.sparkContext.parallelize(rows, width), schema)
     merges = bpe_train(docs, n_merges=10, top_words=100)
     ranks = {p: i for i, p in enumerate(merges)}
     out = {r["doc_id"]: r for r in bpe_apply(docs, merges).collect()}
-    for doc_id, text in [(1, "low lower lowest"), (2, "new newest LOWER"), (3, "")]:
+    for doc_id, text in rows:
         wordlist = text.lower().split()
         want: list[str] = []
         for w in wordlist:
@@ -101,6 +109,13 @@ def test_bpe_apply_matches_reference_encoder_and_is_map_only(spark):
         assert out[doc_id]["n_pieces"] == len(want)
     plan = bpe_apply(docs, merges)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+    # under the floor: the only exchange allowed is spread()'s widening
+    narrow = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    a = audit(bpe_apply(narrow, merges))
+    assert a.num_hash_exchanges == 0, a.plan
+    assert a.num_exchanges == 1, a.plan
+    assert a.plan.count(f"Exchange RoundRobinPartitioning({width})") == 1, a.plan
 
 
 def test_pair_counts_match_model(spark):
