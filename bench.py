@@ -5,31 +5,18 @@
     {"metric": "...", "value": N, "unit": "sec", "n_queries": M,
      "queries": {<top-5 slowest>}, "detail": "BENCH_DETAIL.json", "sf": ...}
 
-The FULL per-query map (plus per-query sample counts) is written to
-``BENCH_DETAIL.json`` next to this file — the stdout line is kept small
-because the driver's tail capture truncated round 4's ~4 KB line
-(BENCH_r04.json ``parsed: null``).
+The full per-query map (with per-query sample counts, the timed order
+and the calibration anchors) goes to ``BENCH_DETAIL.json`` next to
+this file; the stdout line stays small so a tail capture cannot
+truncate it (ROUND4_NOTES.md).
 
-Each query materializes through the `noop` sink — full execution, no
-driver-side collect cost. Session startup and the warmup query are
-excluded from per-query numbers, and each query is timed as the best
-of at least three back-to-back runs (four under 0.8 s): the first run
-pays one-time JVM/codegen compilation (~2s on e.g. the 64-aggregate
-MinHash signature) that amortizes away in any long-running deployment,
-so steady-state is the number that predicts cluster throughput; the
-extra samples give the min enough power to reject transient host-noise
-windows (r11: a contiguous 2-4x inflation block polluted both samples
-of every min-of-2 record inside it).
-
-METHODOLOGY PIN (round-over-round comparability): since round 3 every
-timed query runs against a CLEAN cache (`clearCache()` before each
-run — see run()). Round 1/2 numbers were measured with a leaked
-`persist()` warm in memory, which deflated some timings by 3-6 s;
-r01/r02 BENCH files are therefore NOT directly comparable to r03+ on
-cache-sensitive queries (dedup_token_jaccard is the documented case:
-2.75 s warm in r01 vs 5.35 s honest-cold in r03). Diff rounds with
-tools/bench_diff.py and read flagged deltas against this note before
-calling them regressions.
+Each query is timed with the ``tools/timing.py`` protocol (clean
+cache, build, ``noop`` write) after its session warmup, as the best of
+three back-to-back runs, four under 0.8 s: the min drops the first
+run's one-time codegen and transient host noise (ROUND11_NOTES.md).
+Records before r03 predate the clean-cache pin and are not comparable
+on cache-sensitive queries (ROUND3_NOTES.md); diff rounds with
+``tools/bench_diff.py``.
 """
 
 from __future__ import annotations
@@ -38,7 +25,6 @@ import json
 import os
 import random
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -232,27 +218,31 @@ BENCH_QUERIES = [
 ]
 
 
-def next_round_from_artifacts() -> int:
-    """Next round number inferred from the highest BENCH_r{N}.json in
-    the repo. Shared with tools/scale_check.py's panel record naming —
-    one definition, or the two round counters silently diverge when
-    the record-naming scheme changes (r13 review finding)."""
+def bench_round_files() -> list[tuple[int, str]]:
+    """Sorted ``(round, filename)`` of the BENCH_r{N}.json records in
+    the repo; the filename keeps its zero padding (BENCH_r09.json)."""
     import glob
     import re
 
     here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
+    return sorted(
+        (int(m.group(1)), os.path.basename(p))
         for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
         if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return (max(rounds) + 1) if rounds else 0
+    )
+
+
+def next_round_from_artifacts() -> int:
+    """Next round number: one past the highest BENCH_r{N}.json. Shared
+    with tools/scale_check.py's panel record naming, so the two round
+    counters cannot diverge."""
+    rounds = bench_round_files()
+    return rounds[-1][0] + 1 if rounds else 0
 
 
 def _order_seed() -> int:
     """Seed for the per-round order rotation: SPARK_GRAFT_BENCH_SEED if
-    set (A/B pairs pin it), else the next round number inferred from
-    the highest BENCH_r{N}.json already in the repo."""
+    set (A/B pairs pin it), else the next round number."""
     env = os.environ.get("SPARK_GRAFT_BENCH_SEED")
     if env is not None:
         try:
@@ -295,12 +285,12 @@ def _calibration_query(spark):
 def main() -> None:
     import __spark_entry__ as e
     from kafka_streams_spark import get_spark
+    from tools.timing import best_of, timed, warm
 
     spark = get_spark(app_name="kafka_streams_spark-bench")
     qs = e.queries()
-    # Fail fast on an unregistered bench name: discovered mid-run (at
-    # its shuffled position) it would discard the whole multi-minute
-    # run with a bare KeyError and no partial output (r10 review fix).
+    # Fail fast on an unregistered name: found at its shuffled position
+    # it would discard the whole run (ROUND10_NOTES.md).
     missing = [q for q in BENCH_QUERIES if q not in qs]
     if missing:
         raise SystemExit(
@@ -308,94 +298,32 @@ def main() -> None:
             f"queries(): {missing}"
         )
 
-    def run(name: str) -> float:
-        # Evict caches left by prior queries (e.g. the prefix-Jaccard
-        # posting table persists for its self-join): leaked storage
-        # blocks otherwise shrink unified execution memory and inflate
-        # every LATER query's time — measured +3-6 s on the minhash
-        # query when it follows the prefix form. Each query is timed
-        # against a clean cache, like a fresh job on a cluster.
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    def build(name: str):
+        return lambda: qs[name](spark, SF_DIR)
 
-    run("payments_balances")  # warmup: JVM/codegen/parquet-footer caches
-    # Arrow warmup: the first pandas-UDF/mapInPandas query otherwise pays
-    # Python-worker pool startup (measured: seconds at local[32]) — that
-    # cost belongs to the session, not whichever Arrow query runs first.
-    run("repetition_stats")
+    def calibrate() -> float:
+        # the pinned host-speed anchor, min-of-3 like every query
+        return round(best_of(spark, lambda: _calibration_query(spark), 3), 3)
 
-    # Host-speed anchor, timed with the exact query protocol (clean
-    # cache, min-of-3 — it sits in the jitter-sensitive band).
-    def run_cal() -> float:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _calibration_query(spark).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    warm(spark, qs, SF_DIR)
+    calibration = calibrate()
 
-    calibration = round(min(run_cal(), run_cal(), run_cal()), 3)
-
-    # Seeded per-round rotation of the timed order (r9 verdict item 3):
-    # with a FIXED order, query identity and list position are
-    # confounded — new queries always run last, where sustained-load
-    # throttle is worst, so their first record is inflated and
-    # bench_diff can only model the drift (anchor interpolation), not
-    # cancel it. A per-round permutation makes every query visit every
-    # position across rounds, so position-correlated drift averages out
-    # in round-over-round diffs. The seed defaults to the next round
-    # number (max existing BENCH_r{N}.json + 1 — deterministic within a
-    # round, rotates across rounds) and is recorded alongside `order`;
-    # SPARK_GRAFT_BENCH_SEED pins it for same-code A/B pairs.
+    # Seeded rotation of the timed order: every query visits every
+    # position across rounds, so in-run drift averages out in
+    # round-over-round diffs (ROUND10_NOTES.md, VERDICT.md).
     order_seed = _order_seed()
     rotated = list(BENCH_QUERIES)
     random.Random(order_seed).shuffle(rotated)
-    # Discarded suite-query burn-in (r12 verdict item 3): the two named
-    # warmups above cover JVM/codegen/Arrow startup, but the first few
-    # TIMED positions still ran measurably slow in two consecutive
-    # driver records (r11: pos 0; r12: pos 1 at 3.6x normalized) — a
-    # start band that only the single position-0 anchor could model.
-    # Running one real suite query and discarding its time absorbs the
-    # residual ramp-up before any timed sample. The burn-in query is
-    # FIXED (r13 ADVICE: burning in with rotated[0] warmed whichever
-    # query the rotation put first, so the position-0 query measured
-    # slightly warmer than the rest and the beneficiary rotated with
-    # the round seed — a round-over-round diff could read the
-    # previously-position-0 query as mildly regressed). Re-running the
-    # Arrow warmup keeps any residual warmth bias constant across
-    # rounds, where diffs cancel it.
-    run("repetition_stats")
-    # The anchor is re-timed AFTER the query loop (see below):
-    # sustained-load throttle develops DURING a 160+-query run (r9
-    # measured thirds of one run at 0.87x/1.03x/1.34x vs a sibling
-    # run), so a start-only anchor under-reports the drift that hits
-    # late-list queries. start/end bracket the run.
+    # Discarded burn-in on a FIXED query: absorbs the ramp-up that kept
+    # the first timed positions slow, without favouring whichever query
+    # the rotation puts first (ROUND13_NOTES.md).
+    timed(spark, build("repetition_stats"))
 
     times: dict[str, float] = {}
     samples: dict[str, int] = {}
-    # Mid-run calibration probes (r11 verdict item 2): the start/end
-    # anchors bracket the run but cannot LOCALIZE a transient host-noise
-    # window — the r11 driver record had 11 of its 12 >2x flags inside a
-    # contiguous position-115-135 block where sub-second queries
-    # inflated uniformly 2-4x, invisible to both anchors. Re-timing the
-    # pinned anchor every PROBE_EVERY positions gives tools/bench_diff.py
-    # a piecewise drift profile: each query normalizes against the
-    # anchors that bracket ITS position, so a mid-run window is divided
-    # out instead of flagged as 11 fake regressions.
-    # An extra probe early in the run (r12 verdict item 3): probes at
-    # every 25 leave positions 1-24 normalized by the single start
-    # anchor alone, and both the r11 and r12 driver records produced
-    # their only hard drift flag in that band (pos 0 / pos 1). One
-    # probe at position 10 brackets the start band from both sides.
-    # A late probe near the END of the run (r13 verdict item 3,
-    # symmetric to the position-10 start-band probe): probes at every
-    # 25 leave the last len%25 positions normalized against the single
-    # end anchor alone, exactly where sustained-load throttle peaks —
-    # the r13 driver record's end anchor read 1.813 s vs probe-150's
-    # 0.699 s (2.1x in-run drift developing after the last probe), so
-    # ~24 late-list queries carried a drift estimate extrapolated from
-    # one point. One probe ~12 positions before the end brackets the
-    # end band from both sides.
+    # Anchor probes every PROBE_EVERY positions, plus one in the start
+    # band and one near the end, give bench_diff a piecewise drift
+    # profile to normalize each query against (ROUND11-13_NOTES.md).
     PROBE_EVERY = 25
     EARLY_PROBE = 10
     late_probe = max(len(rotated) - 12, 0)
@@ -404,54 +332,35 @@ def main() -> None:
         if pos == EARLY_PROBE or pos == late_probe or (
             pos and pos % PROBE_EVERY == 0
         ):
-            # Probes use the same min-of-3 protocol as the anchors and
-            # every query (r12 ADVICE): min-of-2 has no power against a
-            # noise window, and one inflated probe raises cal_at for
-            # the ~25 queries it brackets.
-            cal_probes.append(
-                [pos, round(min(run_cal(), run_cal(), run_cal()), 3)]
-            )
-        # Min-of-N only rejects scheduler/throttle noise with enough N.
-        # Floor is 3 samples for EVERY query (r11 verdict item 3: the
-        # round's biggest flagged movers all carried samples=2, so a
-        # noise window polluted both samples and the min had no power);
-        # the sub-0.8 s band — worst RELATIVE jitter, spreads to 3x
-        # with identical code (ROUND4_NOTES §6b) — gets a fourth.
-        t = min(run(name), run(name), run(name))
+            cal_probes.append([pos, calibrate()])
+        # min-of-3 for every query; the sub-0.8 s band, worst relative
+        # jitter, gets a fourth sample (ROUND4_NOTES.md, ROUND11_NOTES.md)
+        t = best_of(spark, build(name), 3)
         samples[name] = 3
         if t < 0.8:
-            t = min(t, run(name))
+            t = min(t, timed(spark, build(name)))
             samples[name] = 4
         times[name] = round(t, 3)
 
-    calibration_end = round(min(run_cal(), run_cal(), run_cal()), 3)
+    # start and end anchors bracket the run: throttle builds up during
+    # it (ROUND9_NOTES.md)
+    calibration_end = calibrate()
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    # The full per-query map goes to a repo artifact, NOT stdout: the
-    # driver's tail capture truncated round 4's single ~4 KB JSON line
-    # (BENCH_r04.json parsed: null — round-4 verdict #3). The final
-    # stdout line stays compact (~bounded by the top-5 slowest), so it
-    # parses whatever the capture window is; tools/bench_diff.py prefers
-    # the detail artifact when present. `samples` records the per-query
-    # min-of-N protocol (3, or 4 below 0.8 s — r11 verdict item 3) so
-    # diffs can tell protocol changes from performance changes.
     detail = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "calibration_sec": calibration,
         "calibration_end_sec": calibration_end,
-        # [position, sec] anchors re-timed every PROBE_EVERY queries —
-        # bench_diff interpolates piecewise over start+probes+end
+        # [position, sec]; bench_diff interpolates over start+probes+end
         "calibration_probes": cal_probes,
-        # timed order — sort_keys kills dict order, and per-position
-        # anchor interpolation (bench_diff) needs to know WHERE in the
-        # run each query sat: in-run throttle is position-correlated
-        # (measured thirds 0.87x/1.03x/1.34x within one r9 run)
+        # the timed order (sort_keys drops dict order): bench_diff's
+        # per-position anchor interpolation needs each query's position
         "order": list(times),
         "order_seed": order_seed,
         "queries": times,
@@ -459,14 +368,8 @@ def main() -> None:
         "sf": sf_val,
     }
     here = os.path.dirname(os.path.abspath(__file__))
-    # Two copies: the fixed name (same-round diffs, the judge's
-    # git-diffed artifact) AND a seed-stamped one. The fixed file is
-    # overwritten by EVERY run, so a cross-round diff used to silently
-    # collapse the older record to its compact top-5 subset the moment
-    # a newer run landed — the regression gate then covered ~5 of 172
-    # queries (r10 review fix). The seed defaults to the round number,
-    # so BENCH_r{N}.json's full map survives as BENCH_DETAIL_r{N}.json
-    # and tools/bench_diff.py resolves it by filename.
+    # The fixed name is overwritten by every run; the seed-stamped copy
+    # keeps each round's full map for cross-round diffs (ROUND10_NOTES.md).
     for name in ("BENCH_DETAIL.json", f"BENCH_DETAIL_r{order_seed}.json"):
         with open(os.path.join(here, name), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)

@@ -1,5 +1,6 @@
-"""Source lints over engine code: each turns a class of bug into one that
-fails here when it is written, the ``global-window-bounded`` pattern of
+"""Source lints over engine code and the measuring tools (``bench.py``,
+``tools/``): each turns a class of bug into one that fails here when it
+is written, the ``global-window-bounded`` pattern of
 ``tests/test_plan_audit.py``. Pure AST scans, no Spark session."""
 
 from __future__ import annotations
@@ -78,6 +79,53 @@ def test_changelog_protocol_only_in_store():
     )
     # the lint must see the owner's own sites, or it has rotted
     assert in_store >= 1, "no protocol site found in streaming/store.py"
+
+
+# The measuring tools share one timed-run protocol. perfbench/ is not
+# scanned: its timing loop is the benchmark's own, and its files stay
+# fixed so that benchmark runs remain comparable.
+REPO = ROOT.parent
+TIMING = REPO / "tools" / "timing.py"
+
+
+def _timing_sites(tree: ast.AST) -> list[tuple[int, str]]:
+    """A ``clearCache`` call, the ``"noop"`` sink name, or a program kept
+    as a string that calls ``clearCache(``."""
+    docs = _docstrings(tree)
+    sites = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "clearCache":
+            sites.append((node.lineno, "clearCache"))
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+        ):
+            if node.value == "noop":
+                sites.append((node.lineno, '"noop"'))
+            elif "clearCache(" in node.value:
+                sites.append((node.lineno, "clearCache( in a string"))
+    return sites
+
+
+def test_timed_run_protocol_has_one_owner():
+    """The timed-run protocol — clean cache, build, ``noop`` write — has
+    one owner, ``tools/timing.py``. A bench or tool that times a query
+    its own way fails here: call ``timed``/``best_of``/``warm`` or
+    ``time_in_child`` instead."""
+    bad, in_owner = [], 0
+    for f in [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]:
+        sites = _timing_sites(ast.parse(f.read_text(), filename=str(f)))
+        if f == TIMING:
+            in_owner = len(sites)
+            continue
+        bad += [f"{f.relative_to(REPO)}:{ln}: {what}" for ln, what in sites]
+    assert not bad, (
+        "timed-run protocol outside tools/timing.py (use its helpers):\n"
+        + "\n".join(bad)
+    )
+    # the lint must see the owner's own sites, or it has rotted
+    assert in_owner >= 1, "no protocol site found in tools/timing.py"
 
 
 RANK_FNS = {"row_number", "rank", "dense_rank"}

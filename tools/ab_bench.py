@@ -15,11 +15,10 @@ Usage:
 Protocol (the r10 ROUND10_NOTES Section 17 methodology, now a tool):
   - `git worktree add` the old commit at /tmp/ab_old_<commit> (reused
     if present; removed only with --fresh).
-  - Each iteration launches one subprocess per side (alternating
-    old-first/new-first per iteration so session-order bias cancels
-    too); the subprocess starts a session, runs the standard bench
-    warmups, then times each query with the bench protocol (clean
-    cache, best-of-2 back-to-back) and prints one JSON line.
+  - Each iteration times each side in its own fresh session
+    (`tools/timing.py` `time_in_child`: its warmup, then best-of-2 per
+    query), alternating old-first/new-first per iteration so
+    session-order bias cancels too.
   - The final per-query number is the MIN across iterations — the
     bench.py min-of-N noise model, with N = --iters.
 
@@ -36,64 +35,10 @@ import os
 import subprocess
 import sys
 
+from timing import time_in_child
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
-
-RUNNER = r"""
-import json, os, sys, time
-
-repo = sys.argv[1]
-queries = sys.argv[2].split(",")
-sf_dir = sys.argv[3]
-sys.path.insert(0, repo)
-os.chdir(repo)
-
-import __spark_entry__ as e
-from kafka_streams_spark import get_spark
-
-spark = get_spark(app_name="ab-bench")
-qs = e.queries()
-
-def run(name):
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-# bench.py warmup protocol: JVM/codegen/parquet-footer + Arrow pool.
-# Partial scale dirs (testdata_sf1 carries only documents/embeddings —
-# the scale panel's corpus tables) lack events.parquet, so the
-# payments warmup falls back to the panel's own docs-only warmup
-# query; the Arrow-pool warmup (repetition_stats) reads documents and
-# works everywhere.
-try:
-    run("payments_balances")
-except Exception:
-    run("minhash_jaccard_est")
-run("repetition_stats")
-
-out = {}
-for name in queries:
-    out[name] = round(min(run(name), run(name)), 3)
-print("ABRESULT " + json.dumps(out))
-"""
-
-
-def _side_run(repo: str, queries: list[str], sf_dir: str) -> dict[str, float]:
-    env = dict(os.environ)
-    # keep the bench session shape: local[32] via the engine default
-    proc = subprocess.run(
-        [sys.executable, "-c", RUNNER, repo, ",".join(queries), sf_dir],
-        capture_output=True,
-        text=True,
-        env=env,
-        timeout=1800,
-    )
-    for line in proc.stdout.splitlines():
-        if line.startswith("ABRESULT "):
-            return json.loads(line[len("ABRESULT "):])
-    sys.stderr.write(proc.stdout[-2000:] + "\n" + proc.stderr[-4000:] + "\n")
-    raise SystemExit(f"side run in {repo} produced no ABRESULT line")
 
 
 def main() -> None:
@@ -126,7 +71,7 @@ def main() -> None:
         if it % 2 == 1:
             sides.reverse()
         for label, tree in sides:
-            res = _side_run(tree, queries, args.sf_dir)
+            res = time_in_child(tree, args.sf_dir, queries, timeout=1800)
             for q, t in res.items():
                 cur = mins[label].get(q)
                 mins[label][q] = t if cur is None else min(cur, t)

@@ -8,10 +8,11 @@ plan.
 
 Usage: python tools/profile_query.py <query> [query ...] [--sf DIR]
 
-Each query runs in the bench protocol (clean cache, noop sink) twice:
-the first run pays codegen/JIT, the second is the steady-state run the
-profile reports (both are in the log; stages are grouped by job group =
-query name + run index).
+After the shared warmup, each query is timed ``--runs`` times (default
+2) with ``tools/timing.py``'s ``timed``: the first run pays
+codegen/JIT, the last is the steady-state run the profile reports (all
+are in the log; stages are grouped by job group = query name + run
+index).
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ import argparse
 import json
 import os
 import sys
-import time
+
+from timing import timed, warm
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
@@ -57,23 +59,16 @@ def main() -> None:
     qs = e.queries()
     sc = spark.sparkContext
 
-    def run(name: str) -> float:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # bench warmups so run 2 is steady-state
+    # the shared session warmup, so the last run is steady-state
     sc.setJobGroup("warmup", "warmup")
-    run("payments_balances")
-    run("repetition_stats")
+    warm(spark, qs, args.sf)
 
     walls: dict[str, list[float]] = {}
     for name in args.queries:
         walls[name] = []
         for i in range(args.runs):
             sc.setJobGroup(f"{name}#{i}", name)
-            walls[name].append(run(name))
+            walls[name].append(timed(spark, lambda: qs[name](spark, args.sf)))
     app_id = sc.applicationId
     spark.stop()
 
@@ -141,7 +136,6 @@ def main() -> None:
                         "fetch_wait_ms": 0,
                         "ser_ms": 0,
                         "deser_ms": 0,
-                        "py_max_ms": 0,
                     },
                 )
                 agg["run_ms"] += m.get("Executor Run Time", 0)

@@ -17,6 +17,7 @@ import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 # generous per-gate ceilings: a wedged Spark session used to block the
 # runner forever with all output captured and nothing visible — a
@@ -107,19 +108,11 @@ def main() -> int:
         # tools/bench_diff.py, previously wired to nothing here (r10
         # review fix): diff the newest driver record against the fresh
         # full detail the bench just wrote.
-        import re
+        from bench import bench_round_files
 
-        rounds = sorted(
-            (
-                (int(m.group(1)), p.name)
-                for p in ROOT.glob("BENCH_r*.json")
-                if (m := re.search(r"BENCH_r(\d+)\.json$", p.name))
-            ),
-        )
+        rounds = bench_round_files()
         if rounds and (ROOT / "BENCH_DETAIL.json").exists():
-            # keep the glob's own filename — round files are
-            # zero-padded (BENCH_r09.json), reformatting the int lost
-            # the padding and the diff gate failed on a missing file
+            # the file's own name: round files are zero-padded
             ok &= run(
                 "bench-diff",
                 [

@@ -1,7 +1,7 @@
 """Above-bench scale spot-check (r7 verdict item 5): run the named
-contracts at two SF dirs in ISOLATED processes (one Spark session per
-scale, warmed, min-of-two per query — the SCALING.md protocol) and
-print the per-query ratio table.
+contracts at two SF dirs, one fresh session per scale
+(``tools/timing.py`` ``time_in_child``: its warmup, then min-of-two per
+query — the SCALING.md protocol), and print the per-query ratio table.
 
 Usage:
     python tools/make_sf1.py                      # once
@@ -27,8 +27,9 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
+
+from timing import time_in_child
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -91,42 +92,6 @@ PANEL = [
     "knn_recall_ivfpq_vec0",
 ]
 
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {root!r})
-from kafka_streams_spark import get_spark
-import __spark_entry__ as e
-spark = get_spark(app_name="scale-check")
-qs = e.queries()
-sf = {sf!r}
-def run(n):
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    qs[n](spark, sf).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-run({warm!r})  # session warmup (JVM/codegen/Arrow workers)
-out = {{}}
-for n in {names!r}:
-    out[n] = round(min(run(n), run(n)), 3)
-print("SCALE_JSON:" + json.dumps(out))
-"""
-
-
-def _run_scale(sf_dir: str, names: list[str]) -> dict[str, float]:
-    code = _CHILD.format(
-        root=ROOT, sf=sf_dir, names=names, warm="minhash_jaccard_est"
-    )
-    p = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd=ROOT
-    )
-    for line in p.stdout.splitlines():
-        if line.startswith("SCALE_JSON:"):
-            return json.loads(line[len("SCALE_JSON:"):])
-    raise SystemExit(
-        f"scale run at {sf_dir} failed:\n{p.stdout[-2000:]}\n{p.stderr[-4000:]}"
-    )
-
-
 def _panel_round() -> int:
     """Next round number — bench.py's artifact-based inference, ONE
     definition (no env override: SPARK_GRAFT_BENCH_SEED pins A/B
@@ -184,8 +149,8 @@ def main() -> None:
     sf1 = os.path.join(ROOT, "testdata_sf1")
     if not os.path.isdir(sf1):
         raise SystemExit("run `python tools/make_sf1.py` first")
-    lo = _run_scale("/root/testdata/sf0.1", names)
-    hi = _run_scale(sf1, names)
+    lo = time_in_child(ROOT, "/root/testdata/sf0.1", names)
+    hi = time_in_child(ROOT, sf1, names)
     print(f"| query | sf0.1 s | sf1 s | ratio |")
     print(f"|---|---|---|---|")
     worst = 0.0
@@ -218,7 +183,8 @@ def main() -> None:
     rec = {
         "round": rnd,
         "protocol": "solo; isolated session per scale; min-of-2; "
-        "warm=minhash_jaccard_est",
+        "warm=tools/timing.warm (sf0.1: payments_balances+repetition_stats; "
+        "sf1: minhash_jaccard_est+repetition_stats)",
         "sf01": lo,
         "sf1": hi,
     }
@@ -232,6 +198,12 @@ def main() -> None:
         return
     prnd, pdata = prev
     print(f"\nround-over-round sf1 vs r{prnd} (A/B-adjudicate >1.5x):")
+    if pdata.get("protocol") != rec["protocol"]:
+        print(
+            f"  r{prnd} was measured with a different protocol/warmup "
+            f"({pdata.get('protocol')!r}): its ratios show the method "
+            f"change as well as the code; re-baseline before adjudicating"
+        )
     flagged = 0
     for n in names:
         if n not in pdata.get("sf1", {}):
