@@ -1112,7 +1112,9 @@ def truncate_embeddings(
     )
 
 
-def _planes_md5(planes: list[list[float]]) -> str:
+def _planes_md5(planes: list) -> str:
+    """md5 of the compact JSON of a frozen float/int artifact (LSH
+    planes, PQ codebooks): the fingerprint its index is stamped with."""
     import hashlib
     import json as _json
 
@@ -2479,16 +2481,31 @@ def write_pq_codes(
     ``codes``: ADC against codes produced by DIFFERENT codebooks ranks
     garbage silently, so the reader gate rejects a mismatch loudly.
     """
-    import hashlib
-    import json
+    codes = pq_encode(embeddings, codebooks, id_col, vec_col)
+    _stamp_pq_codes(codes, codebooks).write.mode("overwrite").parquet(path)
 
-    fp = hashlib.md5(
-        json.dumps(codebooks, separators=(",", ":")).encode()
-    ).hexdigest()
-    codes = pq_encode(embeddings, codebooks, id_col, vec_col).withMetadata(
-        "codes", {"m": len(codebooks), "codebook_md5": fp}
+
+def _stamp_pq_codes(codes: DataFrame, codebooks: list) -> DataFrame:
+    """``codes`` carrying its build's stamp as column metadata: ``m`` and
+    the codebook fingerprint (md5 of the compact JSON of the centroid
+    ints) — the batch table and every streamed delta alike."""
+    return codes.withMetadata(
+        "codes", {"m": len(codebooks), "codebook_md5": _planes_md5(codebooks)}
     )
-    codes.write.mode("overwrite").parquet(path)
+
+
+def _gate_pq_codes(df: DataFrame, codebooks: list | None, path: str) -> DataFrame:
+    """``df`` unchanged, or ValueError when ``codebooks`` (None skips the
+    gate) are not the ones its codes were encoded with."""
+    if codebooks is not None:
+        fp = _planes_md5(codebooks)
+        got = df.schema["codes"].metadata.get("codebook_md5")
+        if got != fp:
+            raise ValueError(
+                f"PQ codes at {path} were encoded with different codebooks "
+                f"(md5 {got} != {fp})"
+            )
+    return df
 
 
 def read_pq_codes(
@@ -2499,21 +2516,7 @@ def read_pq_codes(
     """Read a code table written by :func:`write_pq_codes`; when the
     querying codebooks are passed, reject a fingerprint mismatch
     (codes and codebooks must come from the same build)."""
-    import hashlib
-    import json
-
-    df = spark.read.parquet(path)
-    if codebooks is not None:
-        fp = hashlib.md5(
-            json.dumps(codebooks, separators=(",", ":")).encode()
-        ).hexdigest()
-        meta = df.schema["codes"].metadata
-        if meta.get("codebook_md5") != fp:
-            raise ValueError(
-                f"PQ codes at {path} were encoded with different codebooks "
-                f"(md5 {meta.get('codebook_md5')} != {fp})"
-            )
-    return df
+    return _gate_pq_codes(spark.read.parquet(path), codebooks, path)
 
 
 def pq_error_audit(
@@ -2776,23 +2779,34 @@ def write_binary_index(
     rejects a mismatch loudly."""
     sigs = binarize_embeddings(
         embeddings, bits=bits, id_col=id_col, vec_col=vec_col
-    ).withMetadata("bsig", {"bits": bits})
-    sigs.write.mode("overwrite").parquet(path)
+    )
+    _stamp_bsig(sigs, bits).write.mode("overwrite").parquet(path)
+
+
+def _stamp_bsig(sigs: DataFrame, bits: int) -> DataFrame:
+    """``sigs`` carrying its bit-width as metadata on ``bsig`` — the
+    batch table and every streamed delta alike."""
+    return sigs.withMetadata("bsig", {"bits": bits})
+
+
+def _gate_bsig(df: DataFrame, bits: int | None, path: str) -> DataFrame:
+    """``df`` unchanged, or ValueError when ``bits`` (None skips the
+    gate) is not the bit-width its signatures were built with."""
+    if bits is not None:
+        got = df.schema["bsig"].metadata.get("bits")
+        if got != bits:
+            raise ValueError(
+                f"binary index at {path} was built with bits={got}, "
+                f"query expects bits={bits}"
+            )
+    return df
 
 
 def read_binary_index(spark, path: str, bits: int | None = None) -> DataFrame:
     """Read a signature table written by :func:`write_binary_index`;
     when the querying bit-width is passed, reject a mismatch (query
     signatures and index must binarize the same dimensions)."""
-    df = spark.read.parquet(path)
-    if bits is not None:
-        meta = df.schema["bsig"].metadata
-        if meta.get("bits") != bits:
-            raise ValueError(
-                f"binary index at {path} was built with bits="
-                f"{meta.get('bits')}, query expects bits={bits}"
-            )
-    return df
+    return _gate_bsig(spark.read.parquet(path), bits, path)
 
 
 def knn_hamming_index_to_id(

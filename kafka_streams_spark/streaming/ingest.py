@@ -16,16 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.store import (
     _try_read_parquet,
-    epoch_mapper,
+    run_changelog_stream,
     write_batch,
 )
 
@@ -36,6 +37,15 @@ DOC_SCHEMA = StructType(
         StructField("text", StringType()),
     ]
 )
+# the embedding streams' source rows (sketch_stream's Gram, PQ and
+# binary-index streams)
+EMB_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(DoubleType())),
+        StructField("label", StringType()),
+    ]
+)
 
 
 def run_corpus_ingest_stream(
@@ -44,7 +54,6 @@ def run_corpus_ingest_stream(
     corpus_dir: str,
     checkpoint_dir: str,
     min_quality: float = 0.0,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
     remove_spans: int = 0,
 ):
     """Start the ingest loop: JSON docs stream in, the exact membership
@@ -78,22 +87,11 @@ def run_corpus_ingest_stream(
     )
     from kafka_streams_spark.operators.text import quality_expr
 
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    effective_batch = epoch_mapper(
-        spark, corpus_dir, checkpoint_dir, [corpus_dir], []
-    )
-
-    def ingest(batch_df: DataFrame, raw_batch_id: int) -> None:
+    def ingest(batch_df: DataFrame, batch_id: int) -> None:
         from kafka_streams_spark.functions.partitioning import (
             materialize_shared,
         )
 
-        batch_id = effective_batch(raw_batch_id)
         # only a missing (or still empty) corpus means "no corpus yet":
         # any other read failure fails the batch, which the stream
         # retries, rather than skipping the membership gate
@@ -160,9 +158,13 @@ def run_corpus_ingest_stream(
             )
         write_batch(accepted, corpus_dir, batch_id)
 
-    return (
-        raw.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return run_changelog_stream(
+        spark,
+        DOC_SCHEMA,
+        source_dir,
+        checkpoint_dir,
+        corpus_dir,
+        [corpus_dir],
+        [],
+        ingest,
     )

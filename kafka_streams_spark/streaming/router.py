@@ -47,13 +47,12 @@ from kafka_streams_spark.operators.payments import (
     route_and_convert,
 )
 from kafka_streams_spark.schema import PAYMENT_SCHEMA
-from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.store import (
     _fs,
     _latest_hwm,
     _rename,
-    epoch_mapper,
     fold_into_base,
+    run_changelog_stream,
     write_batch,
 )
 
@@ -179,7 +178,6 @@ def run_payment_stream(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ) -> StreamingQuery:
     """Start the full topology as one streaming query over a JSON file
     source (the offline stand-in for the Kafka source — swap
@@ -194,17 +192,11 @@ def run_payment_stream(
     batch's local properties (batch id, query id, job group). The batch
     fails only after all three writes return, with the first write's
     error; the replay rewrites the changelog partition (exactly-once
-    balances) and re-appends the outbound legs (at-least-once). With
-    ``get_spark``'s listing threshold, a trigger of up to
-    ``MAX_FILES_PER_TRIGGER`` files is stat'ed on the driver, not by a
-    listing job.
+    balances) and re-appends the outbound legs (at-least-once). The
+    query starts through :func:`store.run_changelog_stream`: at most
+    ``sources.MAX_FILES_PER_TRIGGER`` files per trigger, stat'ed on the
+    driver, and each batch routed under its ``ingest_batch`` id.
     """
-    raw = (
-        spark.readStream.schema(PAYMENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
     foo_dir = os.path.join(out_dir, "rails_foo")
     bar_dir = os.path.join(out_dir, "rails_bar")
     delta_dir = os.path.join(out_dir, "balance_delta")
@@ -213,16 +205,7 @@ def run_payment_stream(
     # _migrate_delta_layout)
     _migrate_delta_layout(spark, delta_dir)
 
-    effective_batch = epoch_mapper(
-        spark,
-        out_dir,
-        checkpoint_dir,
-        [delta_dir],
-        [os.path.join(out_dir, "balance_base")],
-    )
-
-    def route_batch(batch_df: DataFrame, raw_batch_id: int) -> None:
-        batch_id = effective_batch(raw_batch_id)
+    def route_batch(batch_df: DataFrame, batch_id: int) -> None:
         merged = _transform(batch_df)
         merged.persist()  # read-once fan-out: 3 writes, 1 computation
         try:
@@ -250,11 +233,15 @@ def run_payment_stream(
         if errors:
             raise errors[0]
 
-    return (
-        raw.writeStream.foreachBatch(route_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return run_changelog_stream(
+        spark,
+        PAYMENT_SCHEMA,
+        source_dir,
+        checkpoint_dir,
+        out_dir,
+        [delta_dir],
+        [os.path.join(out_dir, "balance_base")],
+        route_batch,
     )
 
 

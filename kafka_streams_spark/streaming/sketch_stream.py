@@ -17,15 +17,24 @@ crawl": state is O(d·w·batches) tiny rows, the merge is one partial-
 aggregated shuffle of those rows, and no full-vocabulary aggregation
 ever runs. Compaction folds closed partitions into the reserved
 ``ingest_batch=-1`` partition (:func:`_compact_deltas`).
+
+Every stream here starts through :func:`store.run_changelog_stream`
+(most via :func:`_run_delta_stream`, which writes the batch's delta),
+and each mergeable sketch states its merge once (``_cms_merge``,
+``_gram_merge``, ``_hist_merge``, ``_key_profile_merge``,
+``_kmv_merge``, ``_rank_merge``): its ``read_*`` applies it to every
+delta and its ``compact_*`` to the pinned ones.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
-from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
+from kafka_streams_spark.streaming.ingest import DOC_SCHEMA, EMB_SCHEMA
 from kafka_streams_spark.streaming.store import (
     _check_sketch_meta,
     _fs,
@@ -35,7 +44,7 @@ from kafka_streams_spark.streaming.store import (
     _stamp_sketch_store,
     _try_read_parquet,
     _write_json_file,
-    epoch_mapper,
+    run_changelog_stream,
     write_batch,
 )
 
@@ -62,19 +71,55 @@ def _read_delta_store(spark: SparkSession, store_dir: str) -> DataFrame:
     return df.filter(F.col("ingest_batch") != _FOLD_STAGE)
 
 
-def _delta_writer(spark: SparkSession, store_dir: str, checkpoint_dir: str):
-    """The one write path every sketch/index stream shares: the batch id
-    remapped onto the store's epoch axis, then :func:`store.write_batch`.
-    The epoch remap turns a fresh checkpoint into clean at-least-once
-    re-counting instead of overwriting the prior generation's deltas."""
-    effective_batch = epoch_mapper(
-        spark, store_dir, checkpoint_dir, [store_dir], []
+def _run_delta_stream(
+    spark: SparkSession,
+    schema: StructType,
+    source_dir: str,
+    store_dir: str,
+    checkpoint_dir: str,
+    delta_of: Callable[[DataFrame], DataFrame],
+):
+    """Start a sketch/index stream: :func:`store.run_changelog_stream`
+    with ``delta_of(batch_df)`` written as the batch's own partition of
+    ``store_dir``. The epoch-mapped id turns a fresh checkpoint into
+    clean at-least-once re-counting instead of overwriting the prior
+    generation's deltas."""
+
+    def update(batch_df: DataFrame, batch_id: int) -> None:
+        write_batch(delta_of(batch_df), store_dir, batch_id)
+
+    return run_changelog_stream(
+        spark, schema, source_dir, checkpoint_dir, store_dir, [store_dir], [],
+        update,
     )
 
-    def write(delta: DataFrame, batch_id: int) -> None:
-        write_batch(delta, store_dir, effective_batch(batch_id))
 
-    return write
+def _grouped_sum(
+    keys: list[str], sums: list[str]
+) -> Callable[[DataFrame], DataFrame]:
+    """The merge of a sum-mergeable sketch: per-key sums of its
+    counters (an ``ingest_batch`` column is grouped away)."""
+    return lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+
+
+_cms_merge = _grouped_sum(["row_idx", "bucket"], ["counter"])
+_gram_merge = _grouped_sum(["dim_i", "dim_j"], ["n", "sum_i", "sum_j", "sum_prod"])
+_hist_merge = _grouped_sum(["bucket"], ["counter"])
+_key_profile_merge = _grouped_sum(["k"], ["cnt"])
+
+
+def _kmv_merge(df: DataFrame, k: int) -> DataFrame:
+    """Per-source bottom-k of the union of the partials' hashes."""
+    from kafka_streams_spark.operators.profiling import kmv_state_merge
+
+    return kmv_state_merge(df.select("source", "h"), ["source"], k=k)
+
+
+def _rank_merge(df: DataFrame, k: int) -> DataFrame:
+    """Bottom-k of the union of the partials' samples, counts summed."""
+    from kafka_streams_spark.operators.profiling import rank_sketch_merge
+
+    return rank_sketch_merge(df.select("h", "value", "n"), k=k)
 
 
 def run_cms_stream(
@@ -84,7 +129,6 @@ def run_cms_stream(
     checkpoint_dir: str,
     d: int = 4,
     w: int = 1024,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Start the sketch-maintenance loop over a JSON document stream;
     returns the StreamingQuery. Read the live sketch with
@@ -97,23 +141,9 @@ def run_cms_stream(
     _stamp_sketch_store(
         spark, sketch_dir, {"kind": "cms", "d": int(d), "w": int(w)}
     )
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    write_delta = _delta_writer(spark, sketch_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        delta = cms_token_sketch(batch_df, d=d, w=w)
-        write_delta(delta, batch_id)
-
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, sketch_dir, checkpoint_dir,
+        lambda batch_df: cms_token_sketch(batch_df, d=d, w=w),
     )
 
 
@@ -133,11 +163,7 @@ def read_cms_sketch(
         if w is not None:
             expect["w"] = int(w)
         _check_sketch_meta(spark, sketch_dir, expect)
-    return (
-        _read_delta_store(spark, sketch_dir)
-        .groupBy("row_idx", "bucket")
-        .agg(F.sum("counter").alias("counter"))
-    )
+    return _cms_merge(_read_delta_store(spark, sketch_dir))
 
 
 def compact_cms(
@@ -152,37 +178,12 @@ def compact_cms(
     not needed — counters sum grid-agnostically; only estimate
     read-offs are grid-sensitive (:func:`read_cms_sketch`)."""
     _check_sketch_meta(spark, sketch_dir, {"kind": "cms"})
-    _compact_deltas(
-        spark,
-        sketch_dir,
-        ["row_idx", "bucket"],
-        ["counter"],
-        checkpoint_dir=checkpoint_dir,
-    )
+    _compact_deltas(spark, sketch_dir, _cms_merge, checkpoint_dir=checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
 # streaming second-moment (Gram) maintenance — covariance drift monitoring
 # ---------------------------------------------------------------------------
-
-
-def _emb_schema():
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(DoubleType())),
-            StructField("label", StringType()),
-        ]
-    )
 
 
 def run_gram_stream(
@@ -191,7 +192,6 @@ def run_gram_stream(
     gram_dir: str,
     checkpoint_dir: str,
     scale: int = 10**3,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
     dim: int | None = None,
 ):
     """Maintain the exact second-moment (Gram) table of an embedding
@@ -220,14 +220,6 @@ def run_gram_stream(
     # unit and read_gram would sum them silently.
     _stamp_sketch_store(spark, gram_dir, {"kind": "gram", "scale": int(scale)})
     log = logging.getLogger(__name__)
-
-    raw = (
-        spark.readStream.schema(_emb_schema())
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    write_delta = _delta_writer(spark, gram_dir, checkpoint_dir)
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         # embedding_gram quarantines NULL rows (and, with dim set,
@@ -272,17 +264,16 @@ def run_gram_stream(
                         "dimension",
                         batch_id, d, top["count"], n_rejected,
                     )
-            delta = embedding_gram(batch_df, scale=scale, dim=d)
-            write_delta(delta, batch_id)
+            write_batch(
+                embedding_gram(batch_df, scale=scale, dim=d), gram_dir, batch_id
+            )
         finally:
             if dim is None:
                 batch_df.unpersist()
 
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return run_changelog_stream(
+        spark, EMB_SCHEMA, source_dir, checkpoint_dir, gram_dir, [gram_dir], [],
+        update,
     )
 
 
@@ -296,16 +287,7 @@ def read_gram(
     int64 sums are in scale-dependent units; a mismatched read would
     de-quantize wrongly)."""
     _check_sketch_meta(spark, gram_dir, {"kind": "gram", "scale": int(scale)})
-    return (
-        _read_delta_store(spark, gram_dir)
-        .groupBy("dim_i", "dim_j")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_i").alias("sum_i"),
-            F.sum("sum_j").alias("sum_j"),
-            F.sum("sum_prod").alias("sum_prod"),
-        )
-    )
+    return _gram_merge(_read_delta_store(spark, gram_dir))
 
 
 def _committed_batch_ids(spark: SparkSession, checkpoint_dir: str) -> set:
@@ -378,20 +360,19 @@ def _recover_fold(spark: SparkSession, delta_dir: str) -> None:
 def _compact_deltas(
     spark: SparkSession,
     delta_dir: str,
-    group_cols: list[str] | None = None,
-    sum_cols: list[str] | None = None,
-    _after_pin=None,
-    merge=None,
+    merge: Callable[[DataFrame], DataFrame],
+    *,
     checkpoint_dir: str | None = None,
+    _after_pin=None,
     _crash_after: str | None = None,
 ) -> None:
     """Shared safe-under-concurrency compaction for batch-partitioned
     delta tables: fold the partitions PINNED AT SNAPSHOT TIME into the
     reserved ``-1`` partition, then delete exactly those partitions.
     ``merge`` is the store's associative fold (pinned deltas, without
-    the ``ingest_batch`` column → merged rows); the default is the
-    grouped SUM over ``group_cols``/``sum_cols``. EVERY delta store's
-    compaction routes through here — one protocol, one place to fix.
+    the ``ingest_batch`` column → merged rows), the same one its reader
+    applies to every delta. EVERY delta store's compaction routes
+    through here — one protocol, one place to fix.
 
     Concurrency contract: a full-table overwrite would delete any delta
     a live micro-batch wrote between the read and the commit — counts
@@ -436,14 +417,6 @@ def _compact_deltas(
     one rename wide. Run compaction from the maintenance path if
     readers need exact values at every instant — documented, not
     hidden."""
-    if merge is None:
-        gcols, scols = list(group_cols), list(sum_cols)
-
-        def merge(df: DataFrame) -> DataFrame:
-            return df.groupBy(*gcols).agg(
-                *[F.sum(c).alias(c) for c in scols]
-            )
-
     _recover_fold(spark, delta_dir)
     df = _try_read_parquet(spark, delta_dir)
     if df is None:
@@ -525,13 +498,7 @@ def compact_gram(
     the snapshot-pin / dynamic-overwrite / targeted-delete protocol and
     why ``checkpoint_dir`` should be passed (replay safety)."""
     _check_sketch_meta(spark, gram_dir, {"kind": "gram", "scale": int(scale)})
-    _compact_deltas(
-        spark,
-        gram_dir,
-        ["dim_i", "dim_j"],
-        ["n", "sum_i", "sum_j", "sum_prod"],
-        checkpoint_dir=checkpoint_dir,
-    )
+    _compact_deltas(spark, gram_dir, _gram_merge, checkpoint_dir=checkpoint_dir)
 
 
 def run_pq_encode_stream(
@@ -540,7 +507,6 @@ def run_pq_encode_stream(
     codes_dir: str,
     checkpoint_dir: str,
     codebooks: list,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Streaming half of the recurring ANN deployment: new vectors
     arrive as a JSON stream and each micro-batch appends its PQ CODES
@@ -558,34 +524,14 @@ def run_pq_encode_stream(
     and never touch the float vectors of already-encoded rows — the
     100 TB economics this index exists for.
     """
-    import hashlib
-    import json as _json
-
-    from kafka_streams_spark.operators.similarity import pq_encode
-
-    fp = hashlib.md5(
-        _json.dumps(codebooks, separators=(",", ":")).encode()
-    ).hexdigest()
-
-    raw = (
-        spark.readStream.schema(_emb_schema())
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
+    from kafka_streams_spark.operators.similarity import (
+        _stamp_pq_codes,
+        pq_encode,
     )
 
-    write_delta = _delta_writer(spark, codes_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        delta = pq_encode(batch_df, codebooks).withMetadata(
-            "codes", {"m": len(codebooks), "codebook_md5": fp}
-        )
-        write_delta(delta, batch_id)
-
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, EMB_SCHEMA, source_dir, codes_dir, checkpoint_dir,
+        lambda batch_df: _stamp_pq_codes(pq_encode(batch_df, codebooks), codebooks),
     )
 
 
@@ -595,26 +541,26 @@ def read_pq_codes_stream(
     """Read the live streamed code index (all batch partitions, the
     ``ingest_batch`` column dropped) with the same codebook-fingerprint
     gate as :func:`~kafka_streams_spark.operators.similarity.read_pq_codes`."""
-    import hashlib
-    import json as _json
+    from kafka_streams_spark.operators.similarity import _gate_pq_codes
 
     df = _read_delta_store(spark, codes_dir).drop("ingest_batch")
-    if codebooks is not None:
-        fp = hashlib.md5(
-            _json.dumps(codebooks, separators=(",", ":")).encode()
-        ).hexdigest()
-        meta = df.schema["codes"].metadata
-        if meta.get("codebook_md5") != fp:
-            raise ValueError(
-                f"streamed PQ codes at {codes_dir} were encoded with "
-                f"different codebooks (md5 {meta.get('codebook_md5')} != {fp})"
-            )
-    return df
+    return _gate_pq_codes(df, codebooks, codes_dir)
 
 
 # ---------------------------------------------------------------------------
 # streaming value-distribution (histogram) maintenance — quantile monitoring
 # ---------------------------------------------------------------------------
+
+
+def _hist_meta(bin_width_cents: int, scale: int) -> dict:
+    """A histogram store's stamp: its bin grid, frozen at first start —
+    deltas snapped to a different (bin_width, scale) grid would merge
+    into buckets that mean different value ranges."""
+    return {
+        "kind": "hist",
+        "bin_width_cents": int(bin_width_cents),
+        "scale": int(scale),
+    }
 
 
 def run_histogram_stream(
@@ -624,7 +570,6 @@ def run_histogram_stream(
     checkpoint_dir: str,
     bin_width_cents: int = 1600,
     scale: int = 100,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the doc-length distribution of a document stream as a
     mergeable :func:`~kafka_streams_spark.operators.profiling.value_histogram`
@@ -645,40 +590,18 @@ def run_histogram_stream(
     """
     from kafka_streams_spark.operators.profiling import value_histogram
 
-    # The bin grid is a FROZEN parameter of the store: deltas snapped
-    # to a different (bin_width, scale) grid would merge into buckets
-    # that mean different value ranges.
-    _stamp_sketch_store(
-        spark,
-        hist_dir,
-        {
-            "kind": "hist",
-            "bin_width_cents": int(bin_width_cents),
-            "scale": int(scale),
-        },
-    )
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
+    _stamp_sketch_store(spark, hist_dir, _hist_meta(bin_width_cents, scale))
 
-    write_delta = _delta_writer(spark, hist_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
+    def delta_of(batch_df: DataFrame) -> DataFrame:
         lengths = batch_df.select(
             F.length("text").cast("double").alias("n_chars")
         )
-        delta = value_histogram(
+        return value_histogram(
             lengths, "n_chars", bin_width_cents=bin_width_cents, scale=scale
         )
-        write_delta(delta, batch_id)
 
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, hist_dir, checkpoint_dir, delta_of
     )
 
 
@@ -693,20 +616,8 @@ def read_histogram(
     ingested so far. Output: (bucket, counter). The bin-grid parameters
     are checked against the store's stamp (buckets are grid-relative;
     a mismatched read would label ranges wrongly)."""
-    _check_sketch_meta(
-        spark,
-        hist_dir,
-        {
-            "kind": "hist",
-            "bin_width_cents": int(bin_width_cents),
-            "scale": int(scale),
-        },
-    )
-    return (
-        _read_delta_store(spark, hist_dir)
-        .groupBy("bucket")
-        .agg(F.sum("counter").alias("counter"))
-    )
+    _check_sketch_meta(spark, hist_dir, _hist_meta(bin_width_cents, scale))
+    return _hist_merge(_read_delta_store(spark, hist_dir))
 
 
 def compact_histogram(
@@ -722,18 +633,8 @@ def compact_histogram(
     :func:`compact_gram`): read cost drops from buckets·batches rows
     back to buckets, and the stream keeps appending new deltas after.
     Live-stream-safe via :func:`_compact_deltas`."""
-    _check_sketch_meta(
-        spark,
-        hist_dir,
-        {
-            "kind": "hist",
-            "bin_width_cents": int(bin_width_cents),
-            "scale": int(scale),
-        },
-    )
-    _compact_deltas(
-        spark, hist_dir, ["bucket"], ["counter"], checkpoint_dir=checkpoint_dir
-    )
+    _check_sketch_meta(spark, hist_dir, _hist_meta(bin_width_cents, scale))
+    _compact_deltas(spark, hist_dir, _hist_merge, checkpoint_dir=checkpoint_dir)
 
 
 def run_binarize_stream(
@@ -742,7 +643,6 @@ def run_binarize_stream(
     index_dir: str,
     checkpoint_dir: str,
     bits: int = 60,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Streaming half of the binary-quantization ANN deployment: new
     vectors arrive as a JSON stream and each micro-batch appends its
@@ -753,27 +653,14 @@ def run_binarize_stream(
     metadata for the reader gate). Idempotent under replay: a
     re-delivered batch recomputes the same deterministic signatures
     into its own partition."""
-    from kafka_streams_spark.operators.similarity import binarize_embeddings
-
-    raw = (
-        spark.readStream.schema(_emb_schema())
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
+    from kafka_streams_spark.operators.similarity import (
+        _stamp_bsig,
+        binarize_embeddings,
     )
 
-    write_delta = _delta_writer(spark, index_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        delta = binarize_embeddings(batch_df, bits=bits).withMetadata(
-            "bsig", {"bits": bits}
-        )
-        write_delta(delta, batch_id)
-
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, EMB_SCHEMA, source_dir, index_dir, checkpoint_dir,
+        lambda batch_df: _stamp_bsig(binarize_embeddings(batch_df, bits=bits), bits),
     )
 
 
@@ -783,15 +670,10 @@ def read_binary_index_stream(
     """Read the live streamed signature index (all batch partitions,
     ``ingest_batch`` dropped) with the same bit-width gate as
     :func:`~kafka_streams_spark.operators.similarity.read_binary_index`."""
+    from kafka_streams_spark.operators.similarity import _gate_bsig
+
     df = _read_delta_store(spark, index_dir).drop("ingest_batch")
-    if bits is not None:
-        meta = df.schema["bsig"].metadata
-        if meta.get("bits") != bits:
-            raise ValueError(
-                f"streamed binary index at {index_dir} was built with "
-                f"bits={meta.get('bits')}, query expects bits={bits}"
-            )
-    return df
+    return _gate_bsig(df, bits, index_dir)
 
 
 def run_scorecard_stream(
@@ -799,7 +681,6 @@ def run_scorecard_stream(
     source_dir: str,
     scorecard_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Live corpus-quality dashboard: each micro-batch writes ITS OWN
     one-row :func:`~kafka_streams_spark.operators.pipelines.corpus_scorecard`
@@ -811,23 +692,9 @@ def run_scorecard_stream(
     with no corpus re-scan. Replay-idempotent for the router's reason."""
     from kafka_streams_spark.operators.pipelines import corpus_scorecard
 
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    write_delta = _delta_writer(spark, scorecard_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        delta = corpus_scorecard(batch_df)
-        write_delta(delta, batch_id)
-
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, scorecard_dir, checkpoint_dir,
+        corpus_scorecard,
     )
 
 
@@ -850,7 +717,6 @@ def run_kmv_stream(
     sketch_dir: str,
     checkpoint_dir: str,
     k: int = 256,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain a per-source distinct-TOKEN KMV sketch of a document
     stream — "how many distinct words has each source contributed so
@@ -871,26 +737,15 @@ def run_kmv_stream(
     from kafka_streams_spark.operators.profiling import kmv_state
 
     _stamp_sketch_store(spark, sketch_dir, {"kind": "kmv", "k": int(k)})
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
 
-    write_delta = _delta_writer(spark, sketch_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
+    def delta_of(batch_df: DataFrame) -> DataFrame:
         toks = batch_df.select(
             "source", F.explode(tokens(F.col("text"))).alias("tok")
         )
-        delta = kmv_state(toks, "tok", ["source"], k=k)
-        write_delta(delta, batch_id)
+        return kmv_state(toks, "tok", ["source"], k=k)
 
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, sketch_dir, checkpoint_dir, delta_of
     )
 
 
@@ -899,15 +754,10 @@ def read_kmv(spark: SparkSession, sketch_dir: str, k: int = 256) -> DataFrame:
     partial's bottom-k and read off — identical to the batch
     ``distinct_kmv`` of all tokens ingested so far. Output:
     (source, n_distinct_est, sample_k)."""
-    from kafka_streams_spark.operators.profiling import (
-        kmv_read_off,
-        kmv_state_merge,
-    )
+    from kafka_streams_spark.operators.profiling import kmv_read_off
 
     _check_sketch_meta(spark, sketch_dir, {"kind": "kmv", "k": int(k)})
-    state = kmv_state_merge(
-        _read_delta_store(spark, sketch_dir).select("source", "h"), ["source"], k=k
-    )
+    state = _kmv_merge(_read_delta_store(spark, sketch_dir), k)
     return kmv_read_off(state, ["source"], k=k)
 
 
@@ -920,15 +770,11 @@ def compact_kmv(
 ) -> None:
     """Fold all batch partials into the reserved ``-1`` partition —
     :func:`_compact_deltas` with the per-group bottom-k merge."""
-    from kafka_streams_spark.operators.profiling import kmv_state_merge
-
     _check_sketch_meta(spark, sketch_dir, {"kind": "kmv", "k": int(k)})
     _compact_deltas(
         spark,
         sketch_dir,
-        merge=lambda df: kmv_state_merge(
-            df.select("source", "h"), ["source"], k=k
-        ),
+        lambda df: _kmv_merge(df, k),
         checkpoint_dir=checkpoint_dir,
     )
 
@@ -939,7 +785,6 @@ def run_key_profile_stream(
     profile_dir: str,
     checkpoint_dir: str,
     key_col: str = "source",
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the per-key COUNT profile of a document stream — the
     live state behind :func:`~kafka_streams_spark.operators.profiling.
@@ -955,23 +800,9 @@ def run_key_profile_stream(
     partition."""
     from kafka_streams_spark.operators.profiling import key_profile
 
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    write_delta = _delta_writer(spark, profile_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        delta = key_profile(batch_df, key_col)
-        write_delta(delta, batch_id)
-
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, profile_dir, checkpoint_dir,
+        lambda batch_df: key_profile(batch_df, key_col),
     )
 
 
@@ -980,26 +811,16 @@ def read_key_profile(spark: SparkSession, profile_dir: str) -> DataFrame:
     delta — identical to the batch ``key_profile`` of all rows
     ingested so far. Output: (k STRING, cnt BIGINT). NULL-key rows are
     a real group, same as the batch form."""
-    return (
-        _read_delta_store(spark, profile_dir)
-        .groupBy("k")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
+    return _key_profile_merge(_read_delta_store(spark, profile_dir))
 
 
 def compact_key_profile(
     spark: SparkSession, profile_dir: str, *, checkpoint_dir: str | None = None
 ) -> None:
     """Fold all batch deltas into the reserved ``-1`` partition —
-    :func:`_compact_deltas` with the grouped-sum merge (cnt kept
-    BIGINT)."""
+    :func:`_compact_deltas` with the grouped-sum merge."""
     _compact_deltas(
-        spark,
-        profile_dir,
-        merge=lambda df: df.groupBy("k").agg(
-            F.sum("cnt").cast("bigint").alias("cnt")
-        ),
-        checkpoint_dir=checkpoint_dir,
+        spark, profile_dir, _key_profile_merge, checkpoint_dir=checkpoint_dir
     )
 
 
@@ -1010,7 +831,6 @@ def run_posting_profile_stream(
     checkpoint_dir: str,
     n: int = 3,
     block_col: str | None = "source",
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the per-(shingle [, block]) COUNT profile of a document
     stream — the live state behind
@@ -1032,23 +852,9 @@ def run_posting_profile_stream(
         profile_dir,
         {"kind": "posting", "n": int(n), "block": block_col or ""},
     )
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    write_delta = _delta_writer(spark, profile_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
-        delta = posting_profile(batch_df, n=n, block_col=block_col)
-        write_delta(delta, batch_id)
-
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, profile_dir, checkpoint_dir,
+        lambda batch_df: posting_profile(batch_df, n=n, block_col=block_col),
     )
 
 
@@ -1081,7 +887,6 @@ def run_rank_sketch_stream(
     sketch_dir: str,
     checkpoint_dir: str,
     k: int = 1024,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
 ):
     """Maintain the doc-length RANK SKETCH of a document stream — the
     CMS changelog pattern applied to
@@ -1100,26 +905,15 @@ def run_rank_sketch_stream(
     from kafka_streams_spark.operators.profiling import rank_sketch
 
     _stamp_sketch_store(spark, sketch_dir, {"kind": "rank", "k": int(k)})
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
 
-    write_delta = _delta_writer(spark, sketch_dir, checkpoint_dir)
-
-    def update(batch_df: DataFrame, batch_id: int) -> None:
+    def delta_of(batch_df: DataFrame) -> DataFrame:
         vals = batch_df.select(
             F.col("doc_id"), F.length("text").cast("double").alias("n_chars")
         )
-        delta = rank_sketch(vals, "n_chars", "doc_id", k=k)
-        write_delta(delta, batch_id)
+        return rank_sketch(vals, "n_chars", "doc_id", k=k)
 
-    return (
-        raw.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime="0 seconds")
-        .start()
+    return _run_delta_stream(
+        spark, DOC_SCHEMA, source_dir, sketch_dir, checkpoint_dir, delta_of
     )
 
 
@@ -1128,12 +922,8 @@ def read_rank_sketch(spark: SparkSession, sketch_dir: str, k: int = 1024) -> Dat
     samples + summed exact counts — identical to the batch
     ``rank_sketch`` of all rows ingested so far. Output: the
     (h, value, n) sketch schema."""
-    from kafka_streams_spark.operators.profiling import rank_sketch_merge
-
     _check_sketch_meta(spark, sketch_dir, {"kind": "rank", "k": int(k)})
-    return rank_sketch_merge(
-        _read_delta_store(spark, sketch_dir).select("h", "value", "n"), k=k
-    )
+    return _rank_merge(_read_delta_store(spark, sketch_dir), k)
 
 
 def compact_rank_sketch(
@@ -1146,14 +936,10 @@ def compact_rank_sketch(
     """Fold all batch partials into the reserved ``-1`` partition —
     :func:`_compact_deltas` with the bottom-k merge instead of a
     groupBy-sum."""
-    from kafka_streams_spark.operators.profiling import rank_sketch_merge
-
     _check_sketch_meta(spark, sketch_dir, {"kind": "rank", "k": int(k)})
     _compact_deltas(
         spark,
         sketch_dir,
-        merge=lambda df: rank_sketch_merge(
-            df.select("h", "value", "n"), k=k
-        ),
+        lambda df: _rank_merge(df, k),
         checkpoint_dir=checkpoint_dir,
     )

@@ -65,15 +65,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
 from kafka_streams_spark.streaming.store import (
     _latest_hwm,
     _list_partition_values,
     _stamp_sketch_store,
     _try_read_parquet,
-    epoch_mapper,
     fold_into_base,
+    run_changelog_stream,
     write_batch,
 )
 
@@ -254,7 +253,6 @@ def run_split_assignment_stream(
     hash_fn: str = "md5_32",
     test_256: int = 13,
     val_256: int = 26,
-    max_files_per_trigger: int = MAX_FILES_PER_TRIGGER,
     pair_budget: int | None = None,
 ) -> StreamingQuery:
     """Start the assignment loop over a JSON document stream. Returns
@@ -279,7 +277,7 @@ def run_split_assignment_stream(
     whose priced count fits the budget are byte-identical to an
     uncapped run. The cut is deterministic on crash-replay (it
     consults only prior-batch state). new×new pairs within a batch are
-    never capped — the batch is bounded by ``max_files_per_trigger``.
+    never capped — the batch is bounded by ``MAX_FILES_PER_TRIGGER``.
     Frozen per store like the signature knobs: a restart with a
     different budget would make replayed batches recompute different
     verdicts."""
@@ -313,28 +311,11 @@ def run_split_assignment_stream(
     d_dir = f"{store_dir}/docs"
     b_dir = f"{store_dir}/bands"
 
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(source_dir)
-    )
-
-    effective_batch = epoch_mapper(
-        spark,
-        store_dir,
-        checkpoint_dir,
-        [f"{store_dir}/{n}" for n in _STORE_COLS],
-        [f"{store_dir}/{n}_base" for n in _STORE_COLS],
-    )
-
-    def assign(batch_df: DataFrame, raw_batch_id: int) -> None:
+    def assign(batch_df: DataFrame, batch_id: int) -> None:
         from kafka_streams_spark.functions.partitioning import (
             materialize_shared,
         )
         from kafka_streams_spark.operators.dedup import dedup_exact_rows
-
-        # every read and write below uses the store's ingest_batch axis
-        batch_id = effective_batch(raw_batch_id)
 
         # deterministic within-batch id dedup (min (text, source) row
         # wins), then drop cross-batch re-deliveries: an id that already
@@ -493,8 +474,13 @@ def run_split_assignment_stream(
         )
         write_batch(new_bands, b_dir, batch_id)
 
-    return (
-        raw.writeStream.foreachBatch(assign)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return run_changelog_stream(
+        spark,
+        DOC_SCHEMA,
+        source_dir,
+        checkpoint_dir,
+        store_dir,
+        [f"{store_dir}/{n}" for n in _STORE_COLS],
+        [f"{store_dir}/{n}_base" for n in _STORE_COLS],
+        assign,
     )

@@ -10,6 +10,12 @@ Structured Streaming's batch id plus a per-checkpoint-generation offset
 persisted in ``_epochs.json`` (:func:`epoch_mapper`), so a fresh
 checkpoint never writes at or below what is already on disk.
 
+Every file stream in the package starts here
+(:func:`run_changelog_stream`): the JSON file source capped at
+``sources.MAX_FILES_PER_TRIGGER`` files per trigger, one
+``foreachBatch`` query, and the epoch-mapped ``ingest_batch`` id
+handed to the stream's batch function.
+
 Compaction has two forms. :func:`fold_into_base` folds closed
 partitions into a ``hwm=N`` base snapshot that readers union with the
 deltas ``> N`` (the balances and the split stores). The sketch stores
@@ -29,6 +35,10 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
+
+from kafka_streams_spark.sources import MAX_FILES_PER_TRIGGER
 
 _EPOCHS = "_epochs.json"
 _SKETCH_META = "_sketch_meta.json"
@@ -373,3 +383,45 @@ def fold_into_base(
         if b <= hwm:
             fs.delete(HPath(f"{delta_dir}/ingest_batch={b}"), True)
     return hwm
+
+
+def run_changelog_stream(
+    spark: SparkSession,
+    schema: StructType,
+    source_dir: str,
+    checkpoint_dir: str,
+    state_dir: str,
+    delta_dirs: Sequence[str],
+    base_dirs: Sequence[str],
+    on_batch: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start a changelog stream: the JSON file source under
+    ``source_dir`` (``schema``, at most ``MAX_FILES_PER_TRIGGER`` files
+    per trigger), one ``foreachBatch`` query checkpointed at
+    ``checkpoint_dir`` with a 0-second trigger, and
+    ``on_batch(batch_df, ingest_batch)`` per micro-batch.
+
+    ``on_batch`` never sees Structured Streaming's raw batch id: it gets
+    the store's ``ingest_batch`` id, mapped by :func:`epoch_mapper` over
+    ``state_dir``'s ``_epochs.json`` and the partitions under
+    ``delta_dirs``/``base_dirs``, so writing each batch's state with
+    :func:`write_batch` under that id is replay-idempotent.
+    ``get_spark`` sets the parallel-listing threshold to the same cap,
+    so a trigger's files are stat'ed on the driver, not by a listing
+    job."""
+    effective_batch = epoch_mapper(
+        spark, state_dir, checkpoint_dir, delta_dirs, base_dirs
+    )
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        on_batch(batch_df, effective_batch(batch_id))
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
+        .json(source_dir)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(processingTime="0 seconds")
+        .start()
+    )

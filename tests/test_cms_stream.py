@@ -470,6 +470,7 @@ def test_compact_gram_survives_concurrent_delta(spark, tmp_path):
     from kafka_streams_spark.operators.similarity import embedding_gram
     from kafka_streams_spark.streaming.sketch_stream import (
         _compact_deltas,
+        _gram_merge,
         read_gram,
         run_gram_stream,
     )
@@ -505,8 +506,7 @@ def test_compact_gram_survives_concurrent_delta(spark, tmp_path):
     _compact_deltas(
         spark,
         gram,
-        ["dim_i", "dim_j"],
-        ["n", "sum_i", "sum_j", "sum_prod"],
+        merge=_gram_merge,
         _after_pin=concurrent_write,
     )
 
@@ -813,6 +813,7 @@ def test_compact_crash_recovery_never_double_counts(spark, tmp_path):
     import shutil
 
     from kafka_streams_spark.streaming.sketch_stream import (
+        _cms_merge,
         _compact_deltas,
         _FOLD_MANIFEST,
     )
@@ -830,9 +831,7 @@ def test_compact_crash_recovery_never_double_counts(spark, tmp_path):
         q.stop()
 
     def fold(d, crash=None):
-        _compact_deltas(
-            spark, d, ["row_idx", "bucket"], ["counter"], _crash_after=crash
-        )
+        _compact_deltas(spark, d, merge=_cms_merge, _crash_after=crash)
 
     # healthy first fold (batches 0,1 -> -1), then one more batch on
     # the same checkpoint: the crash-injected second fold must merge
@@ -887,6 +886,7 @@ def test_recover_fold_reclaims_stale_manifest_tmp(spark, tmp_path):
     import shutil
 
     from kafka_streams_spark.streaming.sketch_stream import (
+        _cms_merge,
         _compact_deltas,
         _FOLD_MANIFEST,
     )
@@ -905,9 +905,7 @@ def test_recover_fold_reclaims_stale_manifest_tmp(spark, tmp_path):
     want = sorted(map(tuple, read_cms_sketch(spark, sketch).collect()))
 
     def fold(d, crash=None):
-        _compact_deltas(
-            spark, d, ["row_idx", "bucket"], ["counter"], _crash_after=crash
-        )
+        _compact_deltas(spark, d, merge=_cms_merge, _crash_after=crash)
 
     # crash right after the manifest landed, then simulate the WRITE
     # crash window: tmp complete, rename never happened
@@ -947,7 +945,10 @@ def test_cms_stream_fresh_checkpoint_epoch_offset(spark, tmp_path):
     files re-count (documented at-least-once, the payment-changelog
     trade) but nothing is ever replaced."""
     from kafka_streams_spark.operators.text import cms_token_sketch
-    from kafka_streams_spark.streaming.sketch_stream import _compact_deltas
+    from kafka_streams_spark.streaming.sketch_stream import (
+        _cms_merge,
+        _compact_deltas,
+    )
 
     src = str(tmp_path / "src")
     sketch = str(tmp_path / "sketch")
@@ -994,8 +995,7 @@ def test_cms_stream_fresh_checkpoint_epoch_offset(spark, tmp_path):
     _compact_deltas(
         spark,
         sketch,
-        ["row_idx", "bucket"],
-        ["counter"],
+        merge=_cms_merge,
         checkpoint_dir=str(tmp_path / "ckptB"),
     )
     parts = sorted(

@@ -81,6 +81,69 @@ def test_changelog_protocol_only_in_store():
     assert in_store >= 1, "no protocol site found in streaming/store.py"
 
 
+def _stream_start_sites(tree: ast.AST) -> list[tuple[int, str]]:
+    """A ``foreachBatch`` attribute or a non-docstring
+    ``"maxFilesPerTrigger"`` constant: a file stream started by hand."""
+    docs = _docstrings(tree)
+    sites = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+            sites.append((node.lineno, "foreachBatch"))
+        elif (
+            isinstance(node, ast.Constant)
+            and node.value == "maxFilesPerTrigger"
+            and id(node) not in docs
+        ):
+            sites.append((node.lineno, '"maxFilesPerTrigger"'))
+    return sites
+
+
+def _trigger_cap_values(tree: ast.AST) -> list[ast.AST]:
+    """The value argument of every ``.option("maxFilesPerTrigger", v)``."""
+    return [
+        node.args[1]
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "option"
+        and len(node.args) == 2
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "maxFilesPerTrigger"
+    ]
+
+
+def test_file_streams_start_in_store():
+    """Every file stream starts in ``streaming/store.py``
+    (``run_changelog_stream``): engine code elsewhere may hold no
+    ``foreachBatch`` and no ``"maxFilesPerTrigger"`` option. In the
+    store the cap is the one constant ``MAX_FILES_PER_TRIGGER``, the
+    value ``get_spark`` sets the parallel-listing threshold to; any
+    other cap would bring back the per-trigger listing job."""
+    bad, caps = [], []
+    for f, tree in _parsed():
+        if f == STORE:
+            caps = _trigger_cap_values(tree)
+            continue
+        bad += [
+            f"{f.relative_to(ROOT)}:{ln}: {what}"
+            for ln, what in _stream_start_sites(tree)
+        ]
+    assert not bad, (
+        "file stream started outside streaming/store.py (use "
+        "run_changelog_stream):\n" + "\n".join(bad)
+    )
+    # the lint must see the owner's own cap, or it has rotted
+    assert caps, "no maxFilesPerTrigger option found in streaming/store.py"
+    wrong = [
+        f"streaming/store.py:{v.lineno}: {ast.unparse(v)}"
+        for v in caps
+        if not (isinstance(v, ast.Name) and v.id == "MAX_FILES_PER_TRIGGER")
+    ]
+    assert not wrong, (
+        "maxFilesPerTrigger must be MAX_FILES_PER_TRIGGER:\n" + "\n".join(wrong)
+    )
+
+
 # The measuring tools share one timed-run protocol. perfbench/ is not
 # scanned: its timing loop is the benchmark's own, and its files stay
 # fixed so that benchmark runs remain comparable.

@@ -51,14 +51,13 @@ def load(path: str) -> dict:
                 "cannot diff this round's record"
             )
         data = data["parsed"]
-    # r5+ compact headline: stdout carries only the top-5 slowest; the
-    # full per-query map lives in a sibling detail artifact. Resolution
-    # order (r10 review fix — the fixed-name BENCH_DETAIL.json is
-    # overwritten by every run, so an older round's pointer used to
-    # fail the value-match and silently collapse that side of the diff
-    # to its top-5 subset): first the round-stamped
-    # BENCH_DETAIL_r{N}.json matching this record's filename, then the
-    # generic pointer; each candidate must value-match the record.
+    # compact headline: stdout carries only the top-5 slowest; the full
+    # per-query map lives in a sibling detail artifact. The fixed-name
+    # BENCH_DETAIL.json is overwritten by every run, so the round-stamped
+    # BENCH_DETAIL_r{N}.json matching this record's filename is tried
+    # first, then the generic pointer; each candidate must value-match
+    # the record, or that side would collapse to its top-5 subset
+    # (ROUND10_NOTES.md).
     import os
     import re
 
@@ -166,8 +165,8 @@ def main() -> int:
     old, new = load(args.old), load(args.new)
     # Refuse to diff records measured at different scale factors: every
     # ratio would be scale noise, and in the new-is-smaller direction
-    # everything reads "improved" and masks real regressions (r10
-    # review fix).
+    # everything reads "improved" and masks real regressions
+    # (ROUND10_NOTES.md).
     osf, nsf = old.get("sf"), new.get("sf")
     if osf is not None and nsf is not None and osf != nsf:
         raise SystemExit(
@@ -367,8 +366,8 @@ def main() -> int:
         elif gate < 1 / args.threshold:
             improved.append((name, oq[name], nq[name], gate))
             flag = "  improved"
-        # min-of-N protocol changed for this query (ADVICE r4): the
-        # delta conflates sample count with performance — annotate.
+        # min-of-N protocol changed for this query: the delta conflates
+        # sample count with performance — annotate.
         if name in osamp and name in nsamp and osamp[name] != nsamp[name]:
             flag += f"  [samples {osamp[name]}->{nsamp[name]}]"
         norm_col = f" {gate:6.2f}x" if cal_ratio else ""

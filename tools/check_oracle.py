@@ -32,9 +32,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
         import numpy as np
 
-        # scalar NULL-ish first (pd.NaT passes isinstance datetime and
-        # strftime raises; np.float32 NaN is not a `float` subclass —
-        # both crashed/mis-canonicalized before the r7 review fix).
+        # scalar NULL-ish first: pd.NaT passes isinstance datetime and
+        # strftime raises; np.float32 NaN is not a `float` subclass
+        # (ROUND7_NOTES.md).
         # Guarded against containers: pd.isna(list) is elementwise.
         if not isinstance(v, (list, np.ndarray, str, bytes)) and pd.isna(v):
             return "NULL"
@@ -78,7 +78,7 @@ def main() -> int:
 
     qs, oracles = e.queries(), e.oracle_sql()
     # a typo'd name would otherwise match nothing and '0/0 queries
-    # match' would read as success (r7 review wave 6)
+    # match' would read as success (ROUND7_NOTES.md)
     unknown = only - set(qs)
     if unknown:
         print(f"unknown query names: {sorted(unknown)}", file=sys.stderr)

@@ -17,11 +17,9 @@ driver runs:
    grows).
 3. warn — a non-empty ``_NEXT_ROUND_QUEUE``: the computed ordering
    made the hand-maintained queue unnecessary (strays auto-head), so
-   a surviving declaration is stale and should be pruned. (The old
-   lint FAILED when a queued name reached the head — but the computed
-   ordering puts every queued stray there immediately, so that check
-   fired on the very commit that followed the documented workflow:
-   self-defeating, r10 review fix.)
+   a surviving declaration is stale and should be pruned. A queued
+   name at the head is not an error: the computed ordering puts every
+   queued stray there at once (ROUND10_NOTES.md).
 
 Usage: python tools/freshness_lint.py   (exit 1 on class-1 violations)
 """
@@ -38,8 +36,8 @@ def main() -> int:
 
     # the ONE green predicate + window size + record parse, shared with
     # the driver ordering (__spark_entry__._is_green /
-    # _newest_green_rounds / EVIDENCE_WINDOW — r7 review wave 6: three
-    # hand-copies could drift)
+    # _newest_green_rounds / EVIDENCE_WINDOW), so copies cannot drift
+    # (ROUND7_NOTES.md)
     window = e.EVIDENCE_WINDOW
     evidence = e._newest_green_rounds()
     order = list(e.queries())

@@ -24,11 +24,9 @@ def main() -> int:
     evidence = e._newest_green_rounds()
 
     order = list(e.queries())
-    # replicate _evidence_order's SELF-DRAIN predicate exactly (r10
-    # review fix — this tool kept every _CODE_CHANGED name, so a name
-    # the driver had already re-greened at/after _CODE_CHANGED_ROUND
-    # still printed as pinned, drifting from the driver ordering the
-    # docstring promises to report):
+    # replicate _evidence_order's SELF-DRAIN predicate exactly: a
+    # _CODE_CHANGED name the driver re-greened at/after
+    # _CODE_CHANGED_ROUND is no longer pinned (ROUND10_NOTES.md):
     ccr = getattr(e, "_CODE_CHANGED_ROUND", None)
     changed = [
         q

@@ -19,9 +19,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-# generous per-gate ceilings: a wedged Spark session used to block the
-# runner forever with all output captured and nothing visible — a
-# timeout converts the hang into a FAIL line (r10 review fix)
+# generous per-gate ceilings: a wedged Spark session would block the
+# runner forever with its output captured; the timeout turns the hang
+# into a FAIL line (ROUND10_NOTES.md)
 _TIMEOUTS = {
     "pytest": 3600,
     "bench": 2400,
@@ -50,15 +50,14 @@ def run(name: str, cmd: list[str]) -> bool:
         return False
     dt = time.perf_counter() - t0
     ok = proc.returncode == 0
-    # show BOTH streams on failure: a gate that printed progress to
-    # stdout and crashed with the traceback on stderr previously hid
-    # the exception entirely (r7 review wave 6)
+    # show BOTH streams on failure: a gate may print progress to stdout
+    # and its traceback to stderr (ROUND7_NOTES.md)
     combined = "\n".join(
         part.strip() for part in (proc.stdout, proc.stderr) if part and part.strip()
     )
     tail = combined.splitlines()
     last = tail[-1] if tail else ""
-    # bench_diff exit 2 = suspects pending adjudication (r13): still a
+    # bench_diff exit 2 = suspects pending adjudication: still a
     # gate failure, but labeled distinctly so the operator runs
     # tools/ab_bench.py instead of hunting a hard regression.
     verdict = "PASS" if ok else ("SUSP" if proc.returncode == 2 else "FAIL")
@@ -69,9 +68,8 @@ def run(name: str, cmd: list[str]) -> bool:
 
 
 def main() -> int:
-    # argparse rejects mistyped flags instead of silently ignoring them
-    # (a silently-ignored --skip-benchmark used to run the 150 s bench
-    # the caller believed was skipped — r10 review fix)
+    # argparse rejects mistyped flags: an ignored --skip-benchmark would
+    # run the bench the caller meant to skip (ROUND10_NOTES.md)
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--skip-bench", action="store_true")
     ap.add_argument("--skip-tests", action="store_true")
@@ -105,9 +103,8 @@ def main() -> int:
     if not args.skip_bench:
         ok &= run("bench", [sys.executable, "bench.py"])
         # bench.py exits 0 regardless of speed; the REGRESSION gate is
-        # tools/bench_diff.py, previously wired to nothing here (r10
-        # review fix): diff the newest driver record against the fresh
-        # full detail the bench just wrote.
+        # tools/bench_diff.py: diff the newest driver record against the
+        # fresh full detail the bench just wrote (ROUND10_NOTES.md).
         from bench import bench_round_files
 
         rounds = bench_round_files()

@@ -115,9 +115,8 @@ def _prev_panel(rnd: int) -> tuple[int, dict] | None:
 
 
 def main() -> None:
-    # argparse rejects mistyped flags instead of silently ignoring them
-    # (same r10 run_all_gates fix — a stripped --pannel used to fall
-    # back to the ad-hoc DEFAULT list with no panel record at all).
+    # argparse rejects mistyped flags: an ignored --pannel would fall
+    # back to the ad-hoc DEFAULT list with no panel record at all.
     import argparse
 
     ap = argparse.ArgumentParser(description=__doc__)
@@ -162,7 +161,7 @@ def main() -> None:
     if not panel:
         return
     rnd = args.round if args.round is not None else _panel_round()
-    # Mislabeled-round guard (r13 ADVICE): _panel_round infers "newest
+    # Mislabeled-round guard (ROUND13_NOTES.md): _panel_round infers "newest
     # BENCH_r{N}.json + 1", so a panel run LATE in a round — after the
     # driver lands this round's bench record — silently writes
     # SCALE_PANEL_r{N+1}.json and every future _prev_panel diff
