@@ -139,9 +139,7 @@ def process_payments(payments: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-# Account-hash buckets for pruned point lookups — ONE definition shared
-# by the batch BalanceStore below and the streaming base snapshot
-# (kafka_streams_spark.streaming.router re-exports it).
+# Account-hash buckets for the batch BalanceStore's pruned point lookups.
 N_BALANCE_BUCKETS = 64
 
 
@@ -155,9 +153,9 @@ def balance_bucket(account_col):
 # Declared read schemas of the streaming balance store (the changelog
 # and its base snapshot — streaming.router). Declaring them spares every
 # read parquet's footer-inference job. ``ingest_batch`` is the
-# changelog's partition column; changelog files written while ``bucket``
-# was a data column still read through this schema (the column is
-# ignored). The base keeps ``bucket`` derived by :func:`balance_bucket`.
+# changelog's partition column. Changelog and base files written while
+# ``bucket`` was a data column still read through these schemas (the
+# column is ignored).
 BALANCE_DELTA_SCHEMA = StructType(
     [
         StructField("fromAccount", StringType()),
@@ -169,7 +167,6 @@ BALANCE_BASE_SCHEMA = StructType(
     [
         StructField("fromAccount", StringType()),
         StructField("balance", LongType()),
-        StructField("bucket", LongType()),
     ]
 )
 
@@ -186,8 +183,7 @@ class BalanceStore:
     bucket directory — O(one bucket), not O(state) and not one full
     aggregation re-run per lookup (the pre-r13 batch shape). The
     streaming twin is ``streaming.router.BalanceView``, which serves the
-    same lookup over the base+changelog composition; its base snapshot
-    derives the bucket via the same :func:`balance_bucket`."""
+    same lookup over the base+changelog composition."""
 
     def __init__(self, spark, path: str):
         self._spark = spark

@@ -40,9 +40,7 @@ from pyspark.sql.streaming import StreamingQuery
 from kafka_streams_spark.operators.payments import (
     BALANCE_BASE_SCHEMA,
     BALANCE_DELTA_SCHEMA,
-    N_BALANCE_BUCKETS,  # re-export: one bucket-layout definition (r13)
     account_balances,
-    balance_bucket,
     branch_by_rails,
     route_and_convert,
 )
@@ -264,7 +262,6 @@ def compact_balances(spark: SparkSession, out_dir: str) -> int | None:
             _balance_log(spark, delta_dir, base_dir, old_hwm, upto=hwm)
             .groupBy("fromAccount")
             .agg(F.sum("delta").alias("balance"))
-            .withColumn("bucket", balance_bucket(F.col("fromAccount")))
             .sortWithinPartitions("fromAccount")
         )
 

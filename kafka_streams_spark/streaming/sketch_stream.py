@@ -15,15 +15,19 @@ randomness) and overwrites its own partition with the same rows.
 This is the 100 TB shape for "what are the hot tokens in today's
 crawl": state is O(d·w·batches) tiny rows, the merge is one partial-
 aggregated shuffle of those rows, and no full-vocabulary aggregation
-ever runs. Compaction folds closed partitions into the reserved
-``ingest_batch=-1`` partition (:func:`_compact_deltas`).
+ever runs. Compaction folds closed partitions into a base snapshot at
+``<store>/_base/hwm=N/`` with the store's hwm-base fold
+(:func:`store.fold_into_base`); Spark's file index skips the
+underscore-prefixed ``_base``, so a plain read of the store sees only
+its deltas.
 
 Every stream here starts through :func:`store.run_changelog_stream`
 (most via :func:`_run_delta_stream`, which writes the batch's delta),
 and each mergeable sketch states its merge once (``_cms_merge``,
 ``_gram_merge``, ``_hist_merge``, ``_key_profile_merge``,
-``_kmv_merge``, ``_rank_merge``): its ``read_*`` applies it to every
-delta and its ``compact_*`` to the pinned ones.
+``_kmv_merge``, ``_rank_merge``): its ``read_*`` applies it to the base
+and the deltas above it, and its ``compact_*`` to the base and the
+closed deltas (:func:`_fold_sketch`).
 """
 
 from __future__ import annotations
@@ -37,38 +41,48 @@ from pyspark.sql.types import StructType
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA, EMB_SCHEMA
 from kafka_streams_spark.streaming.store import (
     _check_sketch_meta,
-    _fs,
-    _read_json_file,
-    _registered_offset,
-    _rename,
     _stamp_sketch_store,
-    _try_read_parquet,
-    _write_json_file,
+    fold_into_base,
+    read_changelog,
     run_changelog_stream,
     write_batch,
 )
 
-# reserved ingest_batch partition ids: -1 holds the compacted fold, -2 is
-# the fold's staging partition (invisible to every reader — see
-# _compact_deltas and _read_delta_store)
-_FOLD_STAGE = -2
-_FOLD_MANIFEST = "_fold_pin.json"
+
+def _base_dir(store_dir: str) -> str:
+    return f"{store_dir}/_base"
 
 
 def _read_delta_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Every reader's view of a batch-partitioned delta store: all
-    partitions EXCEPT the fold-staging partition a live (or crashed)
-    :func:`_compact_deltas` may have left at ``ingest_batch=-2`` —
-    the stage duplicates the fold's inputs until the swap completes,
-    so counting it would double (and with ``-1`` present, triple)
-    every folded row. A store that exists but holds no delta yet (the
-    ``_sketch_meta.json`` / ``_epochs.json`` sidecars land before the
-    first data write) raises a clear FileNotFoundError instead of
-    Spark's UNABLE_TO_INFER_SCHEMA."""
-    df = _try_read_parquet(spark, store_dir)
+    """Every reader's view of a sketch or index store: the newest base
+    plus the deltas above it (:func:`store.read_changelog`). A store
+    that holds no delta yet (the ``_sketch_meta.json`` /
+    ``_epochs.json`` sidecars land before the first data write) raises
+    a clear FileNotFoundError instead of Spark's
+    UNABLE_TO_INFER_SCHEMA."""
+    df = read_changelog(spark, store_dir, _base_dir(store_dir))
     if df is None:
         raise FileNotFoundError(f"no deltas under {store_dir} yet")
-    return df.filter(F.col("ingest_batch") != _FOLD_STAGE)
+    return df
+
+
+def _fold_sketch(
+    spark: SparkSession, store_dir: str, merge: Callable[[DataFrame], DataFrame]
+) -> None:
+    """Fold a store's closed deltas into ``<store_dir>/_base/hwm=N/``
+    with :func:`store.fold_into_base`; the new base is ``merge`` (the
+    one the store's reader applies) over the old base and the deltas up
+    to ``hwm``."""
+    fold_into_base(
+        spark,
+        store_dir,
+        _base_dir(store_dir),
+        lambda old_hwm, hwm: merge(
+            _read_delta_store(spark, store_dir).filter(
+                F.col("ingest_batch") <= hwm
+            )
+        ),
+    )
 
 
 def _run_delta_stream(
@@ -89,8 +103,8 @@ def _run_delta_stream(
         write_batch(delta_of(batch_df), store_dir, batch_id)
 
     return run_changelog_stream(
-        spark, schema, source_dir, checkpoint_dir, store_dir, [store_dir], [],
-        update,
+        spark, schema, source_dir, checkpoint_dir, store_dir, [store_dir],
+        [_base_dir(store_dir)], update,
     )
 
 
@@ -166,19 +180,14 @@ def read_cms_sketch(
     return _cms_merge(_read_delta_store(spark, sketch_dir))
 
 
-def compact_cms(
-    spark: SparkSession,
-    sketch_dir: str,
-    *,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Fold all batch-delta partitions into the reserved ``-1``
-    partition — :func:`_compact_deltas` with the per-(row_idx, bucket)
-    counter sum, behind the stamp gate. The grid parameters are
-    not needed — counters sum grid-agnostically; only estimate
-    read-offs are grid-sensitive (:func:`read_cms_sketch`)."""
+def compact_cms(spark: SparkSession, sketch_dir: str) -> None:
+    """Fold the closed batch deltas into the store's base snapshot —
+    :func:`_fold_sketch` with the per-(row_idx, bucket) counter sum,
+    behind the stamp gate. The grid parameters are not needed —
+    counters sum grid-agnostically; only estimate read-offs are
+    grid-sensitive (:func:`read_cms_sketch`)."""
     _check_sketch_meta(spark, sketch_dir, {"kind": "cms"})
-    _compact_deltas(spark, sketch_dir, _cms_merge, checkpoint_dir=checkpoint_dir)
+    _fold_sketch(spark, sketch_dir, _cms_merge)
 
 
 # ---------------------------------------------------------------------------
@@ -272,8 +281,8 @@ def run_gram_stream(
                 batch_df.unpersist()
 
     return run_changelog_stream(
-        spark, EMB_SCHEMA, source_dir, checkpoint_dir, gram_dir, [gram_dir], [],
-        update,
+        spark, EMB_SCHEMA, source_dir, checkpoint_dir, gram_dir, [gram_dir],
+        [_base_dir(gram_dir)], update,
     )
 
 
@@ -290,215 +299,16 @@ def read_gram(
     return _gram_merge(_read_delta_store(spark, gram_dir))
 
 
-def _committed_batch_ids(spark: SparkSession, checkpoint_dir: str) -> set:
-    """Batch ids recorded in the stream's Structured Streaming commit
-    log (``{checkpoint}/commits``). A batch present there is never
-    re-delivered on restart — the set compaction may safely fold."""
-    fs, HPath = _fs(spark, checkpoint_dir)
-    p = HPath(f"{checkpoint_dir}/commits")
-    out: set = set()
-    if not fs.exists(p):
-        return out
-    for st in fs.listStatus(p):
-        base = st.getPath().getName().split(".")[0]
-        if base.lstrip("-").isdigit():
-            out.add(int(base))
-    return out
-
-
-def _recover_fold(spark: SparkSession, delta_dir: str) -> None:
-    """Finish or unwind a crashed :func:`_compact_deltas` swap. The
-    manifest (``_fold_pin.json``) is written ONLY AFTER the staging
-    partition commits, so its presence proves the stage's content is
-    the complete fold of ``-1`` ∪ the pinned batches:
-
-    - manifest + stage present → the swap never finished: delete the
-      superseded ``-1`` (its rows are in the stage), rename the stage
-      in, delete the pinned partitions, drop the manifest;
-    - manifest present, stage gone → the rename happened: finish the
-      pinned deletes, drop the manifest;
-    - stage present, no manifest → the fold never reached its swap (and
-      deleted nothing): the stage is debris, delete it.
-
-    Idempotent; assumes a single compactor and atomic directory rename
-    (HDFS/local — on raw S3A the rename widens to a copy)."""
-    fs, HPath = _fs(spark, delta_dir)
-    stage = HPath(f"{delta_dir}/ingest_batch={_FOLD_STAGE}")
-    manifest_str = f"{delta_dir}/{_FOLD_MANIFEST}"
-    m = _read_json_file(spark, manifest_str)
-
-    def _drop_manifest() -> None:
-        # Delete the manifest AND its .tmp: after a crash between
-        # completing the tmp and renaming it, _read_json_file returns the
-        # tmp's pin list, and a stale tmp left behind would make a LATER
-        # crashed compaction "recover" against the OLD pin list (row loss
-        # or double count).
-        for suffix in ("", ".tmp"):
-            p = HPath(manifest_str + suffix)
-            if fs.exists(p):
-                fs.delete(p, False)
-
-    if m is None:
-        if fs.exists(stage):
-            fs.delete(stage, True)
-        # an unparsable .tmp is mid-create debris; reclaim it so it can
-        # never shadow a future manifest read
-        _drop_manifest()
-        return
-    final = HPath(f"{delta_dir}/ingest_batch=-1")
-    if fs.exists(stage):
-        if fs.exists(final):
-            fs.delete(final, True)
-        _rename(fs, stage, final)
-    for b in m["pinned"]:
-        p = HPath(f"{delta_dir}/ingest_batch={b}")
-        if fs.exists(p):
-            fs.delete(p, True)
-    _drop_manifest()
-
-
-def _compact_deltas(
-    spark: SparkSession,
-    delta_dir: str,
-    merge: Callable[[DataFrame], DataFrame],
-    *,
-    checkpoint_dir: str | None = None,
-    _after_pin=None,
-    _crash_after: str | None = None,
-) -> None:
-    """Shared safe-under-concurrency compaction for batch-partitioned
-    delta tables: fold the partitions PINNED AT SNAPSHOT TIME into the
-    reserved ``-1`` partition, then delete exactly those partitions.
-    ``merge`` is the store's associative fold (pinned deltas, without
-    the ``ingest_batch`` column → merged rows), the same one its reader
-    applies to every delta. EVERY delta store's compaction routes
-    through here — one protocol, one place to fix.
-
-    Concurrency contract: a full-table overwrite would delete any delta
-    a live micro-batch wrote between the read and the commit — counts
-    lost permanently (the checkpoint prevents replay). So the batch-id
-    set is pinned FIRST, the merge reads only those partitions (``isin``
-    filter), and only the pinned partitions are deleted afterwards — a
-    delta landing mid-compaction is in neither the merge nor the delete
-    set and survives intact.
-
-    Replay contract: a batch whose foreachBatch write succeeded but
-    whose checkpoint COMMIT did not will be re-delivered on restart —
-    if compaction had folded and deleted its partition in between, the
-    replayed write would re-create it and the store would count it
-    TWICE, permanently. Pass ``checkpoint_dir`` (recommended) and the
-    pin set is intersected with the stream's commit log, so only
-    never-replayable batches fold; an uncommitted delta stays a delta
-    until its commit lands. Without ``checkpoint_dir``, the caller must
-    only compact while the stream is stopped AND fully committed.
-
-    Crash safety: overwriting ``-1`` and then deleting the pinned
-    partitions would leave the folded rows on disk TWICE after a crash
-    between the two, and the next compaction would fold them again. So
-    the fold is STAGED: written to the reader-invisible
-    ``ingest_batch=-2`` partition, a pin manifest is persisted only
-    after the stage commits, and the swap (delete old ``-1`` → rename
-    stage in → delete pinned → drop manifest) is finished or unwound by
-    :func:`_recover_fold` at the start of every compaction. No crash
-    point re-folds or loses a row.
-
-    Epoch translation: the stream's commit log records
-    checkpoint-relative batch ids, but partitions live on the store's
-    epoch axis (``store.epoch_mapper``); the pin maps committed ids
-    through the store's registered epoch offset, and partitions BELOW the
-    current generation's offset (abandoned earlier checkpoints —
-    starting a new generation supersedes them) always fold.
-
-    Read visibility: between the rename and the last pinned-partition
-    delete, a concurrent reader can see a pinned delta twice (once
-    folded, once not) — transient inflation, the delete loop only; and
-    for the instant between the old ``-1`` delete and the rename, a
-    reader can miss the previously folded rows — transient undercount,
-    one rename wide. Run compaction from the maintenance path if
-    readers need exact values at every instant — documented, not
-    hidden."""
-    _recover_fold(spark, delta_dir)
-    df = _try_read_parquet(spark, delta_dir)
-    if df is None:
-        return  # store missing or holds only sidecars: nothing to fold
-    batch_ids = [r[0] for r in df.select("ingest_batch").distinct().collect()]
-    if checkpoint_dir is not None:
-        committed = _committed_batch_ids(spark, checkpoint_dir)
-        off = _registered_offset(spark, delta_dir, checkpoint_dir)
-        # Spark PURGES old commit-log entries (minBatchesToRetain,
-        # default 100), so "not listed" does not mean "not committed":
-        # the log is sequential, so every id below the oldest RETAINED
-        # commit must have committed for the newer ones to exist.
-        # Without this floor a long-lived stream's older partitions
-        # fall out of the retention window and can never fold — the
-        # unbounded growth compaction exists to stop.
-        floor = min(committed) if committed else 0
-        batch_ids = [
-            b
-            for b in batch_ids
-            if b == -1
-            or b < off  # abandoned earlier generations always fold
-            or (b - off) in committed
-            or 0 <= (b - off) < floor  # committed, then purged from the log
-        ]
-    if _after_pin is not None:
-        _after_pin()  # test-only: simulate a delta landing mid-compaction
-    pinned = sorted(b for b in batch_ids if b >= 0)
-    if not pinned:
-        return  # nothing newly closed: folding -1 into itself is a no-op
-    # Re-read so the file index sees any partition written after the pin
-    # (it must NOT be merged — the isin filter excludes it — and must
-    # NOT be deleted — its id is not pinned).
-    snap = spark.read.parquet(delta_dir).filter(
-        F.col("ingest_batch").isin(batch_ids)
-    )
-    merged = merge(snap.drop("ingest_batch"))
-
-    fs, HPath = _fs(spark, delta_dir)
-    stage_str = f"{delta_dir}/ingest_batch={_FOLD_STAGE}"
-    # stage the fold OUTSIDE the readable set (readers filter -2); the
-    # write reads -1 and the pinned partitions, which stay untouched
-    merged.write.mode("overwrite").parquet(stage_str)
-    if _crash_after == "stage":
-        raise RuntimeError("injected crash: after stage commit")
-    # the manifest is the swap's commit point: written only after the
-    # stage committed, so recovery may always trust the staged content
-    _write_json_file(
-        spark, f"{delta_dir}/{_FOLD_MANIFEST}", {"pinned": pinned}
-    )
-    if _crash_after == "manifest":
-        raise RuntimeError("injected crash: after manifest")
-    final = HPath(f"{delta_dir}/ingest_batch=-1")
-    if fs.exists(final):
-        fs.delete(final, True)  # superseded: its rows are in the stage
-    if _crash_after == "unfold":
-        raise RuntimeError("injected crash: after -1 delete")
-    _rename(fs, HPath(stage_str), final)
-    if _crash_after == "rename":
-        raise RuntimeError("injected crash: after rename")
-    for i, b in enumerate(pinned):
-        fs.delete(HPath(f"{delta_dir}/ingest_batch={b}"), True)
-        if _crash_after == "first_delete" and i == 0:
-            raise RuntimeError("injected crash: after first pinned delete")
-    fs.delete(HPath(f"{delta_dir}/{_FOLD_MANIFEST}"), False)
-
-
 def compact_gram(
-    spark: SparkSession,
-    gram_dir: str,
-    *,
-    checkpoint_dir: str | None = None,
-    scale: int = 10**3,
+    spark: SparkSession, gram_dir: str, *, scale: int = 10**3
 ) -> None:
-    """Fold all batch-delta partitions into a single partition holding
-    their sums — the changelog compaction step (same economics as the
+    """Fold the closed batch deltas into a base snapshot holding their
+    sums — the changelog compaction step (same economics as the
     router's): read cost of :func:`read_gram` drops from d²·batches
     rows back to d², and the stream keeps appending new deltas after.
-    Safe to run against a live stream: see :func:`_compact_deltas` for
-    the snapshot-pin / dynamic-overwrite / targeted-delete protocol and
-    why ``checkpoint_dir`` should be passed (replay safety)."""
+    Safe beside a live stream (:func:`store.fold_into_base`)."""
     _check_sketch_meta(spark, gram_dir, {"kind": "gram", "scale": int(scale)})
-    _compact_deltas(spark, gram_dir, _gram_merge, checkpoint_dir=checkpoint_dir)
+    _fold_sketch(spark, gram_dir, _gram_merge)
 
 
 def run_pq_encode_stream(
@@ -624,17 +434,15 @@ def compact_histogram(
     spark: SparkSession,
     hist_dir: str,
     *,
-    checkpoint_dir: str | None = None,
     bin_width_cents: int = 1600,
     scale: int = 100,
 ) -> None:
-    """Fold all batch-delta partitions into the reserved ``-1``
-    partition (same economics and collision rule as
-    :func:`compact_gram`): read cost drops from buckets·batches rows
-    back to buckets, and the stream keeps appending new deltas after.
-    Live-stream-safe via :func:`_compact_deltas`."""
+    """Fold the closed batch deltas into the store's base snapshot (same
+    economics as :func:`compact_gram`): read cost drops from
+    buckets·batches rows back to buckets, and the stream keeps
+    appending new deltas after."""
     _check_sketch_meta(spark, hist_dir, _hist_meta(bin_width_cents, scale))
-    _compact_deltas(spark, hist_dir, _hist_merge, checkpoint_dir=checkpoint_dir)
+    _fold_sketch(spark, hist_dir, _hist_merge)
 
 
 def run_binarize_stream(
@@ -761,22 +569,11 @@ def read_kmv(spark: SparkSession, sketch_dir: str, k: int = 256) -> DataFrame:
     return kmv_read_off(state, ["source"], k=k)
 
 
-def compact_kmv(
-    spark: SparkSession,
-    sketch_dir: str,
-    *,
-    k: int = 256,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Fold all batch partials into the reserved ``-1`` partition —
-    :func:`_compact_deltas` with the per-group bottom-k merge."""
+def compact_kmv(spark: SparkSession, sketch_dir: str, *, k: int = 256) -> None:
+    """Fold the closed batch partials into the store's base snapshot —
+    :func:`_fold_sketch` with the per-group bottom-k merge."""
     _check_sketch_meta(spark, sketch_dir, {"kind": "kmv", "k": int(k)})
-    _compact_deltas(
-        spark,
-        sketch_dir,
-        lambda df: _kmv_merge(df, k),
-        checkpoint_dir=checkpoint_dir,
-    )
+    _fold_sketch(spark, sketch_dir, lambda df: _kmv_merge(df, k))
 
 
 def run_key_profile_stream(
@@ -814,14 +611,10 @@ def read_key_profile(spark: SparkSession, profile_dir: str) -> DataFrame:
     return _key_profile_merge(_read_delta_store(spark, profile_dir))
 
 
-def compact_key_profile(
-    spark: SparkSession, profile_dir: str, *, checkpoint_dir: str | None = None
-) -> None:
-    """Fold all batch deltas into the reserved ``-1`` partition —
-    :func:`_compact_deltas` with the grouped-sum merge."""
-    _compact_deltas(
-        spark, profile_dir, _key_profile_merge, checkpoint_dir=checkpoint_dir
-    )
+def compact_key_profile(spark: SparkSession, profile_dir: str) -> None:
+    """Fold the closed batch deltas into the store's base snapshot —
+    :func:`_fold_sketch` with the grouped-sum merge."""
+    _fold_sketch(spark, profile_dir, _key_profile_merge)
 
 
 def run_posting_profile_stream(
@@ -927,19 +720,10 @@ def read_rank_sketch(spark: SparkSession, sketch_dir: str, k: int = 1024) -> Dat
 
 
 def compact_rank_sketch(
-    spark: SparkSession,
-    sketch_dir: str,
-    *,
-    k: int = 1024,
-    checkpoint_dir: str | None = None,
+    spark: SparkSession, sketch_dir: str, *, k: int = 1024
 ) -> None:
-    """Fold all batch partials into the reserved ``-1`` partition —
-    :func:`_compact_deltas` with the bottom-k merge instead of a
+    """Fold the closed batch partials into the store's base snapshot —
+    :func:`_fold_sketch` with the bottom-k merge instead of a
     groupBy-sum."""
     _check_sketch_meta(spark, sketch_dir, {"kind": "rank", "k": int(k)})
-    _compact_deltas(
-        spark,
-        sketch_dir,
-        lambda df: _rank_merge(df, k),
-        checkpoint_dir=checkpoint_dir,
-    )
+    _fold_sketch(spark, sketch_dir, lambda df: _rank_merge(df, k))

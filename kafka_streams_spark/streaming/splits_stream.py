@@ -67,11 +67,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kafka_streams_spark.streaming.ingest import DOC_SCHEMA
 from kafka_streams_spark.streaming.store import (
-    _latest_hwm,
     _list_partition_values,
     _stamp_sketch_store,
-    _try_read_parquet,
     fold_into_base,
+    read_changelog,
     run_changelog_stream,
     write_batch,
 )
@@ -83,45 +82,32 @@ def _read_store(
     name: str,
     exclude_batch: int | None = None,
 ) -> DataFrame | None:
-    """Base-aware merge-on-read: max-hwm base snapshot (stamped
-    ``ingest_batch = hwm`` so latest-wins windows need no special case)
-    unioned with delta partitions ``ingest_batch > hwm`` — the reader
-    half of the :func:`compact_split_stores` contract: delta partitions
-    a crashed compaction folded but did not yet delete are excluded by
-    the partition-column predicate (pruned at planning time, never
-    scanned), so readers racing a compaction see each row exactly once.
-    ``caps`` delta rows get their batch id as ``src_batch``, the column
-    its base keeps.
+    """One store's merge-on-read (:func:`store.read_changelog`): the
+    newest ``<name>_base`` snapshot plus the deltas above it, the reader
+    half of the :func:`compact_split_stores` contract. ``caps`` delta
+    rows get their batch id as ``src_batch``, the column its base keeps.
 
-    ``exclude_batch`` additionally hides the replaying batch's own
-    delta partition (at-least-once replay idempotence). It never
-    applies to the base: compaction folds only batches strictly below
-    a store's newest delta partition, so an in-flight batch id cannot
-    have been folded — and on a fresh-checkpoint replay (batch ids
-    restart) re-delivered docs are SUPPOSED to see their prior
-    assignment and be dropped as re-deliveries.
+    ``exclude_batch`` hides the replaying batch's own delta partition
+    (at-least-once replay idempotence). The base never carries that id:
+    compaction folds only batches strictly below a store's newest delta
+    partition, so an in-flight batch id cannot have been folded — and
+    on a fresh-checkpoint replay (batch ids restart) re-delivered docs
+    are SUPPOSED to see their prior assignment and be dropped as
+    re-deliveries.
     """
-    deltas = _try_read_parquet(spark, f"{store_dir}/{name}")
-    hwm = _latest_hwm(spark, f"{store_dir}/{name}_base")
-    if deltas is not None:
-        if name == "caps":
-            deltas = deltas.withColumn("src_batch", F.col("ingest_batch"))
-        if hwm is not None:
-            deltas = deltas.filter(F.col("ingest_batch") > hwm)
-        if exclude_batch is not None:
-            deltas = deltas.filter(F.col("ingest_batch") != exclude_batch)
-    if hwm is None:
-        return deltas
-    base_path = f"{store_dir}/{name}_base/hwm={hwm}"
-    base = _try_read_parquet(spark, base_path)
-    if base is None:
-        # data files gone between the hwm listing and the read, or an
-        # empty-but-committed snapshot
-        raise FileNotFoundError(
-            f"base snapshot {base_path} is committed but unreadable"
-        )
-    base = base.withColumn("ingest_batch", F.lit(hwm))
-    return base if deltas is None else deltas.unionByName(base)
+    df = read_changelog(
+        spark, f"{store_dir}/{name}", f"{store_dir}/{name}_base"
+    )
+    if df is None:
+        return None
+    if name == "caps":
+        src = F.col("ingest_batch")
+        if "src_batch" in df.columns:  # folded rows keep theirs
+            src = F.coalesce(F.col("src_batch"), src)
+        df = df.withColumn("src_batch", src)
+    if exclude_batch is not None:
+        df = df.filter(F.col("ingest_batch") != exclude_batch)
+    return df
 
 
 def _latest_members(members: DataFrame) -> DataFrame:

@@ -16,11 +16,11 @@ Every file stream in the package starts here
 ``foreachBatch`` query, and the epoch-mapped ``ingest_batch`` id
 handed to the stream's batch function.
 
-Compaction has two forms. :func:`fold_into_base` folds closed
-partitions into a ``hwm=N`` base snapshot that readers union with the
-deltas ``> N`` (the balances and the split stores). The sketch stores
-fold into a reserved ``ingest_batch=-1`` partition through a staged
-swap pinned to the stream's commit log (``sketch_stream._compact_deltas``).
+Compaction has one form: :func:`fold_into_base` folds the closed
+partitions of every compactable store (the balances, the split stores
+and the sketch stores) into a ``hwm=N`` base snapshot, and
+:func:`read_changelog` reads the newest committed base unioned with the
+deltas ``> N``.
 
 All listing, rename and delete goes through the Hadoop FileSystem API,
 never ``os``/``glob``, so a store works on HDFS, S3A or local disk. This
@@ -64,12 +64,14 @@ def _list_partition_values(
     spark: SparkSession, dir_str: str, key: str
 ) -> list[int]:
     """Sorted integer values of ``key=N`` child directories (empty list
-    when the directory does not exist)."""
+    when the directory does not exist). Negative values count: a store
+    compacted by the earlier reserved-partition fold holds an
+    ``ingest_batch`` of -1, which then folds like any closed delta."""
     fs, HPath = _fs(spark, dir_str)
     statuses = fs.globStatus(HPath(f"{dir_str}/{key}=*"))
     out = []
     for st in statuses or []:
-        m = re.search(rf"{key}=(\d+)$", st.getPath().toString())
+        m = re.search(rf"{key}=(-?\d+)$", st.getPath().toString())
         if m and st.isDirectory():
             out.append(int(m.group(1)))
     return sorted(out)
@@ -291,19 +293,6 @@ def _epoch_offset(
     return offset + batch_id
 
 
-def _registered_offset(
-    spark: SparkSession, state_dir: str, checkpoint_dir: str
-) -> int:
-    """The offset ``_epochs.json`` holds for the checkpoint's query; 0
-    when the query never started or never registered."""
-    try:
-        qid = _query_id(spark, checkpoint_dir)
-    except FileNotFoundError:
-        return 0
-    epochs = _read_json_file(spark, f"{state_dir}/{_EPOCHS}") or {}
-    return int(epochs.get(qid, 0))
-
-
 def epoch_mapper(
     spark: SparkSession,
     state_dir: str,
@@ -356,12 +345,14 @@ def fold_into_base(
     fold that crashed between writing its base and deleting its
     deltas, the already-folded partitions are still on disk.
 
-    Only batches strictly below the newest delta partition fold: the
-    stream may replay (and overwrite) the newest after a crash. Readers
-    take the newest committed base plus the deltas ``> hwm``, so a fold
-    running beside them, or one that crashed part-way, never changes
-    what they read. Order: write the base, delete the old base, delete
-    the folded deltas; the next call finishes a crashed fold's cleanup.
+    Only batches strictly below the newest delta partition fold: a
+    ``foreachBatch`` query runs its batches one at a time, so the newest
+    is the only one a restart can replay (and overwrite). Readers
+    (:func:`read_changelog`) take the newest committed base plus the
+    deltas ``> hwm``, so a fold running beside them, or one that crashed
+    part-way, never changes what they read. Order: write the base,
+    delete the old base, delete the folded deltas; the next call
+    finishes a crashed fold's cleanup.
     """
     fs, HPath = _fs(spark, delta_dir)
     batches = _list_partition_values(spark, delta_dir, "ingest_batch")
@@ -383,6 +374,38 @@ def fold_into_base(
         if b <= hwm:
             fs.delete(HPath(f"{delta_dir}/ingest_batch={b}"), True)
     return hwm
+
+
+def read_changelog(
+    spark: SparkSession, delta_dir: str, base_dir: str
+) -> DataFrame | None:
+    """Merge-on-read of a store that :func:`fold_into_base` compacts:
+    the newest committed base under ``base_dir``, stamped
+    ``ingest_batch = hwm``, unioned with the ``delta_dir`` partitions
+    ``ingest_batch > hwm``; None when the store holds neither.
+
+    The ``> hwm`` predicate is on the partition column, so deltas that a
+    running or crashed fold has folded but not yet deleted are pruned at
+    planning time and every row is read once. A column that only the
+    base or only the deltas carry reads NULL on the other side. A
+    committed base that cannot be read raises: reading on without it
+    would drop every folded row."""
+    deltas = _try_read_parquet(spark, delta_dir)
+    hwm = _latest_hwm(spark, base_dir)
+    if hwm is None:
+        return deltas
+    base_path = f"{base_dir}/hwm={hwm}"
+    base = _try_read_parquet(spark, base_path)
+    if base is None:
+        raise FileNotFoundError(
+            f"base snapshot {base_path} is committed but unreadable"
+        )
+    base = base.withColumn("ingest_batch", F.lit(hwm))
+    if deltas is None:
+        return base
+    return deltas.filter(F.col("ingest_batch") > hwm).unionByName(
+        base, allowMissingColumns=True
+    )
 
 
 def run_changelog_stream(

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+
+import pytest
 
 from kafka_streams_spark.streaming.sketch_stream import (
     read_cms_sketch,
@@ -27,6 +30,21 @@ def _write(src: str, name: str, rows: list[dict]) -> None:
     with open(os.path.join(src, name), "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
+
+
+def _layout(store: str) -> tuple[list[int], list[int]]:
+    """A sketch store on disk: (its ``_base/hwm=N`` snapshots, its
+    ``ingest_batch=N`` delta partitions), each sorted."""
+    base = os.path.join(store, "_base")
+    hwms = os.listdir(base) if os.path.isdir(base) else []
+    return (
+        sorted(int(h.split("=")[1]) for h in hwms if h.startswith("hwm=")),
+        sorted(
+            int(p.split("=")[1])
+            for p in os.listdir(store)
+            if p.startswith("ingest_batch=")
+        ),
+    )
 
 
 def test_cms_stream_equals_batch_sketch_of_everything(spark, tmp_path):
@@ -154,8 +172,9 @@ def test_gram_stream_equals_batch_gram_of_everything(spark, tmp_path):
 
 
 def test_compact_gram_preserves_merged_state(spark, tmp_path):
-    """Compaction folds N delta partitions into one without changing
-    the merged statistic; subsequent deltas keep accumulating."""
+    """Compaction folds the closed delta partitions into the base
+    without changing the merged statistic; subsequent deltas keep
+    accumulating."""
     from kafka_streams_spark.operators.similarity import embedding_gram
     from kafka_streams_spark.streaming.sketch_stream import (
         compact_gram,
@@ -179,8 +198,7 @@ def test_compact_gram_preserves_merged_state(spark, tmp_path):
     compact_gram(spark, gram)
     after = sorted(map(tuple, read_gram(spark, gram).collect()))
     assert before == after
-    n_parts = spark.read.parquet(gram).select("ingest_batch").distinct().count()
-    assert n_parts == 1
+    assert _layout(gram) == ([0], [1])
 
     # the stream keeps appending deltas after compaction and the merge
     # still equals the batch gram of everything
@@ -269,9 +287,10 @@ def test_pq_encode_stream_builds_live_code_index(spark, tmp_path):
 
 def test_histogram_stream_equals_batch_and_compacts(spark, tmp_path):
     """Merged streamed doc-length histogram == one-shot batch histogram
-    of everything ingested; compaction folds deltas into the reserved
-    -1 partition without changing the merged view; replayed batches are
-    idempotent (same deterministic delta overwrites its own partition)."""
+    of everything ingested; compaction folds the closed deltas into the
+    ``_base`` snapshot without changing the merged view; replayed
+    batches are idempotent (same deterministic delta overwrites its own
+    partition)."""
     from pyspark.sql import functions as F
 
     from kafka_streams_spark.operators.profiling import value_histogram
@@ -311,8 +330,11 @@ def test_histogram_stream_equals_batch_and_compacts(spark, tmp_path):
         map(tuple, read_histogram(spark, hist, bin_width_cents=400).collect())
     )
     assert after == expected
+    # the base holds batch 0; a plain read of the store sees only the
+    # newest delta (the file index skips ``_base``)
+    assert _layout(hist) == ([0], [1])
     parts = {r["ingest_batch"] for r in spark.read.parquet(hist).select("ingest_batch").distinct().collect()}
-    assert parts == {-1}
+    assert parts == {1}
 
 
 def test_binarize_stream_index_equals_batch_and_ranks_identically(spark, tmp_path):
@@ -461,65 +483,60 @@ def test_scorecard_stream_equals_batch_and_trends(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
 
-def test_compact_gram_survives_concurrent_delta(spark, tmp_path):
-    """The round-7 advice race: a delta partition written BETWEEN the
-    compactor's snapshot pin and its partition deletes must survive
-    with its counts intact (the old static full-table overwrite deleted
-    it). The _after_pin hook injects the concurrent write at exactly
-    the race window."""
+def _stream_beside_fold(monkeypatch, stream_batch) -> None:
+    """Make the next sketch compaction call ``stream_batch()`` inside its
+    fold: after the fold listed the delta partitions and planned its
+    base, before it writes the base and deletes anything."""
+    from kafka_streams_spark.streaming import sketch_stream
+
+    fold = sketch_stream.fold_into_base
+
+    def fold_beside(spark, delta_dir, base_dir, build):
+        def build_beside(old_hwm, hwm):
+            base = build(old_hwm, hwm)
+            stream_batch()
+            return base
+
+        return fold(spark, delta_dir, base_dir, build_beside)
+
+    monkeypatch.setattr(sketch_stream, "fold_into_base", fold_beside)
+
+
+def test_compact_gram_survives_concurrent_delta(spark, tmp_path, monkeypatch):
+    """A stream batch that lands while the fold runs survives with its
+    counts intact: the fold folds only the partitions it listed, below
+    the newest, and deletes only those."""
     from kafka_streams_spark.operators.similarity import embedding_gram
     from kafka_streams_spark.streaming.sketch_stream import (
-        _compact_deltas,
-        _gram_merge,
+        compact_gram,
         read_gram,
         run_gram_stream,
     )
-    from pyspark.sql import functions as F
 
     src = str(tmp_path / "src")
     gram = str(tmp_path / "gram")
-    ckpt = str(tmp_path / "ckpt")
+    late = [{"vec_id": 9, "embedding": [4.0, 0.5, -1.0], "label": "b"}]
     _write(src, "b1.json", EMBS_A)
-    q = run_gram_stream(spark, src, gram, ckpt)
+    q = run_gram_stream(spark, src, gram, str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
         _write(src, "b2.json", EMBS_B)
         q.processAllAvailable()
+
+        def stream_writes():
+            _write(src, "b3.json", late)
+            q.processAllAvailable()
+
+        _stream_beside_fold(monkeypatch, stream_writes)
+        compact_gram(spark, gram)
     finally:
         q.stop()
 
-    late = spark.createDataFrame(
-        [(9, [4.0, 0.5, -1.0], "b")],
-        "vec_id bigint, embedding array<double>, label string",
-    )
-
-    def concurrent_write():
-        (
-            embedding_gram(late, scale=10**3)
-            .withColumn("ingest_batch", F.lit(99))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(gram)
-        )
-
-    _compact_deltas(
-        spark,
-        gram,
-        merge=_gram_merge,
-        _after_pin=concurrent_write,
-    )
-
-    # the mid-compaction delta partition survives, uncompacted
-    parts = {
-        r[0]
-        for r in spark.read.parquet(gram).select("ingest_batch").distinct().collect()
-    }
-    assert parts == {-1, 99}
-    # and the merged statistic equals the batch gram of EVERYTHING
+    # batch 0 folded; the newest closed-at-listing delta and the
+    # mid-fold delta both survive, unfolded
+    assert _layout(gram) == ([0], [1, 2])
     all_embs = spark.createDataFrame(
-        [(r["vec_id"], r["embedding"], r["label"]) for r in EMBS_A + EMBS_B]
-        + [(9, [4.0, 0.5, -1.0], "b")],
+        [(r["vec_id"], r["embedding"], r["label"]) for r in EMBS_A + EMBS_B + late],
         "vec_id bigint, embedding array<double>, label string",
     )
     expected = embedding_gram(all_embs, scale=10**3)
@@ -527,51 +544,31 @@ def test_compact_gram_survives_concurrent_delta(spark, tmp_path):
         map(tuple, expected.collect())
     )
 
-def test_compaction_skips_uncommitted_batch(spark, tmp_path):
-    """Replay safety (round-7 self-review find): a delta whose
-    foreachBatch write landed but whose checkpoint COMMIT did not will
-    be re-delivered on restart — if compaction had folded and deleted
-    it, the replay would re-create the partition and the store would
-    count it TWICE, permanently. With checkpoint_dir passed,
-    _compact_deltas intersects the pin set with the stream's commit
-    log: the uncommitted delta stays a delta, and the post-replay
-    read-off is exact."""
-    from pyspark.sql import functions as F
 
+def test_compaction_skips_uncommitted_batch(spark, tmp_path):
+    """Replay safety: a delta whose foreachBatch write landed but whose
+    checkpoint commit did not is re-delivered on restart. If compaction
+    had folded and deleted it, the replay would re-create the partition
+    and the store would count it twice. The fold never folds the newest
+    partition — the only one a restart can replay — so the uncommitted
+    delta stays a delta and the post-replay read-off is exact."""
     from kafka_streams_spark.streaming.sketch_stream import (
-        _compact_deltas,
+        compact_key_profile,
         read_key_profile,
     )
+    from kafka_streams_spark.streaming.store import write_batch
 
     prof = str(tmp_path / "profile")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(f"{ckpt}/commits")
 
     def write_delta(batch_id, rows):
-        spark.createDataFrame(rows, "k string, cnt bigint").withColumn(
-            "ingest_batch", F.lit(batch_id)
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("ingest_batch").parquet(prof)
+        write_batch(
+            spark.createDataFrame(rows, "k string, cnt bigint"), prof, batch_id
+        )
 
     write_delta(0, [("a", 3), ("b", 1)])
     write_delta(1, [("a", 2)])  # written, but its commit never landed
-    with open(f"{ckpt}/commits/0", "w") as f:
-        f.write("v1\n{}")
-
-    _compact_deltas(
-        spark,
-        prof,
-        merge=lambda df: df.groupBy("k").agg(
-            F.sum("cnt").cast("bigint").alias("cnt")
-        ),
-        checkpoint_dir=ckpt,
-    )
-    parts = {
-        r[0]
-        for r in spark.read.parquet(prof).select("ingest_batch").distinct().collect()
-    }
-    assert parts == {-1, 1}  # batch 1 NOT folded, NOT deleted
+    compact_key_profile(spark, prof)
+    assert _layout(prof) == ([0], [1])  # batch 1 NOT folded, NOT deleted
 
     # the stream restarts and re-delivers batch 1 (idempotent rewrite)
     write_delta(1, [("a", 2)])
@@ -800,155 +797,260 @@ def test_jaccard_dispatcher_flips_on_streamed_profile_update(spark, tmp_path):
 DOCS_C = [
     {"doc_id": 5, "source": "s", "text": "eta theta theta"},
 ]
+DOCS_D = [
+    {"doc_id": 6, "source": "t", "text": "iota kappa lambda mu"},
+    {"doc_id": 7, "source": "s", "text": "nu xi alpha"},
+]
+DOCS_E = [
+    {"doc_id": 8, "source": "t", "text": "omicron pi rho sigma tau"},
+]
+EMB_BATCHES = [
+    EMBS_A,
+    EMBS_B,
+    [{"vec_id": 4, "embedding": [2.0, -0.75, 1.5], "label": "b"}],
+    [{"vec_id": 5, "embedding": [0.5, 0.5, -2.0], "label": "a"}],
+    [{"vec_id": 6, "embedding": [-1.25, 3.0, 0.0], "label": "b"}],
+]
+SKETCH_K = 4  # small, so the kmv and rank merges truncate to bottom-k
 
 
-def test_compact_crash_recovery_never_double_counts(spark, tmp_path):
-    """r10 review fix: the old fold overwrote -1 and deleted the pinned
-    partitions afterwards — a crash between the two made the next
-    compaction fold the already-folded rows AGAIN (permanent double
-    count). The staged protocol (stage to -2 → manifest → swap) must
-    leave the merged read correct at EVERY crash point except the
-    documented transient windows, and a re-run must converge to the
-    compacted state with no debris."""
-    import shutil
+def _rows(df) -> list[str]:
+    """A DataFrame's rows as a sorted, column-order-free, NULL-safe list."""
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
 
-    from kafka_streams_spark.streaming.sketch_stream import (
-        _cms_merge,
-        _compact_deltas,
-        _FOLD_MANIFEST,
+
+def _sketch_case(spark, kind: str):
+    """One compactable sketch: ``(start(src, store, ckpt), read(store),
+    compact(store), batch(rows), source batches)``, where ``batch`` is
+    the one-shot batch sketch of the source rows."""
+    from pyspark.sql import functions as F
+
+    from kafka_streams_spark.operators.dedup import tokens
+    from kafka_streams_spark.operators.profiling import (
+        distinct_kmv,
+        key_profile,
+        rank_sketch,
+        value_histogram,
     )
+    from kafka_streams_spark.operators.similarity import embedding_gram
+    from kafka_streams_spark.operators.text import cms_token_sketch
+    from kafka_streams_spark.streaming import sketch_stream as ss
 
-    src = str(tmp_path / "src")
-    sketch = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    _write(src, "b1.json", DOCS_A)
-    q = run_cms_stream(spark, src, sketch, ckpt, d=3, w=64)
-    try:
-        q.processAllAvailable()
-        _write(src, "b2.json", DOCS_B)
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    k = SKETCH_K
 
-    def fold(d, crash=None):
-        _compact_deltas(spark, d, merge=_cms_merge, _crash_after=crash)
-
-    # healthy first fold (batches 0,1 -> -1), then one more batch on
-    # the same checkpoint: the crash-injected second fold must merge
-    # the existing -1 with partition 2
-    fold(sketch)
-    q = run_cms_stream(spark, src, sketch, ckpt, d=3, w=64)
-    try:
-        _write(src, "b3.json", DOCS_C)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    want = sorted(map(tuple, read_cms_sketch(spark, sketch).collect()))
-
-    for point in ["stage", "manifest", "unfold", "rename", "first_delete"]:
-        store = str(tmp_path / f"crash_{point}")
-        shutil.copytree(sketch, store)
-        import pytest as _pt
-
-        with _pt.raises(RuntimeError, match="injected crash"):
-            fold(store, crash=point)
-        if point not in ("unfold", "rename"):
-            # reader-visible state stays correct at every crash point
-            # outside the two DOCUMENTED transient windows: "unfold"
-            # (old -1 deleted, stage not yet renamed in — undercount)
-            # and "rename" (stage renamed in, pinned partition not yet
-            # deleted — inflation); both heal on recovery below
-            assert sorted(
-                map(tuple, read_cms_sketch(spark, store).collect())
-            ) == want, point
-        # recovery converges: reads correct, no stage, no manifest,
-        # pinned partition folded exactly once
-        fold(store)
-        assert sorted(
-            map(tuple, read_cms_sketch(spark, store).collect())
-        ) == want, point
-        assert not os.path.exists(f"{store}/ingest_batch=-2"), point
-        assert not os.path.exists(f"{store}/{_FOLD_MANIFEST}"), point
-        parts = sorted(
-            p for p in os.listdir(store) if p.startswith("ingest_batch=")
+    def docs(rows):
+        return spark.createDataFrame(
+            [(r["doc_id"], r["source"], r["text"]) for r in rows],
+            "doc_id bigint, source string, text string",
         )
-        assert parts == ["ingest_batch=-1"], (point, parts)
 
+    def lengths(rows):
+        return docs(rows).select(
+            "doc_id", F.length("text").cast("double").alias("n_chars")
+        )
 
-def test_recover_fold_reclaims_stale_manifest_tmp(spark, tmp_path):
-    """r10 advice fix: when the manifest write crashed between
-    completing ``_fold_pin.json.tmp`` and renaming it, recovery used to
-    finish the swap via the reader's tmp-heal but delete only the
-    (nonexistent) real manifest — the stale tmp survived forever, and a
-    LATER crashed compaction would be 'recovered' against the OLD pin
-    list (deleting a committed -1 or double-folding pinned rows).
-    Recovery must reclaim BOTH paths in every branch."""
-    import shutil
+    def embs(rows):
+        return spark.createDataFrame(
+            [(r["vec_id"], r["embedding"], r["label"]) for r in rows],
+            "vec_id bigint, embedding array<double>, label string",
+        )
 
-    from kafka_streams_spark.streaming.sketch_stream import (
-        _cms_merge,
-        _compact_deltas,
-        _FOLD_MANIFEST,
+    cases = {
+        "cms": (
+            lambda src, st, ck: ss.run_cms_stream(spark, src, st, ck, d=3, w=64),
+            lambda st: ss.read_cms_sketch(spark, st),
+            lambda st: ss.compact_cms(spark, st),
+            lambda rows: cms_token_sketch(docs(rows), d=3, w=64),
+        ),
+        "gram": (
+            lambda src, st, ck: ss.run_gram_stream(spark, src, st, ck),
+            lambda st: ss.read_gram(spark, st),
+            lambda st: ss.compact_gram(spark, st),
+            lambda rows: embedding_gram(embs(rows), scale=10**3),
+        ),
+        "histogram": (
+            lambda src, st, ck: ss.run_histogram_stream(
+                spark, src, st, ck, bin_width_cents=400
+            ),
+            lambda st: ss.read_histogram(spark, st, bin_width_cents=400),
+            lambda st: ss.compact_histogram(spark, st, bin_width_cents=400),
+            lambda rows: value_histogram(
+                lengths(rows), "n_chars", bin_width_cents=400
+            ),
+        ),
+        "kmv": (
+            lambda src, st, ck: ss.run_kmv_stream(spark, src, st, ck, k=k),
+            lambda st: ss.read_kmv(spark, st, k=k),
+            lambda st: ss.compact_kmv(spark, st, k=k),
+            lambda rows: distinct_kmv(
+                docs(rows).select(
+                    "source", F.explode(tokens(F.col("text"))).alias("t")
+                ),
+                "t",
+                ["source"],
+                k=k,
+            ),
+        ),
+        "key_profile": (
+            lambda src, st, ck: ss.run_key_profile_stream(spark, src, st, ck),
+            lambda st: ss.read_key_profile(spark, st),
+            lambda st: ss.compact_key_profile(spark, st),
+            lambda rows: key_profile(docs(rows), "source"),
+        ),
+        "rank": (
+            lambda src, st, ck: ss.run_rank_sketch_stream(spark, src, st, ck, k=k),
+            lambda st: ss.read_rank_sketch(spark, st, k=k),
+            lambda st: ss.compact_rank_sketch(spark, st, k=k),
+            lambda rows: rank_sketch(lengths(rows), "n_chars", "doc_id", k=k),
+        ),
+    }
+    batches = (
+        EMB_BATCHES if kind == "gram" else [DOCS_A, DOCS_B, DOCS_C, DOCS_D, DOCS_E]
     )
+    return (*cases[kind], batches)
 
+
+def _check_fold_at_every_point(spark, tmp_path, monkeypatch, kind: str) -> None:
+    """The merged read of a ``kind`` sketch store equals the one-shot
+    batch sketch of everything ingested before compaction, after it,
+    with a stream batch landing inside the fold, at each crash point of
+    a fold, and after the re-run that finishes a crashed fold — which
+    also compacts a long stream down to its base plus the newest delta.
+
+    A crash point is rebuilt from copies of the store taken before and
+    after a fold (the way tests/test_compaction.py rebuilds the
+    balance store's): the fold writes the new base, deletes the old
+    base, then deletes the folded deltas one by one."""
+    start, read, compact, batch, batches = _sketch_case(spark, kind)
     src = str(tmp_path / "src")
-    sketch = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    _write(src, "b1.json", DOCS_A)
-    q = run_cms_stream(spark, src, sketch, ckpt, d=3, w=64)
-    try:
+    store = str(tmp_path / "store")
+    os.makedirs(src)
+    q = start(src, store, str(tmp_path / "ckpt"))
+    fed: list[dict] = []
+
+    def feed(i: int) -> None:
+        _write(src, f"b{i}.json", batches[i])
+        fed.extend(batches[i])
         q.processAllAvailable()
-        _write(src, "b2.json", DOCS_B)
+
+    def check(where: str, at: str = store) -> None:
+        assert _rows(read(at)) == _rows(batch(fed)), (kind, where)
+
+    try:
+        feed(0)
+        feed(1)
+        check("before compaction")
+        compact(store)
+        assert _layout(store) == ([0], [1])
+        check("after compaction")
+        feed(2)
+        feed(3)
+        before = str(tmp_path / "before_fold")
+        shutil.copytree(store, before)
+        # the stream writes batch 4 after the fold listed batches 1-3
+        _stream_beside_fold(monkeypatch, lambda: feed(4))
+        compact(store)
+        monkeypatch.undo()
+        assert _layout(store) == ([2], [3, 4])
+        check("with a stream batch landing inside the fold")
+    finally:
+        q.stop()
+
+    crash_points = {
+        "after the base commit": ["_base/hwm=0", "ingest_batch=1", "ingest_batch=2"],
+        "after the old-base delete": ["ingest_batch=1", "ingest_batch=2"],
+        "after the first delta delete": ["ingest_batch=2"],
+    }
+    for point, undone in crash_points.items():
+        crashed = str(tmp_path / point.replace(" ", "_"))
+        shutil.copytree(store, crashed)
+        for d in undone:
+            shutil.copytree(f"{before}/{d}", f"{crashed}/{d}")
+        check(point, crashed)
+        # the re-run finishes the cleanup and folds batch 3 as well
+        compact(crashed)
+        assert _layout(crashed) == ([3], [4]), point
+        check(f"re-run {point}", crashed)
+
+
+def test_compact_crash_recovery_never_double_counts(spark, tmp_path, monkeypatch):
+    """A fold that crashed part-way — after its base commit, after the
+    old-base delete or after its first delta delete — leaves the merged
+    CMS read exact, and the re-run converges to one base plus the newest
+    delta without folding any row twice (the other compactable sketches
+    run the same check in test_sketch_fold_exact_at_every_point)."""
+    _check_fold_at_every_point(spark, tmp_path, monkeypatch, "cms")
+
+
+@pytest.mark.parametrize(
+    "kind", ["gram", "histogram", "kmv", "key_profile", "rank"]
+)
+def test_sketch_fold_exact_at_every_point(spark, tmp_path, monkeypatch, kind):
+    """Every compactable sketch folds exactly: see
+    :func:`_check_fold_at_every_point`."""
+    _check_fold_at_every_point(spark, tmp_path, monkeypatch, kind)
+
+
+@pytest.mark.parametrize("kind", ["cms", "kmv"])
+def test_reserved_partition_store_keeps_reading(spark, tmp_path, kind):
+    """A store compacted by the earlier reserved-partition fold holds
+    its folded state in an ``ingest_batch=-1`` partition. Its merged
+    read is the same before and after the first fold (which folds the
+    ``-1`` partition into the base and deletes it), and after a further
+    stream batch and fold. CMS covers a sum merge, KMV a bottom-k
+    merge."""
+    from pyspark.sql import functions as F
+
+    from kafka_streams_spark.streaming import sketch_stream as ss
+    from kafka_streams_spark.streaming.store import write_batch
+
+    start, read, compact, batch, batches = _sketch_case(spark, kind)
+    merge = (
+        ss._cms_merge if kind == "cms" else lambda df: ss._kmv_merge(df, SKETCH_K)
+    )
+    src = str(tmp_path / "src")
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+    q = start(src, store, ckpt)
+    try:
+        for i in (0, 1):
+            _write(src, f"b{i}.json", batches[i])
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    # the earlier compactor's layout: committed batch 0 folded into -1
+    folded = merge(spark.read.parquet(store).filter(F.col("ingest_batch") == 0))
+    write_batch(spark.createDataFrame(folded.collect(), folded.schema), store, -1)
+    shutil.rmtree(f"{store}/ingest_batch=0")
+    assert _layout(store) == ([], [-1, 1])
+    want = _rows(batch(batches[0] + batches[1]))
+    assert _rows(read(store)) == want
+
+    compact(store)
+    assert _layout(store) == ([-1], [1])  # the -1 partition is folded away
+    assert _rows(read(store)) == want
+
+    q = start(src, store, ckpt)
+    try:
+        _write(src, "b2.json", batches[2])
         q.processAllAvailable()
     finally:
         q.stop()
-    want = sorted(map(tuple, read_cms_sketch(spark, sketch).collect()))
-
-    def fold(d, crash=None):
-        _compact_deltas(spark, d, merge=_cms_merge, _crash_after=crash)
-
-    # crash right after the manifest landed, then simulate the WRITE
-    # crash window: tmp complete, rename never happened
-    store = str(tmp_path / "tmp_heal")
-    shutil.copytree(sketch, store)
-    import pytest as _pt
-
-    with _pt.raises(RuntimeError, match="injected crash"):
-        fold(store, crash="manifest")
-    manifest = f"{store}/{_FOLD_MANIFEST}"
-    os.rename(manifest, manifest + ".tmp")
-    fold(store)
-    assert sorted(map(tuple, read_cms_sketch(spark, store).collect())) == want
-    assert not os.path.exists(manifest)
-    assert not os.path.exists(manifest + ".tmp")
-    assert not os.path.exists(f"{store}/ingest_batch=-2")
-
-    # debris branch: stage present, no manifest, UNPARSABLE tmp from a
-    # crash mid-create — recovery must reclaim the tmp too, not leave
-    # it to shadow a future manifest read
-    store2 = str(tmp_path / "debris")
-    shutil.copytree(sketch, store2)
-    with _pt.raises(RuntimeError, match="injected crash"):
-        fold(store2, crash="stage")
-    with open(f"{store2}/{_FOLD_MANIFEST}.tmp", "w") as f:
-        f.write('{"pinned": [0,')  # partial write
-    fold(store2)
-    assert sorted(map(tuple, read_cms_sketch(spark, store2).collect())) == want
-    assert not os.path.exists(f"{store2}/{_FOLD_MANIFEST}.tmp")
+    compact(store)
+    assert _layout(store) == ([1], [2])
+    assert _rows(read(store)) == _rows(batch(batches[0] + batches[1] + batches[2]))
 
 
 def test_cms_stream_fresh_checkpoint_epoch_offset(spark, tmp_path):
-    """r10 review fix: a fresh checkpoint restarts batch ids at 0, and
+    """A fresh checkpoint restarts batch ids at 0, and
     the old writer dynamically OVERWROTE the prior generation's
     partition 0 — losing its counts. With the persisted epoch offset
     the new generation appends above everything on disk: re-delivered
     files re-count (documented at-least-once, the payment-changelog
     trade) but nothing is ever replaced."""
     from kafka_streams_spark.operators.text import cms_token_sketch
-    from kafka_streams_spark.streaming.sketch_stream import (
-        _cms_merge,
-        _compact_deltas,
-    )
+    from kafka_streams_spark.streaming.sketch_stream import compact_cms
 
     src = str(tmp_path / "src")
     sketch = str(tmp_path / "sketch")
@@ -989,19 +1091,10 @@ def test_cms_stream_fresh_checkpoint_epoch_offset(spark, tmp_path):
         map(tuple, read_cms_sketch(spark, sketch).collect())
     ) == expected
 
-    # compaction with the CURRENT checkpoint folds the abandoned
-    # generation's partitions (below this generation's offset) AND this
-    # generation's committed batch — ids translated through the epochs
-    _compact_deltas(
-        spark,
-        sketch,
-        merge=_cms_merge,
-        checkpoint_dir=str(tmp_path / "ckptB"),
-    )
-    parts = sorted(
-        p for p in os.listdir(sketch) if p.startswith("ingest_batch=")
-    )
-    assert parts == ["ingest_batch=-1"]
+    # compaction folds both generations' closed partitions and keeps the
+    # newest, whichever generation wrote it
+    compact_cms(spark, sketch)
+    assert _layout(sketch) == ([1], [2])
     assert sorted(
         map(tuple, read_cms_sketch(spark, sketch).collect())
     ) == expected
@@ -1047,13 +1140,11 @@ def test_corpus_ingest_fresh_checkpoint_epoch_offset(spark, tmp_path):
 
 
 def test_cms_empty_store_reads_and_compact_cms(spark, tmp_path):
-    """r10 review fixes: (1) a stamped-but-empty store (sidecars land
+    """(1) A stamped-but-empty store (sidecars land
     before the first delta) raises a clear FileNotFoundError from the
     readers and NO-OPS in compaction, instead of Spark's
     UNABLE_TO_INFER_SCHEMA; (2) the CMS store has a public compactor
     with the same stamp gate as its siblings."""
-    import pytest as _pt
-
     from kafka_streams_spark.streaming.sketch_stream import compact_cms
     from kafka_streams_spark.streaming.store import _stamp_sketch_store
 
@@ -1067,7 +1158,7 @@ def test_cms_empty_store_reads_and_compact_cms(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    with _pt.raises(FileNotFoundError, match="no deltas"):
+    with pytest.raises(FileNotFoundError, match="no deltas"):
         read_cms_sketch(spark, sketch)
     compact_cms(spark, sketch)  # no-op, not a crash
 
@@ -1081,61 +1172,14 @@ def test_cms_empty_store_reads_and_compact_cms(spark, tmp_path):
     finally:
         q.stop()
     want = sorted(map(tuple, read_cms_sketch(spark, sketch).collect()))
-    compact_cms(spark, sketch, checkpoint_dir=ckpt)
+    compact_cms(spark, sketch)
     assert sorted(
         map(tuple, read_cms_sketch(spark, sketch).collect())
     ) == want
-    parts = sorted(
-        p for p in os.listdir(sketch) if p.startswith("ingest_batch=")
-    )
-    assert parts == ["ingest_batch=-1"]
+    assert _layout(sketch) == ([0], [1])
 
     # the stamp gate holds: a non-CMS store refuses the CMS compactor
     other = str(tmp_path / "other")
     _stamp_sketch_store(spark, other, {"kind": "gram", "scale": 1000})
-    with _pt.raises(ValueError, match="mismatched parameters"):
+    with pytest.raises(ValueError, match="mismatched parameters"):
         compact_cms(spark, other)
-
-
-def test_compaction_commit_log_retention_floor(spark, tmp_path):
-    """r10 review fix: Spark purges old commit-log entries
-    (minBatchesToRetain), so 'not listed' does not mean 'not
-    committed' — the log is sequential, so ids below the oldest
-    retained commit must have committed. Without the floor, a
-    long-lived stream's older partitions fell out of the retention
-    window and could never fold."""
-    from kafka_streams_spark.streaming.sketch_stream import (
-        _committed_batch_ids,
-        compact_cms,
-    )
-
-    src = str(tmp_path / "src")
-    sketch = str(tmp_path / "sketch")
-    ckpt = str(tmp_path / "ckpt")
-    old = spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    try:
-        _write(src, "b1.json", DOCS_A)
-        q = run_cms_stream(spark, src, sketch, ckpt, d=3, w=64)
-        try:
-            q.processAllAvailable()
-            _write(src, "b2.json", DOCS_B)
-            q.processAllAvailable()
-            _write(src, "b3.json", DOCS_C)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", old)
-    committed = _committed_batch_ids(spark, ckpt)
-    assert len(committed) < 3  # the purge actually happened
-    want = sorted(map(tuple, read_cms_sketch(spark, sketch).collect()))
-    compact_cms(spark, sketch, checkpoint_dir=ckpt)
-    # every partition folded — including the ones purged from the log
-    parts = sorted(
-        p for p in os.listdir(sketch) if p.startswith("ingest_batch=")
-    )
-    assert parts == ["ingest_batch=-1"]
-    assert sorted(
-        map(tuple, read_cms_sketch(spark, sketch).collect())
-    ) == want

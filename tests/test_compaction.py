@@ -158,10 +158,8 @@ def test_pre_bucket_delta_layout_migrates_once(spark, tmp_path):
     rewrite, stay flat as the stream appends on top, and compact."""
     from pyspark.sql import functions as F
 
-    from kafka_streams_spark.streaming.router import (
-        N_BALANCE_BUCKETS,
-        _migrate_delta_layout,
-    )
+    from kafka_streams_spark.operators.payments import N_BALANCE_BUCKETS
+    from kafka_streams_spark.streaming.router import _migrate_delta_layout
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -224,7 +222,7 @@ def _write_nested(df, part: str) -> None:
     a bucket data column."""
     from pyspark.sql import functions as F
 
-    from kafka_streams_spark.streaming.router import N_BALANCE_BUCKETS
+    from kafka_streams_spark.operators.payments import N_BALANCE_BUCKETS
 
     (
         df.withColumn(
@@ -400,6 +398,57 @@ def test_balances_snapshot_debris_swept(spark, tmp_path):
     assert {
         r["fromAccount"]: r["balance"] for r in view.balances().collect()
     } == before
+
+
+def test_balance_base_holds_account_and_balance(spark, tmp_path):
+    """A new base snapshot holds exactly ``(fromAccount, balance)``. A
+    base written while it also kept a derived ``bucket`` column reads
+    the same balances, and folds on into a two-column base."""
+    from pyspark.sql import functions as F
+
+    from kafka_streams_spark.operators.payments import balance_bucket
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    write_events(src, "b1.json", GOLDEN)
+    q = run_payment_stream(spark, src, out, ckpt)
+    try:
+        q.processAllAvailable()
+        write_events(src, "b2.json", [_payment("p6", 40, "ABC")])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert compact_balances(spark, out) == 0
+    base = os.path.join(out, "balance_base", "hwm=0")
+    assert spark.read.parquet(base).columns == ["fromAccount", "balance"]
+
+    view = BalanceView(spark, out)
+    before = {r["fromAccount"]: r["balance"] for r in view.balances().collect()}
+    assert before == {"ABC": 250, "XYZ": 800}
+
+    # the same base as an earlier compactor wrote it, with its bucket
+    rows = spark.read.parquet(base).collect()
+    spark.createDataFrame(rows, "fromAccount string, balance bigint").withColumn(
+        "bucket", balance_bucket(F.col("fromAccount"))
+    ).write.mode("overwrite").parquet(base)
+    assert "bucket" in spark.read.parquet(base).columns
+    assert {
+        r["fromAccount"]: r["balance"] for r in view.balances().collect()
+    } == before
+    assert view.get_balance("ABC") == 250
+
+    q = run_payment_stream(spark, src, out, ckpt)
+    try:
+        write_events(src, "b3.json", [_payment("p7", 5, "XYZ")])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert compact_balances(spark, out) == 1
+    base = os.path.join(out, "balance_base", "hwm=1")
+    assert spark.read.parquet(base).columns == ["fromAccount", "balance"]
+    assert view.get_balance("ABC") == 250
+    assert view.get_balance("XYZ") == 805
 
 
 def test_payment_stream_fresh_checkpoint_epoch(spark, tmp_path):

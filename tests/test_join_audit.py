@@ -95,7 +95,7 @@ def test_live_profile_prices_stream_static_join(spark, tmp_path):
     """The streamed per-key profile feeds join_size_from_profiles: the
     live pricing of a stream-static join equals join_size_audit over
     everything ingested, across two micro-batch waves and after
-    snapshot-pin compaction."""
+    compaction."""
     import json
     import os
 
@@ -157,7 +157,8 @@ def test_live_profile_prices_stream_static_join(spark, tmp_path):
         r[0]
         for r in spark.read.parquet(prof).select("ingest_batch").distinct().collect()
     }
-    assert parts == {-1}
+    assert parts == {1}  # the newest delta; batch 0 is in the base
+    assert os.listdir(f"{prof}/_base") == ["hwm=0"]
 
 
 def _route_of(spark, a_rows, b_rows, **kw):

@@ -212,8 +212,8 @@ def test_kmv_state_merge_equals_state_of_union(spark):
 def test_kmv_stream_equals_batch_exactly(spark, tmp_path):
     """The streamed per-source distinct-token sketch equals the batch
     distinct_kmv of everything ingested, BIT-FOR-BIT, across two
-    micro-batch waves; compaction folds partials into -1 without
-    changing the read-off."""
+    micro-batch waves; compaction folds the closed partials into the
+    base without changing the read-off."""
     import json
     import os
 
@@ -270,7 +270,8 @@ def test_kmv_stream_equals_batch_exactly(spark, tmp_path):
         r[0]
         for r in spark.read.parquet(sk).select("ingest_batch").distinct().collect()
     }
-    assert parts == {-1}
+    assert parts == {1}  # the newest delta; batch 0 is in the base
+    assert os.listdir(f"{sk}/_base") == ["hwm=0"]
 
 def test_sketch_store_k_gate(spark, tmp_path):
     """A KMV store stamped with k=8 must refuse a read or compaction

@@ -120,12 +120,13 @@ def test_stream_equals_batch_sketch_exactly(spark, tmp_path):
     )
     assert _rows(read_rank_sketch(spark, sk, k=K)) == _rows(batch)
 
-    # compaction folds partials into -1 without changing the merge, and
-    # later deltas keep accumulating
+    # compaction folds the closed partials into the base without
+    # changing the merge
     compact_rank_sketch(spark, sk, k=K)
     assert _rows(read_rank_sketch(spark, sk, k=K)) == _rows(batch)
     parts = {r[0] for r in spark.read.parquet(sk).select("ingest_batch").distinct().collect()}
-    assert parts == {-1}
+    assert parts == {1}  # the newest delta; batch 0 is in the base
+    assert os.listdir(f"{sk}/_base") == ["hwm=0"]
 
 def test_grouped_sketch_matches_reference_model(spark):
     """Stratified form: per-group bottom-k + per-group exact count,

@@ -191,6 +191,79 @@ def test_timed_run_protocol_has_one_owner():
     assert in_owner >= 1, "no protocol site found in tools/timing.py"
 
 
+# what only the store's fold may name: the reserved negative partitions
+# and pin manifest of a second fold, or the stream's checkpoint commit
+# log that such a fold pinned to
+FOLD_STRINGS = ("ingest_batch=-", "_fold_pin", "/commits")
+
+
+def _calls(fn: ast.AST) -> set[str]:
+    """Names called in ``fn``: ``f(...)`` and ``m.f(...)`` both give f."""
+    out = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Call):
+            f = node.func
+            if isinstance(f, ast.Name):
+                out.add(f.id)
+            elif isinstance(f, ast.Attribute):
+                out.add(f.attr)
+    return out
+
+
+def _unfolded_compactors(tree: ast.Module) -> list[tuple[int, str]]:
+    """Public ``compact_*`` functions that reach ``fold_into_base``
+    neither directly nor through one module-level helper that calls it."""
+    top = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    folds = {"fold_into_base"} | {
+        name for name, fn in top.items() if "fold_into_base" in _calls(fn)
+    }
+    return [
+        (fn.lineno, f"{name} does not call fold_into_base")
+        for name, fn in top.items()
+        if name.startswith("compact_") and not _calls(fn) & folds
+    ]
+
+
+def _fold_state_strings(tree: ast.AST) -> list[tuple[int, str]]:
+    """Non-docstring strings that name a second fold's on-disk state."""
+    docs = _docstrings(tree)
+    sites = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+        ):
+            sites += [(node.lineno, repr(s)) for s in FOLD_STRINGS if s in node.value]
+    return sites
+
+
+def test_compaction_folds_through_store():
+    """Changelog compaction has one owner, ``store.fold_into_base``: every
+    public ``compact_*`` in ``streaming/`` folds through it, directly or
+    through one module-level helper, and no code outside
+    ``streaming/store.py`` names a second fold's state — a reserved
+    ``ingest_batch=-N`` partition, a ``_fold_pin`` manifest or the
+    stream's checkpoint ``commits`` log."""
+    bad, compactors = [], 0
+    for f, tree in _parsed():
+        if f == STORE:
+            continue
+        sites = _fold_state_strings(tree)
+        if f.parent.name == "streaming":
+            compactors += sum(
+                isinstance(n, ast.FunctionDef) and n.name.startswith("compact_")
+                for n in tree.body
+            )
+            sites += _unfolded_compactors(tree)
+        bad += [f"{f.relative_to(ROOT)}:{ln}: {what}" for ln, what in sites]
+    assert not bad, (
+        "compaction outside store.fold_into_base:\n" + "\n".join(bad)
+    )
+    # the lint must see the compactors it guards, or it has rotted
+    assert compactors >= 8, f"only {compactors} compact_* found in streaming/"
+
+
 RANK_FNS = {"row_number", "rank", "dense_rank"}
 BIGINT = {"bigint", "long"}
 

@@ -15,19 +15,16 @@ fail the gate):
   2 — no hard regressions, but unwaived suspects exist (noise-window /
       low-sample / start-band / end-band / anchor-mismatch flags).
       Suspects are not amnesty: they are unadjudicated measurements
-      that need an interleaved tools/ab_bench.py run (r12 ADVICE: a
-      plain exit 0 made the A/B optional, so a genuine regression
-      sitting inside a detected noise window could pass the gate with
-      only a printed note).
+      that need an interleaved tools/ab_bench.py run. An exit 0 would
+      make the A/B optional, and a real regression inside a noise
+      window could pass with only a printed note (ROUND13_NOTES.md).
 
-Host-drift normalization (r8 verdict item 1): when BOTH records carry
-``calibration_sec`` (bench.py's pinned pure-JVM anchor — no parquet, no
-Python, no engine code), every per-query ratio is divided by the
-calibration ratio and the gate fires on the NORMALIZED value. The
-r7→r8 record drifted a uniform 1.32× on untouched pure-JVM queries —
-host throttle, adjudicated by an independent idle-host re-run; with the
-anchor that separation is one division instead of a re-litigation.
-Records without the anchor (pre-r9) diff on raw ratios as before.
+Host-drift normalization: when BOTH records carry ``calibration_sec``
+(bench.py's pinned pure-JVM anchor — no parquet, no Python, no engine
+code), every per-query ratio is divided by the calibration ratio and
+the gate fires on the NORMALIZED value, so a uniform host throttle is
+one division, not a regression (ROUND9_NOTES.md). Records without the
+anchor diff on raw ratios.
 """
 
 from __future__ import annotations
@@ -84,9 +81,9 @@ def load(path: str) -> dict:
 
 
 def cal_of(rec):
-    """Geometric mean of the start/end anchors (r9: in-run throttle
-    makes a start-only anchor under-report; the pair brackets the
-    run). Falls back to the start anchor for pre-end records."""
+    """Geometric mean of the start/end anchors: in-run throttle makes
+    a start-only anchor under-report, and the pair brackets the run.
+    Falls back to the start anchor for records without an end."""
     start, end = rec.get("calibration_sec"), rec.get("calibration_end_sec")
     if start and end:
         return (start * end) ** 0.5
@@ -95,10 +92,10 @@ def cal_of(rec):
 
 def anchors_of(rec):
     """[(position, sec), ...] drift profile for a record: the start
-    anchor at position 0, any mid-run ``calibration_probes`` (r12:
-    re-timed every ~25 positions) at their recorded positions, and
-    the end anchor after the last query. Pre-r12 records have just
-    the bracket pair; pre-r9 records just the start."""
+    anchor at position 0, any mid-run ``calibration_probes`` (re-timed
+    every ~25 positions) at their recorded positions, and the end
+    anchor after the last query. Older records have just the bracket
+    pair, or just the start."""
     order = rec.get("order") or []
     start, end = rec.get("calibration_sec"), rec.get("calibration_end_sec")
     pts = []
@@ -115,12 +112,11 @@ def cal_at(rec, name):
     """Per-query anchor: piecewise-linear interpolation over the
     record's anchor profile at the query's position in the timed
     order — in-run throttle and transient host-noise windows are
-    position-correlated (one r9 run measured thirds at
-    0.87x/1.03x/1.34x of a sibling run; the r11 driver record had a
-    contiguous position-115-135 block inflated 2-4x that the
-    start/end bracket could not see), so each query normalizes
-    against the anchors that bracket ITS position. Falls back to
-    the record-level anchor when order/anchors are absent."""
+    position-correlated, and a start/end bracket cannot see a block
+    inflated mid-run (ROUND9_NOTES.md, ROUND12_NOTES.md), so each
+    query normalizes against the anchors that bracket ITS position.
+    Falls back to the record-level anchor when order/anchors are
+    absent."""
     order = rec.get("order")
     pts = anchors_of(rec)
     if len(pts) >= 2 and order and name in order:
@@ -156,9 +152,9 @@ def main() -> int:
         "verdict (repeatable; comma lists accepted). Unlike "
         "--allow-suspects this cannot silently waive a flag that was "
         "never A/B'd: any suspect NOT on the list still exits 2 "
-        "(r13 ADVICE — the blanket flag, re-run after adjudicating one "
-        "round's suspects, also waived any new suspect on the second "
-        "pass)",
+        "(the blanket flag, re-run after adjudicating one set of "
+        "suspects, also waives any new suspect on the second pass; "
+        "ROUND14_NOTES.md)",
     )
     args = ap.parse_args()
 
@@ -207,10 +203,8 @@ def main() -> int:
             gate = ratio
         rows[name] = (ratio, gate)
 
-    # Noise-window detection (r11 verdict item 2): a transient host
-    # slowdown inflates a CONTIGUOUS block of run positions uniformly —
-    # 11 of the r11 record's 12 >2x flags sat in positions 115-135
-    # while the per-bucket median ratio was 0.85-1.07 everywhere else.
+    # Noise-window detection: a transient host slowdown inflates a
+    # CONTIGUOUS block of run positions uniformly (ROUND12_NOTES.md).
     # If a position bucket's median normalized ratio is well above the
     # suite's overall median, the block is environment, not code: its
     # flags are downgraded to window-suspects (adjudicate any that
@@ -238,14 +232,11 @@ def main() -> int:
             wm = median(gates)
             if len(gates) >= 5 and wm is not None and wm > max(1.25, overall * 1.25):
                 hot.update(range(lo, min(lo + WIN, n)))
-        # Micro-window pass (r13): the r13 end-of-round diff had a
-        # 3-query spike at consecutive positions 104-106 (raw
-        # 2.3x/5.1x/6.1x) — far too narrow for the 20-position median
-        # above, so all three hard-failed and needed manual A/Bs (all
-        # three came back code-neutral, 0.98-1.11). The timed order is
-        # a SEEDED RANDOM PERMUTATION, so adjacent positions share no
-        # code path — >=3 contiguous flagged positions whose local
-        # median is well above the suite (>max(1.75, 1.5x suite
+        # Micro-window pass: a spike a few positions wide is too narrow
+        # for the 20-position median above (ROUND13_NOTES.md). The timed
+        # order is a SEEDED RANDOM PERMUTATION, so adjacent positions
+        # share no code path — >=3 contiguous flagged positions whose
+        # local median is well above the suite (>max(1.75, 1.5x suite
         # median)) is near-certain host spike, not three independent
         # same-instant regressions. Downgraded flags remain suspects
         # (exit 2, A/B forced), never silent passes — so the looser
@@ -288,7 +279,7 @@ def main() -> int:
             print(f"{name:34s} {oq[name]:8.3f} {'-':>8s} removed")
             continue
         ratio, gate = rows[name]
-        # Sample-count weighting (r10 verdict item 2): min-of-N only
+        # Sample-count weighting (ROUND11_NOTES.md): min-of-N only
         # rejects scheduler noise with enough N. A flagged ratio where
         # EITHER side recorded < 3 samples is statistically weak — one
         # slow sample pollutes a min-of-2 record — so it must clear a
@@ -297,30 +288,24 @@ def main() -> int:
         n_min = min(osamp.get(name, 2), nsamp.get(name, 2))
         hard_threshold = args.threshold if n_min >= 3 else args.threshold * 1.25
         in_window = name in norder and norder.index(name) in window_positions
-        # Start-band uncertainty (r12 verdict item 3): positions before
-        # the first mid-run probe used to be normalized by the single
-        # position-0 anchor, and the only hard drift flag in BOTH the
-        # r11 and r12 driver records sat there (pos 0 / pos 1) — a
-        # recurring cold-start artifact class, not code. A flag in the
-        # first few positions of EITHER record is therefore downgraded
-        # to a suspect (adjudicate with tools/ab_bench.py, which is
-        # position-free by construction).
+        # Start-band uncertainty: the first positions are a recurring
+        # cold-start artifact class, not code (ROUND13_NOTES.md). A flag
+        # in the first few positions of EITHER record is therefore
+        # downgraded to a suspect (adjudicate with tools/ab_bench.py,
+        # which is position-free by construction).
         START_BAND = 5
         in_start = any(
             name in (rec.get("order") or [])[:START_BAND] for rec in (old, new)
         )
-        # End-band uncertainty (r13 verdict item 3, symmetric to the
-        # start band): positions after a record's LAST mid-run probe
-        # are normalized against an interpolation whose right endpoint
-        # is the single end anchor — and the r13 driver record's end
-        # anchor read 1.813 s vs probe-150's 0.699 s (2.1x drift
-        # developing after the last probe), so every late-list flag in
-        # that record rode one extrapolated point. A flag whose
-        # position in EITHER record falls after that record's last
-        # probe is downgraded to a suspect (adjudicate with
-        # tools/ab_bench.py, position-free by construction). Only
-        # applies to records that carry probes at all — without them
-        # there is no "last probe" and the whole run would qualify.
+        # End-band uncertainty (symmetric to the start band): positions
+        # after a record's LAST mid-run probe are normalized against
+        # the single end anchor, so drift developing after that probe
+        # rides one point (ROUND14_NOTES.md). A flag whose position in
+        # EITHER record falls after that record's last probe is
+        # downgraded to a suspect (adjudicate with tools/ab_bench.py,
+        # position-free by construction). Only applies to records that
+        # carry probes at all — without them there is no "last probe"
+        # and the whole run would qualify.
         def _in_end_band(rec):
             probes = rec.get("calibration_probes") or []
             order = rec.get("order") or []
@@ -339,21 +324,18 @@ def main() -> int:
         elif gate > args.threshold and in_end:
             suspect.append((name, oq[name], nq[name], gate))
             flag = "  << suspect (end band, past last probe)"
-        # Anchor-mismatch downgrade (r13 verdict item 2): a normalized
-        # flag whose RAW ratio is ~1.0 means the query held still while
-        # the anchor moved — the pure-JVM anchor recovers from (or
-        # succumbs to) host throttle faster than Arrow/Python-bound
-        # queries, so a cross-host or drifting-host pair yields
-        # norm-only flags in bulk (r12→r13 driver records: 12 of 14
-        # flags carried raw 1.0-1.35x while the old record drifted
-        # in-run DOWN 0.78x and the new UP 2.11x). The repo's triage
-        # rule ("norm flag with raw ~1.0 = anchor mismatch; A/B only
-        # big raw movers") is machine-applied here: still exit 2, still
-        # A/B-forced — no amnesty, just not 12 hard fails. Base raw
-        # cutoff 1.2x; when the tool ITSELF detected >1.15x in-run
-        # anchor drift in either record (the precondition for the
-        # mismatch mechanism), the cutoff widens to the observed 1.35x
-        # envelope of the r12→r13 artifact class.
+        # Anchor-mismatch downgrade: a normalized flag whose RAW ratio
+        # is ~1.0 means the query held still while the anchor moved —
+        # the pure-JVM anchor recovers from (or succumbs to) host
+        # throttle faster than Arrow/Python-bound queries, so a
+        # drifting-host pair yields norm-only flags in bulk
+        # (ROUND14_NOTES.md). The triage rule ("norm flag with raw ~1.0
+        # = anchor mismatch; A/B only big raw movers") is applied here:
+        # still exit 2, still A/B-forced — no amnesty, just no bulk
+        # hard fails. Base raw cutoff 1.2x; when the tool ITSELF
+        # detected >1.15x in-run anchor drift in either record (the
+        # precondition for the mismatch mechanism), the cutoff widens
+        # to the observed 1.35x envelope.
         elif gate > args.threshold and ratio < (1.35 if inrun_drift else 1.2):
             suspect.append((name, oq[name], nq[name], gate))
             flag = f"  << suspect (anchor-mismatch, raw {ratio:.2f}x)"
